@@ -13,7 +13,8 @@ constants.py) — but the Spark plumbing is the real thing:
   broadcast config, exactly how real weights would be shipped
   (reference analog: per-worker engine zip cache, run_client.py:44-67);
 - row-level failures are caught into an ``error`` column, never thrown
-  (run_client.py:150-202 error taxonomy), and counted via accumulators.
+  (run_client.py:150-202 error taxonomy); the pipeline counts them
+  with ``DataFrame.observe`` on this stage's output.
 
 Output of one media span with L surviving lines is L rows
 (doc_id, offset, line_idx, text, conf, error=NULL); a failed span is
@@ -195,22 +196,18 @@ def _get_engine(config: dict) -> _StubEngine:
     return _ENGINE
 
 
-def make_infer_fn(broadcast_config, acc_pages=None, acc_lines=None, acc_failures=None):
+def make_infer_fn(broadcast_config):
     """Build the mapInPandas function.  ``broadcast_config`` is a
-    ``Broadcast[dict]`` (engine id/version/thresholds); accumulators are
-    optional pipeline metrics (SURVEY §2.4 A9)."""
+    ``Broadcast[dict]`` (engine id/version/thresholds)."""
 
     def infer(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         engine = _get_engine(broadcast_config.value)
         for pdf in batches:
-            n = len(pdf)
-            if n == 0:
+            if len(pdf) == 0:
                 continue
             results = engine.infer_batch(pdf["media_ref"])
             out_doc, out_off, out_ref, out_idx, out_text, out_conf, out_err = (
                 [], [], [], [], [], [], [])
-            n_lines = 0
-            n_failures = 0
             for (doc_id, offset, ref), (err, lines) in zip(
                 zip(pdf["doc_id"], pdf["offset"], pdf["media_ref"]), results
             ):
@@ -219,22 +216,12 @@ def make_infer_fn(broadcast_config, acc_pages=None, acc_lines=None, acc_failures
                     out_ref.append(ref); out_idx.append(0)
                     out_text.append(None); out_conf.append(None)
                     out_err.append(err)
-                    n_failures += 1
                     continue
                 for (idx, text, conf) in lines:
                     out_doc.append(doc_id); out_off.append(offset)
                     out_ref.append(ref); out_idx.append(idx)
                     out_text.append(text); out_conf.append(conf)
                     out_err.append(None)
-                    n_lines += 1
-            if acc_pages is not None:
-                # decoded = attempted minus failed (north_star names the
-                # metric "pages decoded"; failures have their own counter)
-                acc_pages.add(n - n_failures)
-            if acc_lines is not None:
-                acc_lines.add(n_lines)
-            if acc_failures is not None:
-                acc_failures.add(n_failures)
             yield pd.DataFrame(
                 {
                     "doc_id": pd.Series(out_doc, dtype="object"),

@@ -132,10 +132,14 @@ def normalize_transcriptions(df: DataFrame, text_col: str = "text") -> DataFrame
     return df.withColumn(text_col, fix_arabic(F.col(text_col)))
 
 
+def confident(conf: Column, threshold: float = MIN_CONFIDENCE) -> Column:
+    """The strip's keep-predicate (every line passes at threshold <= 0)."""
+    if threshold <= 0:
+        return F.lit(True)
+    return conf.isNotNull() & (conf > F.lit(threshold))
+
+
 def filter_confident_lines(
     df: DataFrame, conf_col: str = "conf", threshold: float = MIN_CONFIDENCE
 ) -> DataFrame:
-    if threshold <= 0:
-        return df
-    c = F.col(conf_col)
-    return df.filter(c.isNotNull() & (c > F.lit(threshold)))
+    return df.filter(confident(F.col(conf_col), threshold))

@@ -10,18 +10,27 @@ download-skip /root/reference/user_scripts/retrieve_ocr_results.py:62-64).
 Mechanics:
 - documents are hash-bucketed into ``n_groups`` partition-groups
   (pmod(xxhash64(doc_id), n_groups)) — the commit granularity;
-- each group's results land under ``spans/group=G/`` + ``docs/group=G/``
-  (dynamic overwrite per group = idempotent re-run);
+- the grouped input is frozen once under ``_staged/``; the staging
+  write also observes the source fingerprint, which ``_meta.json``
+  records next to the ``n_groups`` pin (recording it commits the
+  staging);
+- each group's per-document results (``pipeline.extract``: doc_id,
+  score, status, spans[]) land under ``results/group=G/`` in ONE write
+  action (dynamic overwrite per group = idempotent re-run); the doc and
+  span counts and the inference metrics are ``DataFrame.observe``
+  metrics of that same write;
 - a group becomes VISIBLE only when its manifest file
   ``_manifest/group-G.json`` is atomically renamed into place with its
   lineage row (doc/span counts, wall_ms, metrics) — write-then-rename
   gives the atomic results+lineage commit of an Iceberg snapshot;
 - resume = skip committed groups (the left-anti of work vs manifest);
   a killed job re-runs only the uncommitted remainder and the final
-  table is byte-identical to an uninterrupted run (tests prove it).
+  table is identical to an uninterrupted run (tests prove it);
+- ``read_spans`` / ``read_docs`` are an explode and a projection of the
+  committed results.
 
 On a real cluster the same code commits to an Iceberg catalog
-(writeTo(...).append() inside a snapshot) — only _commit_group changes.
+(plans/iceberg_backend.py) — only _write_group / _read_committed change.
 """
 
 from __future__ import annotations
@@ -32,31 +41,37 @@ import shutil
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from .pipeline import extract
+from .pipeline import extract, result_docs, result_spans
 
 
 class SimulatedFailure(RuntimeError):
     """Raised by run(fail_after=...) to model a mid-job crash in tests."""
 
 
-def _fingerprint(documents: DataFrame, cols: list[str] | None = None) -> tuple[int, int]:
+def _fingerprint_exprs(cols: list[str]) -> list[Column]:
     """(row count, order-insensitive xor of per-row hashes) — identity
     check between a live source and the frozen snapshot.  The hash
     covers EVERY column (xxhash64 handles arrays/structs), not just
     doc_id: a source whose *content* changed under identical doc_ids
     must be refused too, or resume would silently process the stale
     snapshot.  bit_xor rather than sum: commutative AND overflow-free
-    under ANSI."""
-    cols = cols if cols is not None else documents.columns
+    under ANSI.  xxhash64 is order-sensitive, so both sides hash the
+    caller's column list in the caller's order."""
     col_list = ", ".join(f"`{c}`" for c in cols)
-    row = documents.agg(
+    return [
         F.count("*").alias("n"),
         F.expr(f"bit_xor(xxhash64({col_list}))").alias("h"),
-    ).first()
-    return (row["n"], row["h"])
+    ]
+
+
+def _write_json_atomic(path: str, obj: dict) -> None:
+    tmp = path + f".tmp-{uuid.uuid4().hex}"
+    with open(tmp, "w") as f:
+        json.dump(obj, f)
+    os.replace(tmp, path)
 
 
 class CheckpointedExtractor:
@@ -66,63 +81,39 @@ class CheckpointedExtractor:
         self.salt_partitions = salt_partitions
         self.manifest_dir = os.path.join(output_dir, "_manifest")
         os.makedirs(self.manifest_dir, exist_ok=True)
+        if any(os.path.isdir(os.path.join(output_dir, d)) for d in ("spans", "docs")):
+            raise ValueError(
+                f"checkpoint at {output_dir} is in the old spans/ + docs/ "
+                "layout; start a fresh output_dir"
+            )
         # n_groups is part of the on-disk layout (hash-bucket width):
         # resuming with a different value would silently skip or
         # empty-commit groups, so the first run pins it and every later
         # construction must match.
-        meta_path = os.path.join(self.manifest_dir, "_meta.json")
-        if os.path.exists(meta_path):
-            with open(meta_path) as f:
-                committed_n = json.load(f)["n_groups"]
-            if committed_n != n_groups:
+        meta = self._meta()
+        if meta is None:
+            if any(f.startswith("group-") for f in os.listdir(self.manifest_dir)):
                 raise ValueError(
-                    f"checkpoint at {output_dir} was created with "
-                    f"n_groups={committed_n}; got {n_groups} — resuming "
-                    "with a different bucket width would lose groups"
+                    f"checkpoint at {output_dir} has group manifests but no "
+                    "_meta.json (pre-pin layout) — cannot verify the bucket "
+                    "width; start a fresh output_dir"
                 )
-        else:
-            # No pin yet.  If manifests already exist (a checkpoint
-            # from before the _meta.json pin), the constructor argument
-            # must NOT silently become the pin — a wrong value would be
-            # backfilled as truth.  Derive the width from the lineage
-            # rows (recorded per-commit since round 2) or refuse.
-            legacy = self._legacy_manifest_n_groups()
-            if legacy is not None:
-                if legacy != n_groups:
-                    raise ValueError(
-                        f"checkpoint at {output_dir} has committed "
-                        f"manifests recording n_groups={legacy}; got "
-                        f"{n_groups}"
-                    )
-            elif any(
-                f.startswith("group-") and f.endswith(".json")
-                for f in os.listdir(self.manifest_dir)
-            ):
-                raise ValueError(
-                    f"checkpoint at {output_dir} has committed manifests "
-                    "but no recorded n_groups (pre-pin layout) — cannot "
-                    "verify the bucket width; start a fresh output_dir"
-                )
-            tmp = meta_path + f".tmp-{uuid.uuid4().hex}"
-            with open(tmp, "w") as f:
-                json.dump({"n_groups": n_groups}, f)
-            os.replace(tmp, meta_path)
-
-    def _legacy_manifest_n_groups(self) -> int | None:
-        """The n_groups recorded in committed lineage rows, if any
-        manifest carries one (single consistent value required)."""
-        seen = set()
-        for fname in os.listdir(self.manifest_dir):
-            if fname.startswith("group-") and fname.endswith(".json"):
-                with open(os.path.join(self.manifest_dir, fname)) as f:
-                    lin = json.load(f)
-                if "n_groups" in lin:
-                    seen.add(lin["n_groups"])
-        if len(seen) > 1:
+            _write_json_atomic(self._meta_path(), {"n_groups": n_groups})
+        elif meta["n_groups"] != n_groups:
             raise ValueError(
-                f"manifests disagree on n_groups: {sorted(seen)}"
+                f"checkpoint at {output_dir} was created with "
+                f"n_groups={meta['n_groups']}; got {n_groups} — resuming "
+                "with a different bucket width would lose groups"
             )
-        return seen.pop() if seen else None
+
+    def _meta_path(self) -> str:
+        return os.path.join(self.manifest_dir, "_meta.json")
+
+    def _meta(self) -> dict | None:
+        if not os.path.exists(self._meta_path()):
+            return None
+        with open(self._meta_path()) as f:
+            return json.load(f)
 
     # ---- manifest (snapshot log) ----
     def _manifest_path(self, group: int) -> str:
@@ -138,23 +129,16 @@ class CheckpointedExtractor:
         return out
 
     def _commit_group(self, group: int, lineage: dict) -> None:
-        tmp = self._manifest_path(group) + f".tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            json.dump(lineage, f)
-        os.replace(tmp, self._manifest_path(group))  # atomic snapshot commit
+        _write_json_atomic(self._manifest_path(group), lineage)  # snapshot commit
 
-    def _write_group(self, spark: SparkSession, g: int, res) -> tuple[int, int]:
-        """Land one group's spans/docs (NOT yet visible — visibility is
-        the manifest commit); returns (doc_count, span_count) read back
-        from the landed files.  The Iceberg backend overrides this with
+    def _group_path(self, g: int) -> str:
+        return os.path.join(self.output_dir, "results", f"group={g}")
+
+    def _write_group(self, g: int, results: DataFrame) -> None:
+        """Land one group's results (NOT yet visible — visibility is the
+        manifest commit).  The Iceberg backend overrides this with
         writeTo().overwritePartitions() (plans/iceberg_backend.py)."""
-        spans_path = os.path.join(self.output_dir, "spans", f"group={g}")
-        docs_path = os.path.join(self.output_dir, "docs", f"group={g}")
-        res.spans.write.mode("overwrite").parquet(spans_path)
-        res.docs.write.mode("overwrite").parquet(docs_path)
-        span_count = spark.read.parquet(spans_path).count()
-        doc_count = spark.read.parquet(docs_path).count()
-        return doc_count, span_count
+        results.write.mode("overwrite").parquet(self._group_path(g))
 
     # ---- run / resume ----
     def _grouped(self, documents: DataFrame) -> DataFrame:
@@ -172,30 +156,36 @@ class CheckpointedExtractor:
         bucketed by doc_id this staging step disappears — the layout
         already is the grouping."""
         staged = os.path.join(self.output_dir, "_staged")
-        if not os.path.exists(os.path.join(staged, "_SUCCESS")):
-            self._grouped(documents).write.mode("overwrite").partitionBy(
-                "group_id"
-            ).parquet(staged)
+        meta = self._meta()
+        if "fingerprint" not in meta:
+            # the staging write observes the source's fingerprint; writing
+            # it into _meta.json commits the staging (a crash before that
+            # re-stages)
+            fp = Observation()
+            self._grouped(
+                documents.observe(fp, *_fingerprint_exprs(documents.columns))
+            ).write.mode("overwrite").partitionBy("group_id").parquet(staged)
+            got = fp.get
+            _write_json_atomic(
+                self._meta_path(), {**meta, "fingerprint": [got["n"], got["h"]]}
+            )
             return spark.read.parquet(staged)
         # Resuming over an existing snapshot: refuse if the caller's
         # documents differ from what was frozen — silently processing
         # the stale snapshot is the same divergence class the n_groups
         # pin guards against.  A changed source needs a fresh
-        # output_dir.  (Two cheap single-agg scans, resume-only.)
-        frozen = spark.read.parquet(staged)
-        # same column LIST and ORDER on both sides (frozen carries the
-        # extra group_id partition column; xxhash64 is order-sensitive)
-        fp_new = _fingerprint(documents, documents.columns)
-        fp_old = _fingerprint(frozen, documents.columns)
+        # output_dir.  (One single-agg scan of the source, resume-only.)
+        row = documents.agg(*_fingerprint_exprs(documents.columns)).first()
+        fp_new, fp_old = [row["n"], row["h"]], meta["fingerprint"]
         if fp_new != fp_old:
             raise ValueError(
                 f"checkpoint at {self.output_dir} froze an input snapshot "
-                f"of {fp_old[0]} docs (doc_id xor {fp_old[1]}); the "
+                f"of {fp_old[0]} docs (fingerprint {fp_old[1]}); the "
                 f"documents passed now fingerprint as {fp_new[0]} docs "
-                f"(xor {fp_new[1]}) — resuming would silently process "
+                f"({fp_new[1]}) — resuming would silently process "
                 "stale data; use a fresh output_dir for a changed source"
             )
-        return frozen
+        return spark.read.parquet(staged)
 
     def run(
         self,
@@ -215,7 +205,7 @@ class CheckpointedExtractor:
         # Single-writer is the checkpoint contract, so resuming
         # continues the sequence.
         snapshot = max(
-            (lin.get("snapshot_id", 0) for lin in done.values()), default=0
+            (lin["snapshot_id"] for lin in done.values()), default=0
         )
         fresh = 0
         for g in range(self.n_groups):
@@ -223,21 +213,20 @@ class CheckpointedExtractor:
                 continue
             t0 = time.monotonic()
             sub = grouped.filter(F.col("group_id") == g).drop("group_id")
-            res = extract(
-                spark, sub,
-                salt_partitions=self.salt_partitions,
-                persist_inference=True,
-            )
-            doc_count, span_count = self._write_group(spark, g, res)
-            res.unpersist()
+            res = extract(spark, sub, salt_partitions=self.salt_partitions)
+            counts = Observation()
+            self._write_group(g, res.results.observe(
+                counts,
+                F.count("*").alias("doc_count"),
+                F.coalesce(F.sum(F.size("spans")), F.lit(0)).alias("span_count"),
+            ))
             snapshot += 1
             lineage = {
                 "run_id": run_id,
-                "n_groups": self.n_groups,  # makes the pin derivable
+                "n_groups": self.n_groups,
                 "snapshot_id": snapshot,
                 "group_id": g,
-                "doc_count": doc_count,
-                "span_count": span_count,
+                **counts.get,
                 "wall_ms": int((time.monotonic() - t0) * 1000),
                 "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
                 "metrics": res.metrics.as_dict(),
@@ -252,36 +241,32 @@ class CheckpointedExtractor:
 
     # ---- reads (only committed groups are visible) ----
     def _read_committed(
-        self, spark: SparkSession, sub: str, as_of: int | None = None
+        self, spark: SparkSession, as_of: int | None = None
     ) -> DataFrame:
-        """Union of committed group partitions; ``as_of`` is Iceberg
-        time travel — only groups committed at snapshot_id <= as_of are
-        visible (pre-snapshot manifests count as snapshot 0, i.e.
-        always visible).  If a compaction manifest covers part of the
-        requested horizon, the compacted rewrite is read INSTEAD of the
-        per-group files it covers (Iceberg: a rewrite-data-files
-        snapshot replaces the small files in every later read); groups
-        committed after the compaction point are unioned on top."""
+        """Union of committed group results; ``as_of`` is Iceberg time
+        travel — only groups committed at snapshot_id <= as_of are
+        visible.  If a compaction manifest covers part of the requested
+        horizon, the compacted rewrite is read INSTEAD of the per-group
+        files it covers (Iceberg: a rewrite-data-files snapshot replaces
+        the small files in every later read); groups committed after the
+        compaction point are unioned on top."""
         committed = self.committed_groups()
         effective = (
             as_of
             if as_of is not None
             else max(
-                (lin.get("snapshot_id", 0) for lin in committed.values()),
-                default=0,
+                (lin["snapshot_id"] for lin in committed.values()), default=0
             )
         )
         comp = self._best_compaction(effective)
         floor = comp["covers_up_to"] if comp else -1
         groups = sorted(
             g for g, lin in committed.items()
-            if floor < lin.get("snapshot_id", 0) <= effective
+            if floor < lin["snapshot_id"] <= effective
         )
-        paths = []
-        if comp:
-            paths.append(os.path.join(self.output_dir, comp["paths"][sub]))
+        paths = [os.path.join(self.output_dir, comp["path"])] if comp else []
         for g in groups:
-            p = os.path.join(self.output_dir, sub, f"group={g}")
+            p = self._group_path(g)
             if not os.path.exists(p):
                 raise ValueError(
                     f"snapshot {effective} needs group {g} whose files "
@@ -313,21 +298,20 @@ class CheckpointedExtractor:
         return fit[-1] if fit else None
 
     def compact(self, spark: SparkSession, target_files: int = 2) -> dict:
-        """Rewrite every committed group's spans/docs into
-        ``target_files`` files each — the Iceberg rewrite-data-files
-        action.  At 10^12-doc scale the per-group commit layout
-        accumulates one file set per group per run; readers pay the
-        small-file tax (open cost, no row-group locality) forever
-        unless the table is periodically compacted.  The rewrite is
-        atomic: data lands first, the compaction manifest second
-        (os.replace), so a reader either sees the old group files or
-        the complete rewrite, never half.  Time travel BELOW the
-        compaction point keeps reading the original group files until
-        `expire_snapshots` reclaims them."""
+        """Rewrite every committed group's results into ``target_files``
+        files — the Iceberg rewrite-data-files action.  At 10^12-doc
+        scale the per-group commit layout accumulates one file set per
+        group per run; readers pay the small-file tax (open cost, no
+        row-group locality) forever unless the table is periodically
+        compacted.  The rewrite is atomic: data lands first, the
+        compaction manifest second (os.replace), so a reader either
+        sees the old group files or the complete rewrite, never half.
+        Time travel BELOW the compaction point keeps reading the
+        original group files until `expire_snapshots` reclaims them."""
         committed = self.committed_groups()
         if not committed:
             raise ValueError("nothing committed to compact")
-        covers = max(lin.get("snapshot_id", 0) for lin in committed.values())
+        covers = max(lin["snapshot_id"] for lin in committed.values())
         for c in self._compaction_manifests():
             if c["covers_up_to"] == covers:
                 return c  # already compacted at this snapshot
@@ -337,21 +321,14 @@ class CheckpointedExtractor:
             "created_at": time.strftime(
                 "%Y-%m-%dT%H:%M:%SZ", time.gmtime()
             ),
-            "paths": {
-                "spans": os.path.join("spans_compact", f"snap={covers}"),
-                "docs": os.path.join("docs_compact", f"snap={covers}"),
-            },
+            "path": os.path.join("results_compact", f"snap={covers}"),
         }
-        for sub in ("spans", "docs"):
-            df = self._read_committed(spark, sub)
-            df.repartition(target_files).write.mode("overwrite").parquet(
-                os.path.join(self.output_dir, manifest["paths"][sub])
-            )
-        mpath = os.path.join(self.manifest_dir, f"compaction-{covers}.json")
-        tmp = mpath + f".tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-        os.replace(tmp, mpath)
+        self._read_committed(spark).repartition(target_files).write.mode(
+            "overwrite"
+        ).parquet(os.path.join(self.output_dir, manifest["path"]))
+        _write_json_atomic(
+            os.path.join(self.manifest_dir, f"compaction-{covers}.json"), manifest
+        )
         return manifest
 
     def expire_snapshots(self) -> list[int]:
@@ -366,19 +343,17 @@ class CheckpointedExtractor:
         horizon = comps[-1]["covers_up_to"]
         expired = []
         for g, lin in self.committed_groups().items():
-            if lin.get("snapshot_id", 0) <= horizon:
-                for sub in ("spans", "docs"):
-                    p = os.path.join(self.output_dir, sub, f"group={g}")
-                    if os.path.exists(p):
-                        shutil.rmtree(p)
-                        expired.append(g)
-        return sorted(set(expired))
+            p = self._group_path(g)
+            if lin["snapshot_id"] <= horizon and os.path.exists(p):
+                shutil.rmtree(p)
+                expired.append(g)
+        return sorted(expired)
 
     def read_spans(self, spark: SparkSession, as_of: int | None = None) -> DataFrame:
-        return self._read_committed(spark, "spans", as_of)
+        return result_spans(self._read_committed(spark, as_of))
 
     def read_docs(self, spark: SparkSession, as_of: int | None = None) -> DataFrame:
-        return self._read_committed(spark, "docs", as_of)
+        return result_docs(self._read_committed(spark, as_of))
 
     _LINEAGE_SCHEMA = (
         "run_id string, n_groups long, snapshot_id long, group_id int, "
@@ -386,16 +361,8 @@ class CheckpointedExtractor:
     )
 
     def lineage_df(self, spark: SparkSession) -> DataFrame:
-        # Normalize every manifest row to the SAME field set: manifests
-        # written before the n_groups pin lack that key, and a mixed
-        # old/new checkpoint would otherwise hand createDataFrame dicts
-        # with inconsistent keys (schema-merge-dependent behavior).
         keys = [f.split()[0] for f in self._LINEAGE_SCHEMA.split(", ")]
-        rows = [
-            {k: lin.get(k, self.n_groups if k == "n_groups" else None)
-             for k in keys}
-            for lin in self.committed_groups().values()
-        ]
+        rows = [[lin[k] for k in keys] for lin in self.committed_groups().values()]
         return spark.createDataFrame(rows, self._LINEAGE_SCHEMA)
 
     def remaining_docs(self, spark: SparkSession, documents: DataFrame) -> DataFrame:

@@ -12,19 +12,19 @@ pattern as the transformWithStateInPandas engine parity.
 Mapping of the stand-in's mechanics onto native Iceberg (all public
 API, Iceberg docs "Spark Writes"/"Spark Procedures"):
 
-- per-group atomic commit       → ``writeTo(tbl).overwritePartitions()``
-  (manifest write-then-rename)     on the ``group_id`` partition; the
-                                   lineage row rides the spans commit as
-                                   ``snapshot-property.*`` write options,
-                                   so group visibility == "a spans
-                                   snapshot carries its lineage" (docs
-                                   land first; a crash between the two
-                                   leaves the group uncommitted and the
-                                   re-run's overwritePartitions is
-                                   idempotent — the same two-phase shape
-                                   as the stand-in)
-- committed_groups / lineage    → the ``<table>.snapshots`` metadata
-                                   table's ``summary`` map
+- per-group results write       → one ``writeTo(<prefix>_results)
+  (``results/group=G/``)           .overwritePartitions()`` on the
+                                   ``group_id`` partition: one table,
+                                   one native snapshot per group,
+                                   idempotent on re-run
+- per-group visibility          → unchanged: the lineage manifest
+  (manifest write-then-rename)     (``_manifest/group-G.json``) lands
+                                   under ``staging_dir`` next to the
+                                   frozen input after the write, and
+                                   reads show only manifest-committed
+                                   groups — a crash between the two
+                                   leaves the group invisible and the
+                                   re-run overwrites its partition
 - time travel (as_of)           → group filter from the lineage log
                                    (groups are immutable once committed
                                    under the single-writer contract, so
@@ -45,8 +45,6 @@ this plane re-expresses as table snapshots.
 """
 
 from __future__ import annotations
-
-import json
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -87,9 +85,6 @@ def _first_iceberg_catalog(spark: SparkSession) -> str:
     raise NotImplementedError("no Iceberg catalog configured")
 
 
-_LINEAGE_PROP = "pero-lineage"  # snapshot summary key carrying the row
-
-
 def table_prefix_from_path(prefix: str) -> str:
     """Map the caller's output_dir (every existing call site passes a
     FILESYSTEM PATH, e.g. '/tmp/ckpt') onto a valid Iceberg table-name
@@ -114,9 +109,10 @@ def table_prefix_from_path(prefix: str) -> str:
 
 
 class IcebergCheckpointedExtractor(CheckpointedExtractor):
-    """CheckpointedExtractor whose group commits are native Iceberg
-    snapshots.  ``output_dir`` becomes a table-name prefix inside the
-    configured Iceberg catalog instead of a filesystem directory."""
+    """CheckpointedExtractor whose group results are native Iceberg
+    snapshots of one ``<prefix>_results`` table, ``<prefix>`` derived
+    from ``table_prefix`` (table_prefix_from_path).  The frozen input
+    and the manifests live under ``staging_dir``."""
 
     def __init__(
         self,
@@ -131,96 +127,28 @@ class IcebergCheckpointedExtractor(CheckpointedExtractor):
                 "Iceberg Spark runtime not on the classpath / no Iceberg "
                 "catalog configured — use the manifest backend"
             )
-        catalog = _first_iceberg_catalog(spark)
-        ident = table_prefix_from_path(table_prefix)
-        self.spans_table = f"{catalog}.{ident}_spans"
-        self.docs_table = f"{catalog}.{ident}_docs"
-        # deliberately NOT calling super().__init__: the manifest-dir /
-        # n_groups pin lives in table properties here.  output_dir is
-        # only used by the inherited _stage_input (the frozen input
-        # snapshot) — on a real Iceberg table bucketed by doc_id that
-        # staging step disappears entirely (see _stage_input docstring).
-        self.output_dir = staging_dir or f"/tmp/pero-iceberg-staging/{table_prefix}"
-        self.n_groups = n_groups
-        self.salt_partitions = salt_partitions
-        spark.sql(
-            f"CREATE TABLE IF NOT EXISTS {self.spans_table} ("
-            "doc_id string, `order` int, kind string, text string, "
-            "media_ref string, group_id int) USING iceberg "
-            "PARTITIONED BY (group_id) "
-            f"TBLPROPERTIES ('pero-n-groups'='{n_groups}')"
+        super().__init__(
+            staging_dir or f"/tmp/pero-iceberg-staging/{table_prefix}",
+            n_groups, salt_partitions,
+        )
+        self.results_table = (
+            f"{_first_iceberg_catalog(spark)}."
+            f"{table_prefix_from_path(table_prefix)}_results"
         )
         spark.sql(
-            f"CREATE TABLE IF NOT EXISTS {self.docs_table} ("
-            "doc_id string, score double, status string, group_id int) "
-            "USING iceberg PARTITIONED BY (group_id) "
-            f"TBLPROPERTIES ('pero-n-groups'='{n_groups}')"
+            f"CREATE TABLE IF NOT EXISTS {self.results_table} ("
+            "doc_id string, score double, status string, spans array<struct<"
+            "`order`:int, kind:string, text:string, media_ref:string>>, "
+            "group_id int) USING iceberg PARTITIONED BY (group_id)"
         )
-        pinned = (
-            spark.sql(f"SHOW TBLPROPERTIES {self.spans_table}")
-            .filter(F.col("key") == "pero-n-groups")
-            .collect()
-        )
-        if pinned and int(pinned[0]["value"]) != n_groups:
-            raise ValueError(
-                f"table {self.spans_table} pinned n_groups="
-                f"{pinned[0]['value']}; got {n_groups}"
-            )
-        self._spark = spark
-        self._pending: tuple | None = None
 
-    # ---- store primitives the run loop uses ----
-    def committed_groups(self) -> dict[int, dict]:
-        rows = (
-            self._spark.sql(
-                f"SELECT summary FROM {self.spans_table}.snapshots"
-            )
-            .collect()
-        )
-        out: dict[int, dict] = {}
-        for r in rows:
-            raw = (r["summary"] or {}).get(_LINEAGE_PROP)
-            if raw:
-                lin = json.loads(raw)
-                out[int(lin["group_id"])] = lin
-        return out
-
-    def _write_group(self, spark: SparkSession, g: int, res) -> tuple[int, int]:
-        # The spans write is DEFERRED into _commit_group (the lineage
-        # property must ride the spans snapshot), but the base run loop
-        # unpersists the inference result between the two calls — so
-        # pin the spans frame with its OWN persist and materialize it
-        # now, while the upstream cache is hot.  Without this, the
-        # deferred overwritePartitions would re-execute the entire
-        # extraction (including inference) a second time per group.
-        spans_pinned = res.spans.persist()
-        span_count = spans_pinned.count()
-        doc_count = res.docs.count()
-        (
-            res.docs.withColumn("group_id", F.lit(g).cast("int"))
-            .writeTo(self.docs_table)
-            .overwritePartitions()
-        )
-        self._pending = (g, span_count, doc_count, spans_pinned)
-        return doc_count, span_count
-
-    def _commit_group(self, group: int, lineage: dict) -> None:
-        g, _sc, _dc, spans = self._pending
-        assert g == group
-        writer = spans.withColumn(
-            "group_id", F.lit(group).cast("int")
-        ).writeTo(self.spans_table)
-        # the lineage row IS the visibility marker, attached to the
-        # spans snapshot (Iceberg write option "snapshot-property.<k>")
-        writer = writer.option(
-            f"snapshot-property.{_LINEAGE_PROP}", json.dumps(lineage)
-        )
-        writer.overwritePartitions()
-        spans.unpersist()
-        self._pending = None
+    def _write_group(self, g: int, results: DataFrame) -> None:
+        results.withColumn("group_id", F.lit(g).cast("int")).writeTo(
+            self.results_table
+        ).overwritePartitions()
 
     def _read_committed(
-        self, spark: SparkSession, sub: str, as_of: int | None = None
+        self, spark: SparkSession, as_of: int | None = None
     ) -> DataFrame:
         committed = self.committed_groups()
         if not committed:
@@ -228,15 +156,13 @@ class IcebergCheckpointedExtractor(CheckpointedExtractor):
         effective = (
             as_of
             if as_of is not None
-            else max(lin.get("snapshot_id", 0) for lin in committed.values())
+            else max(lin["snapshot_id"] for lin in committed.values())
         )
         visible = [
-            g for g, lin in committed.items()
-            if lin.get("snapshot_id", 0) <= effective
+            g for g, lin in committed.items() if lin["snapshot_id"] <= effective
         ]
-        table = self.spans_table if sub == "spans" else self.docs_table
         return (
-            spark.table(table)
+            spark.table(self.results_table)
             .filter(F.col("group_id").isin(visible))
             .drop("group_id")
         )

@@ -8,19 +8,27 @@ DataFrame program:
       → explode(spans)
       → [text branch: whitespace normalize, drop empties]          (X10)
       ⊎ [media branch: salt-repartition → mapInPandas(inference)   (X2-X5)
-         → arabic fix (F10) → confidence filter (N3)]
-      → window sort by (offset, line_idx) per doc                  (W2)
-      → output spans (kind, text, media_ref, order)
-      + per-doc score (A7/X8: median conf ×100, 2dp) and status    (X9)
+         → arabic fix (F10) → confidence filter (N3), error rows kept]
+      ⊎ one carrier row per input doc
+      → groupBy(doc_id): spans array_sort(offset, line_idx)         (W2)
+                         score (A7/X8: median conf ×100, 2dp)
+                         status (X9: first error by offset)
+      → results(doc_id, score, status,
+                spans array<struct<order, kind, text, media_ref>>)
+
+``spans`` (one row per output span) and ``docs`` (one row per doc) are
+an explode and a projection of ``results``.
 
 Scale notes (100 TB):
 - the only Python crossing is the Arrow channel of mapInPandas on the
   media branch; everything else is whole-stage codegen.
 - the media branch is repartitioned on xxhash64(doc_id, offset) before
   inference, so a heavy multi-page doc's media spans spread across the
-  cluster (explicit skew handling per north_rule); the window sort then
-  shuffles once on doc_id.
-- no driver-side collect anywhere; counters are Spark accumulators.
+  cluster (explicit skew handling per north_rule); the per-doc
+  aggregate then shuffles once on doc_id.
+- no driver-side collect anywhere; the inference counters are
+  ``DataFrame.observe`` metrics of the one inference node, so they are
+  exact for the first action that runs the plan, persisted or not.
 """
 
 from __future__ import annotations
@@ -28,7 +36,7 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from typing import Optional
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..constants import (
@@ -41,7 +49,7 @@ from ..constants import (
 )
 from ..operators.inference import INFER_SCHEMA, make_infer_fn
 from ..operators.normalize import (
-    filter_confident_lines,
+    confident,
     normalize_text_spans,
     normalize_transcriptions,
 )
@@ -51,23 +59,26 @@ DEFAULT_ENGINE_CONFIG = {"engine": "stub-ocr", "version": 1}
 
 @dataclass
 class ExtractMetrics:
-    pages_decoded: object = None
-    lines_emitted: object = None
-    decode_failures: object = None
+    """Inference counters of one ``extract``, observed on its inference
+    output during the first action that runs it; ``as_dict`` blocks
+    until that action has finished (zeros without metrics)."""
+
+    observation: Optional[Observation] = None
 
     def as_dict(self) -> dict:
-        return {
-            "pages_decoded": self.pages_decoded.value if self.pages_decoded else 0,
-            "lines_emitted": self.lines_emitted.value if self.lines_emitted else 0,
-            "decode_failures": self.decode_failures.value if self.decode_failures else 0,
-        }
+        if self.observation is None:
+            return dict.fromkeys(
+                ("pages_decoded", "lines_emitted", "decode_failures"), 0
+            )
+        return self.observation.get
 
 
 @dataclass
 class ExtractResult:
+    results: DataFrame     # doc_id, score, status, spans[order, kind, text, media_ref]
     spans: DataFrame       # doc_id, order, kind, text, media_ref
     docs: DataFrame        # doc_id, score, status
-    spans_conf: DataFrame = None  # spans + conf (internal/serialization use)
+    spans_conf: DataFrame = None  # unordered output lines + conf
     raw_spans: DataFrame = None   # pre-strip/pre-arabic-fix lines for the
                                   # ALTO path (run_client.py:210-211 builds
                                   # ALTO before the confidence strip and
@@ -93,6 +104,18 @@ def explode_spans(docs: DataFrame) -> DataFrame:
     )
 
 
+def result_spans(results: DataFrame) -> DataFrame:
+    """results(doc_id, ..., spans[]) → one row per output span."""
+    return results.select("doc_id", F.explode("spans").alias("s")).select(
+        "doc_id", "s.order", "s.kind", "s.text", "s.media_ref"
+    )
+
+
+def result_docs(results: DataFrame) -> DataFrame:
+    """results → one row per doc (doc_id, score, status)."""
+    return results.select("doc_id", "score", "status")
+
+
 def extract(
     spark: SparkSession,
     documents: DataFrame,
@@ -101,31 +124,16 @@ def extract(
     with_metrics: bool = True,
     persist_inference: bool = False,
 ) -> ExtractResult:
-    sc = spark.sparkContext
-    config = engine_config or DEFAULT_ENGINE_CONFIG
-    bconf = sc.broadcast(config)
-
-    metrics = ExtractMetrics()
-    if with_metrics:
-        metrics = ExtractMetrics(
-            pages_decoded=sc.accumulator(0),
-            lines_emitted=sc.accumulator(0),
-            decode_failures=sc.accumulator(0),
-        )
-        # accumulators are only exact if the Python stage runs once:
-        # without a persist, the spans and docs branches would each
-        # re-execute mapInPandas and inflate every counter by the
-        # number of actions taken (2-3x measured)
-        persist_inference = True
-
+    """Build the extraction plan (lazy).  ``persist_inference`` keeps the
+    inference output for callers that run several actions on the result;
+    a single action runs inference once without it."""
+    bconf = spark.sparkContext.broadcast(engine_config or DEFAULT_ENGINE_CONFIG)
     spans = explode_spans(documents)
 
     # ---- text branch: pure codegen ----
-    text_branch = (
-        spans.filter(F.col("kind") == KIND_TEXT)
-        .select("doc_id", "offset", "text")
-    )
-    text_branch = normalize_text_spans(text_branch).select(
+    text_branch = normalize_text_spans(
+        spans.filter(F.col("kind") == KIND_TEXT).select("doc_id", "offset", "text")
+    ).select(
         "doc_id",
         "offset",
         F.lit(0).cast("int").alias("line_idx"),
@@ -144,76 +152,75 @@ def extract(
         media_in = media_in.repartition(
             salt_partitions, F.xxhash64("doc_id", "offset")
         )
-    infer_fn = make_infer_fn(
-        bconf,
-        metrics.pages_decoded,
-        metrics.lines_emitted,
-        metrics.decode_failures,
-    )
-    inferred = media_in.mapInPandas(infer_fn, schema=INFER_SCHEMA)
+    inferred = media_in.mapInPandas(make_infer_fn(bconf), schema=INFER_SCHEMA)
+    metrics = ExtractMetrics()
+    if with_metrics:
+        # a decoded page emits lines 1..L (L >= 1), a failed page one
+        # error row; observed on the single inference node every
+        # consumer below shares
+        ok = F.col("error").isNull()
+        metrics = ExtractMetrics(Observation())
+        inferred = inferred.observe(
+            metrics.observation,
+            F.count_if(ok & (F.col("line_idx") == 1)).alias("pages_decoded"),
+            F.count_if(ok).alias("lines_emitted"),
+            F.count_if(~ok).alias("decode_failures"),
+        )
     if persist_inference:
-        # one traversal of the Python stage even when several actions
-        # (spans write + docs write) consume it; also keeps accumulator
-        # metrics exact instead of recompute-inflated
         inferred = inferred.persist()
 
-    errors = inferred.filter(F.col("error").isNotNull()).select(
-        "doc_id", "offset", "error"
-    )
-    ok_lines = inferred.filter(F.col("error").isNull())
-    media_raw = ok_lines.select(
-        "doc_id", "offset", "line_idx",
-        F.lit(KIND_MEDIA).alias("kind"),
-        "text", "media_ref", "conf",
-    )
-    raw_spans = text_branch.select(
-        "doc_id", "offset", "line_idx", "kind", "text", "media_ref", "conf"
-    ).unionByName(media_raw)
-    media_lines = ok_lines
-    media_lines = normalize_transcriptions(media_lines)
-    media_lines = filter_confident_lines(media_lines)
-    media_branch = media_lines.select(
-        "doc_id", "offset", "line_idx",
-        F.lit(KIND_MEDIA).alias("kind"),
-        "text", "media_ref", "conf",
-        F.lit(None).cast("string").alias("error"),
-    )
-
-    merged = text_branch.unionByName(media_branch)
-
-    # ---- reading-order recovery (W2): one shuffle on doc_id ----
-    w = Window.partitionBy("doc_id").orderBy("offset", "line_idx")
-    out_spans = merged.select(
-        "doc_id",
-        (F.row_number().over(w) - 1).cast("int").alias("order"),
-        "kind", "text", "media_ref", "conf",
-    )
-
-    # ---- per-doc score (A7/X8) + status (X9) ----
-    scores = out_spans.groupBy("doc_id").agg(
-        F.coalesce(
-            F.round(F.expr("percentile(conf, 0.5)") * SCORE_SCALE, SCORE_DP),
-            F.lit(DEFAULT_SCORE),
-        ).alias("score")
-    )
-    statuses = errors.groupBy("doc_id").agg(
-        F.min_by("error", "offset").alias("first_error")
-    )
-    docs_out = (
-        documents.select("doc_id")
-        .join(scores, "doc_id", "left")
-        .join(statuses, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce("score", F.lit(DEFAULT_SCORE)).alias("score"),
-            F.coalesce("first_error", F.lit(STATE_PROCESSED)).alias("status"),
+    raw_spans = text_branch.drop("error").unionByName(
+        inferred.filter(F.col("error").isNull()).select(
+            "doc_id", "offset", "line_idx",
+            F.lit(KIND_MEDIA).alias("kind"),
+            "text", "media_ref", "conf",
         )
+    )
+    # confident lines and error rows in one pass over the inference
+    # output; an error row has no kind and no span
+    media_branch = normalize_transcriptions(inferred).filter(
+        F.col("error").isNotNull() | confident(F.col("conf"))
+    ).select(
+        "doc_id", "offset", "line_idx",
+        F.when(F.col("error").isNull(), F.lit(KIND_MEDIA)).alias("kind"),
+        "text", "media_ref", "conf", "error",
+    )
+    lines = text_branch.unionByName(media_branch)
+
+    # ---- one shuffle on doc_id: reading order (W2), score (A7/X8),
+    # status (X9); a carrier row (doc_id only) gives every input doc a
+    # result row, with or without spans ----
+    per_doc = lines.unionByName(
+        documents.select("doc_id"), allowMissingColumns=True
+    ).groupBy("doc_id").agg(
+        F.array_sort(F.collect_list(F.when(
+            F.col("kind").isNotNull(),
+            F.struct("offset", "line_idx", "kind", "text", "media_ref"),
+        ))).alias("lines"),
+        F.expr("percentile(conf, 0.5)").alias("median_conf"),
+        F.min_by("error", F.when(F.col("error").isNotNull(), F.col("offset")))
+        .alias("first_error"),
+    )
+    results = per_doc.select(
+        "doc_id",
+        F.coalesce(
+            F.round(F.col("median_conf") * SCORE_SCALE, SCORE_DP),
+            F.lit(DEFAULT_SCORE),
+        ).alias("score"),
+        F.coalesce("first_error", F.lit(STATE_PROCESSED)).alias("status"),
+        F.transform("lines", lambda s, i: F.struct(
+            i.alias("order"),
+            s["kind"].alias("kind"),
+            s["text"].alias("text"),
+            s["media_ref"].alias("media_ref"),
+        )).alias("spans"),
     )
 
     return ExtractResult(
-        spans=out_spans.select("doc_id", "order", "kind", "text", "media_ref"),
-        docs=docs_out,
-        spans_conf=out_spans,
+        results=results,
+        spans=result_spans(results),
+        docs=result_docs(results),
+        spans_conf=lines.filter(F.col("kind").isNotNull()).drop("error"),
         raw_spans=raw_spans,
         metrics=metrics,
         persisted=inferred if persist_inference else None,

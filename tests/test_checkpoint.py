@@ -2,9 +2,17 @@
 identical to an uninterrupted run, with no duplicate lineage and no
 partially-visible (uncommitted) results."""
 
-import pytest
+import glob
+import os
 
+import pytest
+from pyspark.sql import functions as F
+
+from pero_ocr_api_spark.constants import KIND_MEDIA
+from pero_ocr_api_spark.operators.inference import stub_infer_one
+from pero_ocr_api_spark.plans import checkpoint
 from pero_ocr_api_spark.plans.checkpoint import CheckpointedExtractor, SimulatedFailure
+from pero_ocr_api_spark.plans.pipeline import explode_spans
 from pero_ocr_api_spark.synth import interleaved_documents
 
 
@@ -17,17 +25,38 @@ def _collect_sorted(df):
     return sorted(tuple(r) for r in df.collect())
 
 
-def test_kill_and_resume_identical(spark, docs, tmp_path_factory):
-    base = tmp_path_factory.mktemp("ckpt")
-
-    # uninterrupted reference run
-    full = CheckpointedExtractor(str(base / "full"), n_groups=4)
+@pytest.fixture(scope="module")
+def uninterrupted(spark, docs, tmp_path_factory):
+    """(spans, docs) read back from an uninterrupted 4-group run."""
+    full = CheckpointedExtractor(str(tmp_path_factory.mktemp("ckfull")), n_groups=4)
     full.run(spark, docs, run_id="full")
-    expected_spans = _collect_sorted(full.read_spans(spark))
-    expected_docs = _collect_sorted(full.read_docs(spark))
+    return _read_back(spark, full)
+
+
+def _read_back(spark, ck):
+    return _collect_sorted(ck.read_spans(spark)), _collect_sorted(ck.read_docs(spark))
+
+
+def _oracle_metrics(docs):
+    """pages_decoded / lines_emitted / decode_failures of the stub
+    engine over every media span of ``docs``."""
+    out = dict.fromkeys(("pages_decoded", "lines_emitted", "decode_failures"), 0)
+    media = explode_spans(docs).filter(F.col("kind") == KIND_MEDIA)
+    for r in media.select("media_ref").collect():
+        err, lines = stub_infer_one(r.media_ref)
+        if err is not None:
+            out["decode_failures"] += 1
+        else:
+            out["pages_decoded"] += 1
+            out["lines_emitted"] += len(lines)
+    return out
+
+
+def test_kill_and_resume_identical(spark, docs, uninterrupted, tmp_path_factory):
+    expected_spans, expected_docs = uninterrupted
 
     # killed after 2 of 4 group commits
-    half = CheckpointedExtractor(str(base / "half"), n_groups=4)
+    half = CheckpointedExtractor(str(tmp_path_factory.mktemp("ckhalf")), n_groups=4)
     with pytest.raises(SimulatedFailure):
         half.run(spark, docs, run_id="try1", fail_after=2)
     committed = half.committed_groups()
@@ -40,8 +69,7 @@ def test_kill_and_resume_identical(spark, docs, tmp_path_factory):
     # resume completes the remainder; final state identical
     half.run(spark, docs, run_id="try2")
     assert len(half.committed_groups()) == 4
-    assert _collect_sorted(half.read_spans(spark)) == expected_spans
-    assert _collect_sorted(half.read_docs(spark)) == expected_docs
+    assert _read_back(spark, half) == uninterrupted
 
     # lineage: one row per group, no duplicates, counts add up
     lineage = half.lineage_df(spark).collect()
@@ -50,6 +78,83 @@ def test_kill_and_resume_identical(spark, docs, tmp_path_factory):
     assert sum(r.doc_count for r in lineage) == len(expected_docs)
     # resumed groups carry the resume run_id
     assert {r.run_id for r in lineage} == {"try1", "try2"}
+    # the observed inference metrics are exact without a persist
+    metrics = [lin["metrics"] for lin in half.committed_groups().values()]
+    assert {k: sum(m[k] for m in metrics) for k in metrics[0]} == _oracle_metrics(docs)
+
+
+def test_crash_after_group_data_before_manifest(
+    spark, docs, uninterrupted, tmp_path_factory, monkeypatch
+):
+    """A crash after a group's results land but before its manifest
+    leaves that group invisible; the resume rewrites it."""
+    out = str(tmp_path_factory.mktemp("ckcrash"))
+    ck = CheckpointedExtractor(out, n_groups=4)
+    commit = CheckpointedExtractor._commit_group
+
+    def crash_on_second(self, group, lineage):
+        if self.committed_groups():
+            raise SimulatedFailure("killed before the manifest")
+        commit(self, group, lineage)
+
+    with monkeypatch.context() as m:
+        m.setattr(CheckpointedExtractor, "_commit_group", crash_on_second)
+        with pytest.raises(SimulatedFailure):
+            ck.run(spark, docs)
+    assert len(glob.glob(os.path.join(out, "results", "group=*"))) == 2
+    assert len(ck.committed_groups()) == 1
+    ck.run(spark, docs)
+    assert _read_back(spark, ck) == uninterrupted
+
+
+def test_crash_after_compaction_data_before_manifest(
+    spark, docs, uninterrupted, tmp_path_factory, monkeypatch
+):
+    """A crash after the compacted rewrite lands but before its
+    manifest leaves reads on the group files; re-compacting completes."""
+    out = str(tmp_path_factory.mktemp("ckcompcrash"))
+    ck = CheckpointedExtractor(out, n_groups=4)
+    ck.run(spark, docs)
+    write = checkpoint._write_json_atomic
+
+    def crash_on_compaction(path, obj):
+        if os.path.basename(path).startswith("compaction-"):
+            raise SimulatedFailure("killed before the compaction manifest")
+        write(path, obj)
+
+    with monkeypatch.context() as m:
+        m.setattr(checkpoint, "_write_json_atomic", crash_on_compaction)
+        with pytest.raises(SimulatedFailure):
+            ck.compact(spark, target_files=1)
+    rewrite = os.path.join(out, "results_compact", "snap=4")
+    assert glob.glob(os.path.join(rewrite, "*.parquet"))
+    assert _read_back(spark, ck) == uninterrupted
+    assert ck.compact(spark, target_files=1)["covers_up_to"] == 4
+    assert len(glob.glob(os.path.join(rewrite, "*.parquet"))) == 1
+    assert _read_back(spark, ck) == uninterrupted
+
+
+def test_checkpoint_group_runs_at_most_four_jobs(spark, docs, tmp_path_factory):
+    """Spark jobs per checkpoint group: the slope between uninterrupted
+    runs with 2 and 6 groups over the same input, whose staging jobs
+    are common to both."""
+    base = tmp_path_factory.mktemp("ckjobs")
+    src = str(base / "input.parquet")
+    docs.write.parquet(src)
+    sc = spark.sparkContext
+
+    def jobs(n_groups):
+        tag = f"ckjobs-{n_groups}"
+        sc.setJobGroup(tag, tag)
+        try:
+            CheckpointedExtractor(str(base / tag), n_groups=n_groups).run(
+                spark, spark.read.parquet(src)
+            )
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(tag))
+
+    assert (jobs(6) - jobs(2)) / 4 <= 4
 
 
 def test_remaining_docs_left_anti(spark, docs, tmp_path_factory):
@@ -130,59 +235,17 @@ def test_changed_content_on_resume_refused(spark, sf_smoke, tmp_path_factory):
     assert len(m) == 4
 
 
-def test_mixed_legacy_lineage_rows_normalized(spark, sf_smoke, tmp_path_factory):
-    """ADVICE r2: a checkpoint holding pre-pin manifests (no n_groups
-    key) mixed with new ones must still yield a consistent lineage_df —
-    missing n_groups is backfilled from the instance pin."""
-    import json
-    import os
-
-    from pero_ocr_api_spark.synth import interleaved_documents
-
-    out = str(tmp_path_factory.mktemp("ckmixed"))
-    docs = interleaved_documents(spark, sf_smoke).orderBy("doc_id").limit(20)
-    ck = CheckpointedExtractor(out, n_groups=4)
-    ck.run(spark, docs)
-    # age one manifest back to the pre-pin shape
-    p = os.path.join(out, "_manifest", "group-0.json")
-    lin = json.load(open(p))
-    lin.pop("n_groups")
-    json.dump(lin, open(p, "w"))
-    rows = ck.lineage_df(spark).collect()
-    assert len(rows) == 4
-    assert all(r.n_groups == 4 for r in rows)
-
-
-def test_prepin_checkpoint_derives_or_refuses(spark, sf_smoke, tmp_path_factory):
-    """A checkpoint whose _meta.json is missing but whose manifests
-    exist must derive n_groups from the lineage rows (recorded
-    per-commit) — and refuse a contradicting constructor value —
-    instead of backfilling whatever the caller passed."""
-    import json
-    import os
-
-    from pero_ocr_api_spark.synth import interleaved_documents
-
-    out = str(tmp_path_factory.mktemp("cklegacy"))
-    docs = interleaved_documents(spark, sf_smoke).orderBy("doc_id").limit(20)
-    CheckpointedExtractor(out, n_groups=4).run(spark, docs)
-    meta = os.path.join(out, "_manifest", "_meta.json")
-    os.remove(meta)  # simulate a pre-pin checkpoint
-    # wrong width is caught via the lineage-recorded value
-    with pytest.raises(ValueError, match="n_groups=4"):
-        CheckpointedExtractor(out, n_groups=8)
-    # matching width re-pins and resumes
-    m = CheckpointedExtractor(out, n_groups=4).run(spark, docs)
-    assert len(m) == 4 and os.path.exists(meta)
-    # truly legacy (no n_groups in any lineage row): refuse outright
-    os.remove(meta)
-    for g in range(4):
-        p = os.path.join(out, "_manifest", f"group-{g}.json")
-        lin = json.load(open(p))
-        lin.pop("n_groups")
-        json.dump(lin, open(p, "w"))
-    with pytest.raises(ValueError, match="pre-pin"):
-        CheckpointedExtractor(out, n_groups=4)
+def test_old_layouts_refused(tmp_path):
+    """Group manifests without a _meta.json pin, and the old spans/ +
+    docs/ layout, are refused instead of resumed."""
+    prepin = tmp_path / "prepin" / "_manifest"
+    prepin.mkdir(parents=True)
+    (prepin / "group-0.json").write_text("{}")
+    with pytest.raises(ValueError, match="no _meta.json"):
+        CheckpointedExtractor(str(tmp_path / "prepin"), n_groups=4)
+    (tmp_path / "flat" / "spans" / "group=0").mkdir(parents=True)
+    with pytest.raises(ValueError, match=r"spans/ \+ docs/"):
+        CheckpointedExtractor(str(tmp_path / "flat"), n_groups=4)
 
 
 def test_snapshot_time_travel(spark, sf_smoke, tmp_path_factory):
@@ -236,9 +299,6 @@ def test_compaction_and_snapshot_expiry(spark, sf_smoke, tmp_path_factory):
     from the original group files until expire_snapshots reclaims them
     (after which sub-horizon reads raise), and groups committed AFTER
     a compaction union on top of the rewrite."""
-    import glob
-    import os
-
     from pero_ocr_api_spark.synth import interleaved_documents
 
     out = str(tmp_path_factory.mktemp("ckcompact"))
@@ -257,7 +317,7 @@ def test_compaction_and_snapshot_expiry(spark, sf_smoke, tmp_path_factory):
     ck.run(spark, docs, run_id="r2")
     full_spans = _collect_sorted(ck.read_spans(spark))
     full_docs = _collect_sorted(ck.read_docs(spark))
-    n_small = len(glob.glob(os.path.join(out, "spans", "group=*", "*.parquet")))
+    n_small = len(glob.glob(os.path.join(out, "results", "group=*", "*.parquet")))
 
     comp2 = ck.compact(spark, target_files=1)
     assert comp2["covers_up_to"] == 4
@@ -266,7 +326,7 @@ def test_compaction_and_snapshot_expiry(spark, sf_smoke, tmp_path_factory):
     assert _collect_sorted(ck.read_docs(spark)) == full_docs
     # the rewrite actually consolidated files
     n_compact = len(glob.glob(
-        os.path.join(out, "spans_compact", "snap=4", "*.parquet")))
+        os.path.join(out, "results_compact", "snap=4", "*.parquet")))
     assert n_compact == 1 < n_small
     # time travel below the horizon still works (original files intact)
     asof2 = ck.read_docs(spark, as_of=2).count()

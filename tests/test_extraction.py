@@ -176,10 +176,9 @@ def test_serialize_alto_dual_semantics(result):
 
 
 def test_accumulator_metrics_exact(spark, sf_smoke):
-    """A9 (north_star): pages_decoded / lines_emitted / decode_failures
-    accumulators must equal the oracle's ground truth exactly.
-    persist_inference=True guarantees one traversal of the Python stage
-    so accumulators are not recompute-inflated."""
+    """A9 (north_star): the observed pages_decoded / lines_emitted /
+    decode_failures must equal the oracle's ground truth exactly, also
+    when observed from below a persist shared by two actions."""
     from pero_ocr_api_spark.operators.inference import stub_infer_one
     from pero_ocr_api_spark.plans.pipeline import explode_spans
 
@@ -336,10 +335,9 @@ def test_partitioning_independence(spark, sf_smoke):
 
 
 def test_docs_plan_prunes_window(spark, sf_smoke):
-    """The per-doc score action must not pay the reading-order window:
-    Catalyst prunes the Window/Sort (the `order` column is unused in
-    `docs`) and plans a map-side-combined percentile whose exchange
-    carries aggregation buffers, not span rows (PLANS.md §1)."""
+    """The per-doc score action must not pay a reading-order window:
+    reading order, score and status come from one per-doc aggregate
+    with a map-side-combined percentile (PLANS.md §1)."""
     from pero_ocr_api_spark.plans.pipeline import extract
     from pero_ocr_api_spark.synth import interleaved_documents
 

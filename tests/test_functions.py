@@ -532,87 +532,6 @@ def test_bm25_plan_topk_and_broadcasts(spark, sf_smoke):
     assert "CartesianProduct" not in plan
 
 
-# ---- distributed BPE trainer (functions/bpe.py) ----
-
-
-def _bpe_reference(word_counts, n_merges):
-    """Pure-Python BPE trainer with identical semantics: weighted pair
-    counts over distinct words, most-frequent pair first (ties broken
-    lexicographically), greedy left-to-right merge."""
-    words = {w: (list(w), n) for w, n in word_counts.items()}
-    merges = []
-    for _ in range(n_merges):
-        counts = {}
-        for syms, n in words.values():
-            for i in range(len(syms) - 1):
-                counts[(syms[i], syms[i + 1])] = (
-                    counts.get((syms[i], syms[i + 1]), 0) + n
-                )
-        if not counts:
-            break
-        pair = min(counts, key=lambda p: (-counts[p], p))
-        if counts[pair] < 2:
-            break
-        a, b = pair
-        merges.append((a, b, counts[pair]))
-        for w, (syms, n) in words.items():
-            out = []
-            for s in syms:
-                if out and out[-1] == a and s == b:
-                    out[-1] = a + b
-                else:
-                    out.append(s)
-            words[w] = (out, n)
-    return merges, {w: syms for w, (syms, n) in words.items()}
-
-
-def test_bpe_train_matches_reference(spark):
-    """The distributed trainer must produce the identical merge list
-    and identical final tokenization as the single-node reference,
-    including overlap handling ('aaa' -> ['aa','a']) and tie-breaks."""
-    from pero_ocr_api_spark.functions.bpe import bpe_apply, bpe_train
-
-    texts = [
-        "low low low lower lowest",
-        "new newer newest low",
-        "aaa aaaa banana bandana",
-        "tie tie atie btie",  # exercises lexicographic tie-breaks
-    ]
-    docs = spark.createDataFrame([(i, t) for i, t in enumerate(texts)],
-                                 "doc_id long, text string")
-    got_merges, got_words = bpe_train(docs, n_merges=12)
-
-    wc = {}
-    for t in texts:
-        for w in t.split():
-            wc[w] = wc.get(w, 0) + 1
-    exp_merges, exp_words = _bpe_reference(wc, 12)
-
-    assert got_merges == exp_merges
-    got_tok = {r["word"]: r["syms"] for r in got_words.collect()}
-    assert got_tok == exp_words
-
-    # bpe_apply with the trained merges reproduces the training-time
-    # tokenization on the same words (train/serve consistency)
-    applied = bpe_apply(
-        spark.createDataFrame([(w,) for w in wc], "word string"), got_merges
-    )
-    assert {r["word"]: r["syms"] for r in applied.collect()} == exp_words
-
-
-def test_bpe_merge_plan_is_codegen(spark):
-    """The merge rewrite must stay JVM-side: no BatchEvalPython, no
-    exchange in the per-word symbol rewrite."""
-    from pero_ocr_api_spark.functions.bpe import _init_symbols, _merge_expr
-    from pyspark.sql import functions as F
-
-    df = spark.createDataFrame([("low",), ("aaa",)], "word string")
-    out = df.withColumn("syms", _merge_expr(_init_symbols(F.col("word")), "a", "a"))
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "BatchEvalPython" not in plan
-    assert "Exchange" not in plan
-
-
 def test_merge_cdc_ops_semantics(spark):
     """Delete wins over update when its seq is higher; update wins when
     ITS seq is higher; inserts land; untouched targets survive; a
