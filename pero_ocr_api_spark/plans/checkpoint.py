@@ -19,10 +19,19 @@ Mechanics:
   action (dynamic overwrite per group = idempotent re-run); the doc and
   span counts and the inference metrics are ``DataFrame.observe``
   metrics of that same write;
+- one planner thread builds group G+1's plan (filter → extract →
+  observe; driver-only, it runs no Spark job) while group G writes, so
+  the Py4J-bound plan construction leaves the critical path; writes,
+  manifest commits, snapshot ids and the injected kill stay on the
+  calling thread in group order, so at most one group's data is ever
+  in flight;
 - a group becomes VISIBLE only when its manifest file
   ``_manifest/group-G.json`` is atomically renamed into place with its
   lineage row (doc/span counts, wall_ms, metrics) — write-then-rename
   gives the atomic results+lineage commit of an Iceberg snapshot;
+  ``wall_ms`` runs from the previous group's commit (or the start of
+  the group loop) to this group's commit, so the lineage walls of a
+  run never sum past the run's wall;
 - resume = skip committed groups (the left-anti of work vs manifest);
   a killed job re-runs only the uncommitted remainder and the final
   table is identical to an uninterrupted run (tests prove it);
@@ -40,11 +49,12 @@ import os
 import shutil
 import time
 import uuid
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from .pipeline import extract, result_docs, result_spans
+from .pipeline import ExtractMetrics, extract, result_docs, result_spans
 
 
 class SimulatedFailure(RuntimeError):
@@ -207,37 +217,60 @@ class CheckpointedExtractor:
         snapshot = max(
             (lin["snapshot_id"] for lin in done.values()), default=0
         )
-        fresh = 0
-        for g in range(self.n_groups):
-            if g in done:
-                continue
-            t0 = time.monotonic()
-            sub = grouped.filter(F.col("group_id") == g).drop("group_id")
-            res = extract(spark, sub, salt_partitions=self.salt_partitions)
-            counts = Observation()
-            self._write_group(g, res.results.observe(
-                counts,
-                F.count("*").alias("doc_count"),
-                F.coalesce(F.sum(F.size("spans")), F.lit(0)).alias("span_count"),
-            ))
-            snapshot += 1
-            lineage = {
-                "run_id": run_id,
-                "n_groups": self.n_groups,
-                "snapshot_id": snapshot,
-                "group_id": g,
-                **counts.get,
-                "wall_ms": int((time.monotonic() - t0) * 1000),
-                "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-                "metrics": res.metrics.as_dict(),
-            }
-            self._commit_group(g, lineage)
-            fresh += 1
-            if fail_after is not None and fresh >= fail_after:
-                raise SimulatedFailure(
-                    f"injected failure after {fresh} group commits"
-                )
+        todo = [g for g in range(self.n_groups) if g not in done]
+        # the planner thread holds exactly one group's plan ahead of the
+        # write on this thread (Mechanics)
+        planner = ThreadPoolExecutor(max_workers=1)
+
+        def plan(i: int):
+            if i < len(todo):
+                return planner.submit(self._plan_group, spark, grouped, todo[i])
+            return None
+
+        try:
+            turn = time.monotonic()
+            ahead = plan(0)
+            for i, g in enumerate(todo):
+                results, counts, metrics = ahead.result()
+                ahead = plan(i + 1)
+                self._write_group(g, results)
+                snapshot += 1
+                lineage = {
+                    "run_id": run_id,
+                    "n_groups": self.n_groups,
+                    "snapshot_id": snapshot,
+                    "group_id": g,
+                    **counts.get,
+                    "wall_ms": int((time.monotonic() - turn) * 1000),
+                    "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
+                    "metrics": metrics.as_dict(),
+                }
+                self._commit_group(g, lineage)
+                turn = time.monotonic()
+                if fail_after is not None and i + 1 >= fail_after:
+                    raise SimulatedFailure(
+                        f"injected failure after {i + 1} group commits"
+                    )
+        finally:
+            # a plan built ahead of a failure is dropped, not waited for
+            planner.shutdown(wait=False, cancel_futures=True)
         return self.committed_groups()
+
+    def _plan_group(
+        self, spark: SparkSession, grouped: DataFrame, g: int
+    ) -> tuple[DataFrame, Observation, ExtractMetrics]:
+        """Group ``g``'s lazy plan: its results with the doc/span counts
+        observed, the counts and the inference metrics.  Driver-only (no
+        Spark job), so it runs on the planner thread."""
+        sub = grouped.filter(F.col("group_id") == g).drop("group_id")
+        res = extract(spark, sub, salt_partitions=self.salt_partitions)
+        counts = Observation()
+        results = res.results.observe(
+            counts,
+            F.count("*").alias("doc_count"),
+            F.coalesce(F.sum(F.size("spans")), F.lit(0)).alias("span_count"),
+        )
+        return results, counts, res.metrics
 
     # ---- reads (only committed groups are visible) ----
     def _read_committed(

@@ -33,9 +33,12 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
+import json
+import threading
 from dataclasses import dataclass, field
 from typing import Optional
 
+from pyspark import Broadcast, SparkContext
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -55,6 +58,28 @@ from ..operators.normalize import (
 )
 
 DEFAULT_ENGINE_CONFIG = {"engine": "stub-ocr", "version": 1}
+
+# one engine-config broadcast per canonical config JSON, shared by every
+# extract on the live SparkContext instead of leaking a broadcast file
+# and block per call; a process has one live context, and a new one
+# replaces the cache (the old context's broadcasts are unusable)
+_broadcasts: tuple[Optional[SparkContext], dict[str, Broadcast]] = (None, {})
+_broadcasts_lock = threading.Lock()
+
+
+def _engine_broadcast(sc: SparkContext, config: dict) -> Broadcast:
+    """The broadcast of ``config`` on ``sc``, created on first use;
+    safe to call from several driver threads."""
+    global _broadcasts
+    key = json.dumps(config, sort_keys=True)
+    with _broadcasts_lock:
+        owner, cache = _broadcasts
+        if owner is not sc:
+            cache = {}
+            _broadcasts = (sc, cache)
+        if key not in cache:
+            cache[key] = sc.broadcast(config)
+        return cache[key]
 
 
 @dataclass
@@ -127,7 +152,9 @@ def extract(
     """Build the extraction plan (lazy).  ``persist_inference`` keeps the
     inference output for callers that run several actions on the result;
     a single action runs inference once without it."""
-    bconf = spark.sparkContext.broadcast(engine_config or DEFAULT_ENGINE_CONFIG)
+    bconf = _engine_broadcast(
+        spark.sparkContext, engine_config or DEFAULT_ENGINE_CONFIG
+    )
     spans = explode_spans(documents)
 
     # ---- text branch: pure codegen ----

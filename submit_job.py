@@ -27,8 +27,6 @@ def main() -> None:
     ap.add_argument("--output", required=True)
     ap.add_argument("--groups", type=int, default=8)
     ap.add_argument("--salt-partitions", type=int, default=None)
-    ap.add_argument("--work-iters", type=int, default=0,
-                    help="emulated per-page model cost (md5 chains)")
     args = ap.parse_args()
 
     from pyspark.sql import SparkSession

@@ -4,6 +4,8 @@ partially-visible (uncommitted) results."""
 
 import glob
 import os
+import threading
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -12,7 +14,7 @@ from pero_ocr_api_spark.constants import KIND_MEDIA
 from pero_ocr_api_spark.operators.inference import stub_infer_one
 from pero_ocr_api_spark.plans import checkpoint
 from pero_ocr_api_spark.plans.checkpoint import CheckpointedExtractor, SimulatedFailure
-from pero_ocr_api_spark.plans.pipeline import explode_spans
+from pero_ocr_api_spark.plans.pipeline import explode_spans, extract
 from pero_ocr_api_spark.synth import interleaved_documents
 
 
@@ -132,6 +134,94 @@ def test_crash_after_compaction_data_before_manifest(
     assert ck.compact(spark, target_files=1)["covers_up_to"] == 4
     assert len(glob.glob(os.path.join(rewrite, "*.parquet"))) == 1
     assert _read_back(spark, ck) == uninterrupted
+
+
+def test_next_group_planned_while_group_writes(
+    spark, docs, uninterrupted, tmp_path_factory, monkeypatch
+):
+    """Each group's write waits until the next group's plan is being
+    built, so the run only completes when planning overlaps writing;
+    the per-group wall_ms then still sums to at most run()'s wall."""
+    ck = CheckpointedExtractor(str(tmp_path_factory.mktemp("ckahead")), n_groups=4)
+    planned = threading.Condition()
+    n_planned = n_written = 0
+    build, write = checkpoint.extract, CheckpointedExtractor._write_group
+
+    def counting_extract(*args, **kwargs):
+        nonlocal n_planned
+        with planned:
+            n_planned += 1
+            planned.notify_all()
+        return build(*args, **kwargs)
+
+    def write_after_next_plan(self, g, results):
+        nonlocal n_written
+        n_written += 1
+        if n_written < 4:
+            with planned:
+                assert planned.wait_for(
+                    lambda: n_planned > n_written, timeout=30
+                ), f"group {g} wrote before the next group was planned"
+        write(self, g, results)
+
+    with monkeypatch.context() as m:
+        m.setattr(checkpoint, "extract", counting_extract)
+        m.setattr(CheckpointedExtractor, "_write_group", write_after_next_plan)
+        t0 = time.monotonic()
+        manifest = ck.run(spark, docs)
+        wall_ms = (time.monotonic() - t0) * 1000
+    assert sorted(manifest) == [0, 1, 2, 3]
+    assert sum(lin["wall_ms"] for lin in manifest.values()) <= wall_ms
+    assert _read_back(spark, ck) == uninterrupted
+
+
+def test_planner_failure_raises_after_earlier_commits(
+    spark, docs, uninterrupted, tmp_path_factory, monkeypatch
+):
+    """A plan that fails to build surfaces from run() once the groups
+    before it are committed; its group lands nothing and a resume
+    completes the table."""
+    out = str(tmp_path_factory.mktemp("ckplanfail"))
+    ck = CheckpointedExtractor(out, n_groups=4)
+    boom = RuntimeError("plan of the third group failed")
+    calls = 0
+    build = checkpoint.extract
+
+    def fail_third(*args, **kwargs):
+        nonlocal calls
+        calls += 1
+        if calls == 3:
+            raise boom
+        return build(*args, **kwargs)
+
+    with monkeypatch.context() as m:
+        m.setattr(checkpoint, "extract", fail_third)
+        with pytest.raises(RuntimeError) as err:
+            ck.run(spark, docs)
+    assert err.value is boom
+    assert sorted(ck.committed_groups()) == [0, 1]
+    assert not os.path.exists(os.path.join(out, "results", "group=2"))
+    ck.run(spark, docs)
+    assert _read_back(spark, ck) == uninterrupted
+
+
+def test_extract_build_runs_no_spark_job(spark, docs, tmp_path):
+    """Building a group's extract plan is driver-only: it runs no Spark
+    job, so building it on the planner thread never runs work outside
+    the caller's job group."""
+    src = str(tmp_path / "staged")
+    docs.withColumn("group_id", F.lit(0)).write.partitionBy("group_id").parquet(src)
+    staged = spark.read.parquet(src)
+    sc = spark.sparkContext
+    tag = "extract-build"
+    sc.setJobGroup(tag, tag)
+    try:
+        extract(spark, staged.filter(F.col("group_id") == 0).drop("group_id"),
+                salt_partitions=4)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(tag)) == 0
 
 
 def test_checkpoint_group_runs_at_most_four_jobs(spark, docs, tmp_path_factory):

@@ -77,3 +77,36 @@ def test_pipeline_accepts_parsed_config(spark, sf_smoke):
     cfg = from_ini(assemble_engine_config(["lidove_noviny", "universal"]))
     res = extract(spark, docs, engine_config=cfg, with_metrics=False)
     assert res.spans.count() > 0
+
+
+def test_extract_reuses_one_engine_broadcast(spark, sf_smoke):
+    """Repeated extracts with one engine config share one broadcast: at
+    most one new broadcast file in the context's temp dir, whatever the
+    config's key order, and the same spans every time.  A new context
+    does not reuse the old context's broadcast."""
+    import os
+
+    from pero_ocr_api_spark.plans.pipeline import _engine_broadcast, extract
+    from pero_ocr_api_spark.synth import interleaved_documents
+
+    docs = interleaved_documents(spark, sf_smoke).orderBy("doc_id").limit(5)
+    temp_dir = spark.sparkContext._temp_dir
+    before = set(os.listdir(temp_dir))
+    cfg = {"engine": "stub-ocr", "version": 1, "batch_pages": 4}
+    outs = []
+    for i in range(4):
+        c = cfg if i % 2 == 0 else dict(reversed(list(cfg.items())))
+        res = extract(spark, docs, engine_config=c, with_metrics=False)
+        outs.append(sorted(tuple(r) for r in res.spans.collect()))
+    assert len(set(os.listdir(temp_dir)) - before) <= 1
+    assert outs[0] and all(o == outs[0] for o in outs)
+
+    # a new context gets its own broadcast
+    class Context:
+        def broadcast(self, value):
+            return object()
+
+    old, new = Context(), Context()
+    first = _engine_broadcast(old, cfg)
+    assert _engine_broadcast(old, dict(reversed(list(cfg.items())))) is first
+    assert _engine_broadcast(new, cfg) is not first
