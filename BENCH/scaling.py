@@ -32,12 +32,13 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 REPLICAS = int(os.environ.get("SCALE_REPLICAS", "12"))
 
 _WORKER = r"""
-import json, os, sys, time
+import hashlib, json, os, sys, time
 sys.path.insert(0, REPO_PLACEHOLDER)
 from pyspark.sql import functions as F
 from pero_ocr_api_spark.session import get_spark
 from pero_ocr_api_spark.plans.pipeline import extract
-from bench import BENCH_ENGINE_CONFIG, materialize_input
+from perfbench.workloads import SCAN_ENGINE as BENCH_ENGINE_CONFIG
+from pero_ocr_api_spark import synth
 
 cores = int(sys.argv[1]); sf_dir = sys.argv[2]
 replicas = int(sys.argv[3]); reps = int(sys.argv[4])
@@ -46,14 +47,15 @@ spark = get_spark(app_name=f"scale-{cores}", parallelism=cores,
                   extra_conf={"spark.ui.showConsoleProgress": "false"})
 
 # --- materialize the replicated input once (shared by both levels);
-# name derives from the base cache (which embeds the synth-source
-# hash), so a synthesis change invalidates this cache too ---
-base_path = materialize_input(spark, sf_dir, "/tmp/spark_graft_bench")
-base_name = os.path.basename(base_path.rstrip("/")).removesuffix(".parquet")
+# the name embeds a hash of the synthesis source, so a synthesis change
+# invalidates this cache ---
+with open(synth.__file__, "rb") as f:
+    synth_v = hashlib.md5(f.read()).hexdigest()[:8]
+base_name = f"interleaved_{os.path.basename(sf_dir.rstrip('/'))}_{synth_v}"
 big_path = os.path.join("/tmp/spark_graft_bench",
                         f"{base_name}_x{replicas}.parquet")
 if not os.path.exists(os.path.join(big_path, "_SUCCESS")):
-    base = spark.read.parquet(base_path)
+    base = synth.interleaved_documents(spark, sf_dir)
     parts = [base.select(F.concat(F.lit(f"r{i}-"), "doc_id").alias("doc_id"),
                          "spans") for i in range(replicas)]
     big = parts[0]

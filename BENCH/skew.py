@@ -40,7 +40,7 @@ from pyspark.sql import functions as F
 from pero_ocr_api_spark.session import get_spark
 from pero_ocr_api_spark.plans.pipeline import extract
 from pero_ocr_api_spark.synth import interleaved_documents
-from bench import BENCH_ENGINE_CONFIG
+from perfbench.workloads import SCAN_ENGINE as BENCH_ENGINE_CONFIG
 
 cores = 32
 sf_dir = sys.argv[1]

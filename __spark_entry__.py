@@ -22,9 +22,7 @@ from pero_ocr_api_spark.functions.cdc import REGISTRY as _CDC
 from pero_ocr_api_spark.functions.cluster import REGISTRY as _CLUSTER
 from pero_ocr_api_spark.functions.curation import REGISTRY as _CUR
 from pero_ocr_api_spark.functions.dedup import REGISTRY as _DEDUP
-from pero_ocr_api_spark.functions.events import REGISTRY as _EV
 from pero_ocr_api_spark.functions.maincontent import REGISTRY as _MC
-from pero_ocr_api_spark.functions.sketches import REGISTRY as _SKETCH
 from pero_ocr_api_spark.functions.similarity import REGISTRY as _SIM
 from pero_ocr_api_spark.functions.text import REGISTRY as _TEXT
 from pero_ocr_api_spark.plans.engine_config import REGISTRY as _CFG
@@ -72,11 +70,12 @@ _DRIVER_WINDOW = [
     # shared/oracle SQL (q17 precedent)
     "cp_sql_tpch_q12_late_mix", "td_text_novelty",
     # changed in round 5 (ADVICE): seq-tie now resolves by op (both
-    # engines), k_bucket uses floor division (both engines), decode
-    # routes by payload magic bytes (fake path bit-identical here)
-    "td_merge_cdc_delete", "td_event_props_variant", "td_mm_decode",
-    # serializer / histogram twins consume the pipeline output the
-    # micro-batching change reorganizes — re-record them as insurance
+    # engines), decode routes by payload magic bytes (fake path
+    # bit-identical here)
+    "td_merge_cdc_delete", "td_mm_decode",
+    # serializer / histogram twins over the pipeline output; the txt
+    # member and the confidence histogram are now projections of the
+    # PAGE/txt fan-out and of the raw lines — re-record them
     "extract_serialize_txt", "extract_serialize_alto",
     "extract_serialize_page", "extract_conf_histogram",
     # NEW in round 5 (VERDICT r4 item 8): cross-encoder-style rerank
@@ -161,23 +160,15 @@ _DRIVER_WINDOW = [
     # evicted entries
     "td_sim_bruteforce_topk", "td_dedup_embedding_cosine",
     "td_sim_ivf_topk", "td_dedup_tfidf_cosine",
-    # re-confirmation fill: r04-green entries, unchanged since (the two
-    # rows-only sketches td_sketch_{quantiles,distinct} are demoted past
-    # slot 50 per VERDICT item 1c — their "err: no_oracle" rows were
-    # spending hash-verifiable window slots)
+    # re-confirmation fill: r04-green entries, unchanged since
     "td_dedup_minhash_lsh", "td_sim_ann_lsh_topk",
     "td_text_bm25", "td_text_zipf",
     # touched in round 5 (fuzz-gate find): ntile ordering now pins
-    # NULLS LAST on both engines — re-record it; td_event_markov
-    # (r04-green, untouched) is the evicted fill entry
+    # NULLS LAST on both engines — re-record it
     "td_length_deciles",
     "cp_sql_tpch_q2_min_cost", "cp_sql_tpch_q9_profit",
     "td_dedup_semantic", "td_dedup_incremental", "td_text_bpe_pairs",
-    "td_curation_dsir", "td_profile_documents",
-    "td_sim_ivfpq_search", "td_profile_key_skew",
-    # (td_event_cooccurrence, td_emb_dim_stats and td_dedup_tfidf_cosine
-    # — r04-green, untouched — are the fill entries evicted for the
-    # three new round-5 ops above)
+    "td_curation_dsir", "td_sim_ivfpq_search",
     "td_curation_gumbel_sample",
     # touched in round 5 (fuzz-gate find): the exact-dedup oracle now
     # mirrors Spark's empty-vs-NULL fingerprint semantics
@@ -197,11 +188,9 @@ def _registry() -> dict[str, tuple]:
     reg.update(_TEXT)
     reg.update(_MC)
     reg.update(_DEDUP)
-    reg.update(_EV)
     reg.update(_CLUSTER)
     reg.update(_CDC)
     reg.update(_CUR)
-    reg.update(_SKETCH)
     reg.update(_SIM)
     reg.update(_MM)
     reg.update(_SQL)

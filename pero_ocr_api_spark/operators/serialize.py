@@ -3,7 +3,9 @@ the reference's per-page ALTO XML / PAGE XML / plain-text artifacts
 (/root/reference/processing_client/run_client.py:204-222, zip member
 naming /root/reference/app/main/routes.py:252-254).
 
-All three are pure JVM-side string assembly over the ordered span rows:
+Two serializers build all three: ``serialize_alto`` the ALTO member,
+``serialize_artifacts`` the PAGE member and the plain text.  Both are
+pure JVM-side string assembly over the ordered span rows:
 collect_list(struct(order, ...)) → array_sort → transform/format_string
 → array_join.  No UDFs; exact-match testable.
 """
@@ -24,20 +26,6 @@ def xml_escape(col: Column) -> Column:
     out = F.replace(out, F.lit("<"), F.lit("&lt;"))
     out = F.replace(out, F.lit(">"), F.lit("&gt;"))
     return F.replace(out, F.lit('"'), F.lit("&quot;"))
-
-
-def _ordered_texts(col_struct):
-    return F.transform(F.array_sort(col_struct), lambda s: s["text"])
-
-
-def serialize_txt(spans: DataFrame) -> DataFrame:
-    """(doc_id, order, text, ...) → (doc_id, txt): newline-joined text in
-    reading order (run_client.py:70-74)."""
-    return spans.groupBy("doc_id").agg(
-        F.array_join(
-            _ordered_texts(F.collect_list(F.struct("order", "text"))), "\n"
-        ).alias("txt")
-    )
 
 
 def serialize_alto(

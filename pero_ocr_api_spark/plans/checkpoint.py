@@ -19,6 +19,9 @@ Mechanics:
   action (dynamic overwrite per group = idempotent re-run); the doc and
   span counts and the inference metrics are ``DataFrame.observe``
   metrics of that same write;
+- a group with no staged docs (no ``_staged/group_id=G`` directory)
+  is neither planned nor written: it commits a lineage row with zero
+  counts and zero metrics, in commit order, without a Spark job;
 - one planner thread builds group G+1's plan (filter → extract →
   observe; driver-only, it runs no Spark job) while group G writes, so
   the Py4J-bound plan construction leaves the critical path; writes,
@@ -156,6 +159,19 @@ class CheckpointedExtractor:
             "group_id", F.pmod(F.xxhash64("doc_id"), F.lit(self.n_groups)).cast("int")
         )
 
+    def _staged_dir(self) -> str:
+        return os.path.join(self.output_dir, "_staged")
+
+    def _staged_groups(self) -> set[int]:
+        """Groups with at least one staged document: the staging write
+        makes a ``group_id=G`` directory only for a group it has rows
+        for, so this is a file listing, not a Spark job."""
+        return {
+            int(d.split("=", 1)[1])
+            for d in os.listdir(self._staged_dir())
+            if d.startswith("group_id=")
+        }
+
     def _stage_input(self, spark: SparkSession, documents: DataFrame) -> DataFrame:
         """Write the grouped input ONCE, partitioned by group_id, so each
         group iteration reads only its own partition (partition pruning)
@@ -165,7 +181,7 @@ class CheckpointedExtractor:
         same rows even if the source moved.  On a real Iceberg table
         bucketed by doc_id this staging step disappears — the layout
         already is the grouping."""
-        staged = os.path.join(self.output_dir, "_staged")
+        staged = self._staged_dir()
         meta = self._meta()
         if "fingerprint" not in meta:
             # the staging write observes the source's fingerprint; writing
@@ -218,32 +234,42 @@ class CheckpointedExtractor:
             (lin["snapshot_id"] for lin in done.values()), default=0
         )
         todo = [g for g in range(self.n_groups) if g not in done]
-        # the planner thread holds exactly one group's plan ahead of the
-        # write on this thread (Mechanics)
+        occupied = self._staged_groups()
+        # the planner thread holds exactly one occupied group's plan
+        # ahead of the write on this thread (Mechanics)
         planner = ThreadPoolExecutor(max_workers=1)
+        to_plan = iter([g for g in todo if g in occupied])
 
-        def plan(i: int):
-            if i < len(todo):
-                return planner.submit(self._plan_group, spark, grouped, todo[i])
-            return None
+        def plan_next():
+            g = next(to_plan, None)
+            if g is None:
+                return None
+            return planner.submit(self._plan_group, spark, grouped, g)
 
         try:
             turn = time.monotonic()
-            ahead = plan(0)
+            ahead = plan_next()
             for i, g in enumerate(todo):
-                results, counts, metrics = ahead.result()
-                ahead = plan(i + 1)
-                self._write_group(g, results)
+                if g in occupied:
+                    results, observed, metrics = ahead.result()
+                    ahead = plan_next()
+                    self._write_group(g, results)
+                    counts, metrics = observed.get, metrics.as_dict()
+                else:
+                    # no staged docs: nothing to plan or write, and an
+                    # empty group's observations would never be filled
+                    counts = {"doc_count": 0, "span_count": 0}
+                    metrics = ExtractMetrics().as_dict()
                 snapshot += 1
                 lineage = {
                     "run_id": run_id,
                     "n_groups": self.n_groups,
                     "snapshot_id": snapshot,
                     "group_id": g,
-                    **counts.get,
+                    **counts,
                     "wall_ms": int((time.monotonic() - turn) * 1000),
                     "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-                    "metrics": metrics.as_dict(),
+                    "metrics": metrics,
                 }
                 self._commit_group(g, lineage)
                 turn = time.monotonic()
@@ -295,7 +321,7 @@ class CheckpointedExtractor:
         floor = comp["covers_up_to"] if comp else -1
         groups = sorted(
             g for g, lin in committed.items()
-            if floor < lin["snapshot_id"] <= effective
+            if floor < lin["snapshot_id"] <= effective and lin["doc_count"]
         )
         paths = [os.path.join(self.output_dir, comp["path"])] if comp else []
         for g in groups:

@@ -103,7 +103,6 @@ class ExtractResult:
     results: DataFrame     # doc_id, score, status, spans[order, kind, text, media_ref]
     spans: DataFrame       # doc_id, order, kind, text, media_ref
     docs: DataFrame        # doc_id, score, status
-    spans_conf: DataFrame = None  # unordered output lines + conf
     raw_spans: DataFrame = None   # pre-strip/pre-arabic-fix lines for the
                                   # ALTO path (run_client.py:210-211 builds
                                   # ALTO before the confidence strip and
@@ -247,7 +246,6 @@ def extract(
         results=results,
         spans=result_spans(results),
         docs=result_docs(results),
-        spans_conf=lines.filter(F.col("kind").isNotNull()).drop("error"),
         raw_spans=raw_spans,
         metrics=metrics,
         persisted=inferred if persist_inference else None,

@@ -10,11 +10,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.serialize import (
-    serialize_alto,
-    serialize_artifacts,
-    serialize_txt,
-)
+from ..constants import KIND_TEXT
+from ..operators.normalize import confident
+from ..operators.serialize import serialize_alto, serialize_artifacts
 from ..plans.pipeline import extract
 from ..synth import exploded_spans, interleaved_documents
 
@@ -44,8 +42,10 @@ def q_doc_results(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_serialize_txt(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Reading-order plain-text serialization per document."""
-    return serialize_txt(_run(spark, sf_dir).spans)
+    """Reading-order plain-text serialization per document: the txt
+    member of the PAGE/txt fan-out."""
+    spans = _run(spark, sf_dir).spans
+    return serialize_artifacts(spans).select("doc_id", "txt")
 
 
 def q_serialize_alto(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -62,12 +62,15 @@ def q_serialize_artifacts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_conf_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Span counts + mean confidence by kind over the pipeline output."""
-    res = _run(spark, sf_dir)
+    # the output lines: every text line and the confident media lines
+    # (the arabic fix changes text, not conf)
+    raw = _run(spark, sf_dir).raw_spans
+    lines = raw.filter((F.col("kind") == KIND_TEXT) | confident(F.col("conf")))
     # avg as round(sum,4)/count: a raw float avg differs between engines
     # in the last ulps (summation order) and can flip a 6-dp rounding at
     # a boundary; rounding the sum first (conf values are 2-dp decimals,
     # ulp noise ~1e-12 << 5e-5) makes the division identical
-    return res.spans_conf.groupBy("kind").agg(
+    return lines.groupBy("kind").agg(
         F.count("*").alias("n_spans"),
         F.round(F.round(F.sum("conf"), 4) / F.count("conf"), 6).alias("avg_conf"),
     )

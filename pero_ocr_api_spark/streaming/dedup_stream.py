@@ -1,7 +1,7 @@
-"""Streaming exact deduplication — the training-data dedup plane as a
-Structured Streaming operator: first-seen wins, duplicate arrivals
-within the watermark horizon are dropped by native stateful
-``dropDuplicatesWithinWatermark`` (no foreachBatch, no custom state).
+"""Streaming exact deduplication of incoming documents: first-seen
+wins, duplicate arrivals within the watermark horizon are dropped by
+native stateful ``dropDuplicatesWithinWatermark`` (no foreachBatch, no
+custom state).
 
 Scale story: state is ONE key (the 128-bit content hash) per distinct
 document seen within the watermark horizon, evicted once event time
@@ -10,11 +10,9 @@ plain ``dropDuplicates`` whose state grows forever.  The content hash
 is computed JVM-side (md5 of the text plane), so the stream never
 crosses into Python.
 
-Pairs with the batch operators in functions/dedup.py: the batch exact
-dedup (`td_dedup_exact`) is the full-corpus sweep; this is the
-keep-the-firehose-clean front door.  Output equality with the batch
-dedup over the same (in-horizon) input is asserted in
-tests/test_streaming.py.
+The batch twin is ``dropDuplicates`` on the same content hash over the
+whole input.  Output equality with it over the same (in-horizon)
+input is asserted in tests/test_streaming.py.
 """
 
 from __future__ import annotations

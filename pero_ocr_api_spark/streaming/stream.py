@@ -9,10 +9,14 @@ document files have arrived, exactly once, then stops — no polling loop,
 no redelivery sweep (Spark's checkpoint + write-ahead offsets replace the
 60 s PROCESSING-timeout re-queue of /root/reference/app/__init__.py:71-119).
 
-The per-doc window sort (reading order) is not stream-expressible
-(non-time window), so the pipeline runs inside ``foreachBatch`` — each
-micro-batch is a bounded DataFrame processed by the SAME batch plan
-(plans/pipeline.extract), then appended to the sink.  Output equality
+A document arrives whole (one row with all its spans), so a
+micro-batch already holds every span of its documents.  The plan's one
+``groupBy(doc_id)`` (reading order, score, status) has no event time,
+so as a streaming aggregation it could not emit in append mode and
+would keep state for every document ever seen.  The pipeline therefore
+runs inside ``foreachBatch`` — each micro-batch is a bounded DataFrame
+processed by the SAME batch plan (plans/pipeline.extract), then
+appended to the sink.  Output equality
 with the pure batch run is asserted in tests/test_streaming.py.
 """
 

@@ -149,50 +149,6 @@ def rate_limited_notifications(
     return query
 
 
-SESSION_EVENTS_SCHEMA = "event_id bigint, ts timestamp, user_id bigint"
-
-
-def sessionize_stream(
-    spark: SparkSession,
-    input_dir: str,
-    output_dir: str,
-    checkpoint_dir: str,
-    gap: str = "30 minutes",
-    watermark: str = "10 minutes",
-):
-    """Streaming twin of the batch `td_sessionize` operator
-    (`functions/events.q_sessionize`): gap-based session windows via
-    the native `F.session_window` stateful aggregation.  Sessions merge
-    while consecutive events are ≤ gap apart — the SAME boundary rule
-    as the batch lag-gap formulation (an event at exactly prev+gap
-    extends the session; see test_streaming_sessionize_equals_batch) —
-    and a session emits exactly once (append mode) when the watermark
-    passes its end.  State per key is one (start, end, count) triple:
-    bounded, mergeable, no per-event retention."""
-    stream = (
-        spark.readStream.schema(SESSION_EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(input_dir)
-    )
-    sessions = (
-        stream.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap).alias("w"), "user_id")
-        .agg(F.count("*").alias("n_events"), F.min("ts").alias("start_ts"),
-             F.max("ts").alias("end_ts"))
-        .select("user_id", "n_events", "start_ts", "end_ts")
-    )
-    query = (
-        sessions.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return query
-
-
 def sliding_rate_counts(
     spark: SparkSession,
     input_dir: str,

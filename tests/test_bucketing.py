@@ -44,39 +44,6 @@ def test_bucketed_join_is_shuffle_free(spark, sf_smoke):
         spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
-def test_bucketed_events_windows_shuffle_free(spark, sf_smoke):
-    """The 100 TB layout story for the events plane: over a table
-    bucketed by user_id, sessionization (two windows + per-session
-    agg) and the as-of join (union-tag + one window) run with ZERO
-    Exchanges — the bucket layout IS the shuffle, paid once at write
-    time.  Results are identical to the path-based run."""
-    from pero_ocr_api_spark.functions.events import (
-        asof_attribution,
-        q_asof_attribution,
-        q_sessionize,
-        sessionize_events,
-    )
-    from pero_ocr_api_spark.session import load_table
-
-    ev = load_table(spark, sf_smoke, "events")
-    write_bucketed(ev, "events_b", n_buckets=8, key="user_id")
-    bucketed = spark.table("events_b")
-
-    sess = sessionize_events(bucketed)
-    assert plan_has_no_exchange(sess), (
-        sess._jdf.queryExecution().executedPlan().toString()
-    )
-    asof = asof_attribution(bucketed)
-    assert plan_has_no_exchange(asof), (
-        asof._jdf.queryExecution().executedPlan().toString()
-    )
-
-    def key_set(df):
-        return {tuple(r) for r in df.collect()}
-
-    assert key_set(sess) == key_set(q_sessionize(spark, sf_smoke))
-    assert key_set(asof) == key_set(q_asof_attribution(spark, sf_smoke))
-    spark.sql("DROP TABLE IF EXISTS events_b")
 import glob
 import os
 

@@ -10,11 +10,13 @@ import time
 import pytest
 from pyspark.sql import functions as F
 
+from pero_ocr_api_spark import oracle
 from pero_ocr_api_spark.constants import KIND_MEDIA
 from pero_ocr_api_spark.operators.inference import stub_infer_one
 from pero_ocr_api_spark.plans import checkpoint
 from pero_ocr_api_spark.plans.checkpoint import CheckpointedExtractor, SimulatedFailure
 from pero_ocr_api_spark.plans.pipeline import explode_spans, extract
+from pero_ocr_api_spark.session import load_table
 from pero_ocr_api_spark.synth import interleaved_documents
 
 
@@ -82,6 +84,70 @@ def test_kill_and_resume_identical(spark, docs, uninterrupted, tmp_path_factory)
     assert {r.run_id for r in lineage} == {"try1", "try2"}
     # the observed inference metrics are exact without a persist
     metrics = [lin["metrics"] for lin in half.committed_groups().values()]
+    assert {k: sum(m[k] for m in metrics) for k in metrics[0]} == _oracle_metrics(docs)
+
+
+def test_empty_groups_commit_without_a_plan(
+    spark, sf_smoke, tmp_path_factory, monkeypatch
+):
+    """64 groups over at most 20 docs leave most groups without a
+    staged doc.  Those commit zero lineage rows in commit order and
+    are never planned or written; a kill, a resume and the read-back
+    still give the oracle's spans, scores and status, and the summed
+    metrics stay exact."""
+    docs = interleaved_documents(spark, sf_smoke).filter(
+        F.col("doc_id") < "doc-000020"
+    )
+    flat = load_table(spark, sf_smoke, "documents").filter(F.col("doc_id") < 20)
+    expected = oracle.extract_all(
+        [(r.doc_id, r.text) for r in flat.select("doc_id", "text").collect()]
+    )
+    ck = CheckpointedExtractor(str(tmp_path_factory.mktemp("ckempty")), n_groups=64)
+    n_planned = {}
+    build = checkpoint.extract
+
+    def counting_extract(*args, **kwargs):
+        n_planned[run_id] = n_planned.get(run_id, 0) + 1
+        return build(*args, **kwargs)
+
+    with monkeypatch.context() as m:
+        m.setattr(checkpoint, "extract", counting_extract)
+        run_id = "try1"
+        with pytest.raises(SimulatedFailure):
+            ck.run(spark, docs, run_id=run_id, fail_after=32)
+        assert len(ck.committed_groups()) == 32
+        run_id = "try2"
+        ck.run(spark, docs, run_id=run_id)
+
+    committed = ck.committed_groups()
+    assert sorted(committed) == list(range(64))
+    assert [committed[g]["snapshot_id"] for g in range(64)] == list(range(1, 65))
+    occupied = {g for g, lin in committed.items() if lin["doc_count"]}
+    assert 0 < len(occupied) < 64
+    # only occupied groups are planned; the kill drops the one plan
+    # built ahead, and the resume builds it again
+    by_run = {
+        rid: sum(1 for g in occupied if committed[g]["run_id"] == rid)
+        for rid in ("try1", "try2")
+    }
+    assert by_run["try1"] > 0 and by_run["try2"] > 0
+    assert n_planned == {"try1": by_run["try1"] + 1, "try2": by_run["try2"]}
+    for g, lin in committed.items():
+        assert os.path.exists(ck._group_path(g)) == (g in occupied)
+        if g not in occupied:
+            assert lin["span_count"] == 0
+            assert set(lin["metrics"].values()) == {0}
+
+    spans = {}
+    for r in ck.read_spans(spark).collect():
+        spans.setdefault(r.doc_id, []).append((r.order, r.kind, r.text, r.media_ref))
+    got_docs = {r.doc_id: (r.score, r.status) for r in ck.read_docs(spark).collect()}
+    assert set(got_docs) == set(expected)
+    for doc_id, od in expected.items():
+        assert sorted(spans.get(doc_id, [])) == od.spans, doc_id
+        assert got_docs[doc_id] == (od.score, od.status), doc_id
+    assert sum(lin["doc_count"] for lin in committed.values()) == len(expected)
+    metrics = [lin["metrics"] for lin in committed.values()]
     assert {k: sum(m[k] for m in metrics) for k in metrics[0]} == _oracle_metrics(docs)
 
 

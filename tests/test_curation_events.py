@@ -1,9 +1,7 @@
-"""Behavior pins for the round-3 events operators (range join,
-hierarchical rollup) and the curation plane (decontamination,
-stratified sampling, PII redaction) — edge semantics the sf-parity
-test can't isolate."""
-
-import datetime as dt
+"""Behavior pins for the curation plane (decontamination, stratified
+sampling, PII redaction, winsorizing, language rebalancing), the PQ
+codebook, and the Spark/DuckDB floor-division idiom — edge semantics
+the sf-parity test can't isolate."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -12,64 +10,10 @@ from pero_ocr_api_spark.functions.curation import (
     PII_PATTERNS,
     SAMPLE_DEFAULT_RATE,
     SAMPLE_RATES,
-    redact_pii,
-)
-from pero_ocr_api_spark.functions.events import (
-    RANGE_WINDOW_SECS,
-    q_range_join,
-    q_ts_rollup,
-)
-from pero_ocr_api_spark.functions.curation import (
     q_decontaminate,
     q_stratified_sample,
+    redact_pii,
 )
-
-
-def _write_events(spark, tmp_path, rows):
-    df = spark.createDataFrame(
-        rows, "event_id bigint, ts timestamp_ntz, user_id bigint, "
-        "event_type string, value double, props string"
-    )
-    df.write.mode("overwrite").parquet(str(tmp_path / "events.parquet"))
-    return str(tmp_path)
-
-
-def test_range_join_boundaries(spark, tmp_path):
-    """Click at exactly the window start is IN, at start+window is OUT,
-    a click in the window's second time-bucket still matches, and a
-    window with zero clicks survives with n_clicks=0."""
-    t0 = dt.datetime(2024, 1, 1, 0, 30, 0)  # mid-bucket so window spans 2 bins
-
-    def sec(s):
-        return t0 + dt.timedelta(seconds=s)
-
-    rows = [
-        (1, t0, 7, "signup", 0.0, ""),
-        (2, sec(0), 7, "click", 1.0, ""),              # at start: IN
-        (3, sec(RANGE_WINDOW_SECS - 1), 7, "click", 2.0, ""),  # 2nd bin: IN
-        (4, sec(RANGE_WINDOW_SECS), 7, "click", 4.0, ""),      # at end: OUT
-        (5, sec(-1), 7, "click", 8.0, ""),              # before: OUT
-        (6, t0, 9, "signup", 0.0, ""),                  # no clicks at all
-        (7, sec(10), 8, "click", 16.0, ""),             # other user: OUT
-    ]
-    sf = _write_events(spark, tmp_path, rows)
-    got = {r["window_id"]: r for r in q_range_join(spark, sf).collect()}
-    assert got[1]["n_clicks"] == 2 and got[1]["click_value"] == 3.0
-    assert got[6]["n_clicks"] == 0 and got[6]["click_value"] == 0.0
-
-
-def test_ts_rollup_grains_consistent(spark, sf_smoke):
-    out = q_ts_rollup(spark, sf_smoke)
-    agg = {
-        r["grain"]: (r["n"], r["buckets"])
-        for r in out.groupBy("grain")
-        .agg(F.sum("n_events").alias("n"), F.count("*").alias("buckets"))
-        .collect()
-    }
-    # every grain re-aggregates the same events: totals identical
-    assert agg["minute"][0] == agg["hour"][0] == agg["day"][0]
-    # strictly coarser granularity
-    assert agg["minute"][1] > agg["hour"][1] > agg["day"][1]
 
 
 def _write_docs(spark, tmp_path, rows):
@@ -152,68 +96,6 @@ def test_pii_redaction_fixture(spark):
     assert all(got[3][f"n_{k}"] == 0 for k in PII_PATTERNS)
 
 
-def test_range_join_plan_is_equi_join(spark, sf_smoke):
-    """The bucketed formulation must plan as a hash EQUI-join (bin key
-    in the join condition), never BroadcastNestedLoop/Cartesian."""
-    plan = q_range_join(spark, sf_smoke)._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoop" not in plan
-
-
-def test_funnel_ordering_semantics(spark, tmp_path):
-    """A purchase BEFORE the user's first post-signup click does not
-    complete the funnel; a click at exactly the signup timestamp does
-    count (inclusive at-or-after)."""
-    t0 = dt.datetime(2024, 1, 5, 12, 0, 0)
-
-    def sec(s):
-        return t0 + dt.timedelta(seconds=s)
-
-    rows = [
-        # user 1: purchase precedes the click -> stage 2, purchase AFTER
-        # the click at +20 completes via the later purchase at +30
-        (1, t0, 1, "signup", 0.0, ""),
-        (2, sec(10), 1, "purchase", 0.0, ""),
-        (3, sec(20), 1, "click", 0.0, ""),
-        # user 2: click exactly at signup ts counts; no purchase
-        (4, t0, 2, "signup", 0.0, ""),
-        (5, t0, 2, "click", 0.0, ""),
-        # user 3: click before signup does NOT count -> stage 1
-        (6, sec(-5), 3, "click", 0.0, ""),
-        (7, t0, 3, "signup", 0.0, ""),
-        # user 1 completing purchase
-        (8, sec(30), 1, "purchase", 0.0, ""),
-    ]
-    sf = _write_events(spark, tmp_path, rows)
-    from pero_ocr_api_spark.functions.events import q_funnel
-
-    got = {r["user_id"]: r for r in q_funnel(spark, sf).collect()}
-    assert got[1]["stage"] == 3
-    assert got[1]["purchase_ts"] == sec(30)  # not the pre-click purchase
-    assert got[2]["stage"] == 2 and got[2]["click_ts"] == t0
-    assert got[3]["stage"] == 1 and got[3]["click_ts"] is None
-
-
-def test_retention_cohort_day_zero_covers_all_users(spark, sf_smoke):
-    """Every user is active on their own cohort day, so summing
-    day_offset=0 counts across cohorts equals the distinct user count."""
-    from pero_ocr_api_spark.functions.events import q_retention_cohorts
-    from pero_ocr_api_spark.session import load_table
-
-    out = q_retention_cohorts(spark, sf_smoke)
-    day0 = (
-        out.filter(F.col("day_offset") == 0)
-        .agg(F.sum("n_users").alias("n"))
-        .collect()[0]["n"]
-    )
-    total = (
-        load_table(spark, sf_smoke, "events")
-        .select("user_id").distinct().count()
-    )
-    assert day0 == total
-    assert out.filter(F.col("day_offset") < 0).count() == 0
-
-
 def test_winsorize_clamps_into_band(spark, sf_smoke):
     from pero_ocr_api_spark.functions.curation import q_length_winsorize
 
@@ -244,36 +126,6 @@ def test_pq_encode_codebook_vectors_are_exact(spark, sf_smoke):
         assert len(parts) == PQ_M
         assert all(0 <= int(p) < PQ_K for p in parts)
         assert r["quant_err"] >= 0.0
-
-
-def test_rolling_range_frame_semantics(spark):
-    """RANGE (not ROWS) frame pins: same-timestamp rows share one
-    frame (both see both), an event exactly at the 7-day boundary is
-    included, one second past it is excluded."""
-    from datetime import datetime, timedelta
-
-    from pero_ocr_api_spark.functions.events import ROLL_WINDOW_S, q_rolling_7d
-
-    base = datetime(2024, 1, 10, 12, 0, 0)
-    rows = [
-        (1, 100, base - timedelta(seconds=ROLL_WINDOW_S + 1), 1.0),  # too old
-        (1, 101, base - timedelta(seconds=ROLL_WINDOW_S), 2.0),      # boundary: in
-        (1, 102, base, 4.0),   # same ts as 103
-        (1, 103, base, 8.0),   # same ts as 102
-    ]
-    df = spark.createDataFrame(
-        rows, "user_id long, event_id long, ts timestamp, value double"
-    )
-    import os as _os
-    import tempfile
-    d = tempfile.mkdtemp()
-    df.write.mode("overwrite").parquet(_os.path.join(d, "events.parquet"))
-    got = {r.event_id: (r.n_7d, r.sum_7d) for r in q_rolling_7d(spark, d).collect()}
-    assert got[100] == (1, 1.0)
-    assert got[101] == (2, 3.0)              # sees 100 (within ITS window)
-    # 102/103 share the frame: 101 (exactly 7d back) + both same-ts rows
-    assert got[102] == (3, 14.0)
-    assert got[103] == (3, 14.0)
 
 
 def test_lang_rebalance_hits_target_mixture(spark, sf_correct):

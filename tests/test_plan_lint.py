@@ -29,15 +29,12 @@ _BNLJ_OK = {
     "td_sim_hard_negatives",   # same fixed query set crossed for mining
     "td_sim_kmeans_step",    # 8 seed centroids crossed for assignment
     "td_curation_dsir",      # 1-row feature-total aggregate crossed in
-    "td_profile_key_skew",   # 1-row global-stats aggregate crossed in
-    "td_event_cooccurrence", # 1-row n_users aggregate crossed in
     "td_text_idf",           # 1-row corpus-size aggregate crossed in
     "td_text_unigram_ce",    # 1-row corpus-size aggregate crossed in
     "td_text_bigram_ce",     # 1-row vocab-size aggregate crossed into
                              # the |vocab|-row history table (not the
                              # per-bigram stream)
     "td_lang_rebalance",     # 1-row waterfill-scale aggregate crossed in
-    "td_sketch_quantiles",   # 3-row quantile estimate crossed for rank_err
     "td_text_bm25",          # 1-row corpus-stats aggregate crossed in
     # partsupp derivation: part × a fixed 4-row VALUES list (the
     # deterministic in-SQL stand-in for the absent partsupp table)
@@ -61,3 +58,12 @@ def test_plan_has_no_scale_antipatterns(spark, sf_smoke, name, fn):
         assert "BroadcastNestedLoopJoin" not in plan, (
             f"{name}: nested-loop join outside the tiny-relation whitelist"
         )
+
+
+def test_whitelists_name_registered_queries():
+    """Every _EAGER / _BNLJ_OK entry must name a registered query: a
+    stale entry left behind by a deleted query would silently exempt
+    whatever later reuses the name."""
+    registered = set(entry_mod.queries())
+    assert _EAGER <= registered, sorted(_EAGER - registered)
+    assert _BNLJ_OK <= registered, sorted(_BNLJ_OK - registered)

@@ -367,10 +367,8 @@ _event_type = st.sampled_from(
 )
 @given(n=st.integers(min_value=1, max_value=40), data=st.data())
 def test_fuzz_event_ops_cross_engine(spark, tmp_path_factory, n, data):
-    """The whole events plane (asof, sessionize, range join, rollup,
-    funnel, cohorts, rolling window, markov, variant props,
-    co-occurrence, robust outliers) must agree with its DuckDB twins on
-    ARBITRARY event streams, not just the frozen testdata.
+    """The events-table op (SCD2 versions) must agree with its DuckDB
+    twin on ARBITRARY event streams, not just the frozen testdata.
 
     Determinism contract encoded in the generator: timestamps are
     globally UNIQUE (ASOF/lag tie order at equal ts is engine-defined,
@@ -382,7 +380,6 @@ def test_fuzz_event_ops_cross_engine(spark, tmp_path_factory, n, data):
     from datetime import datetime, timedelta
 
     from pero_ocr_api_spark.compare import run_pair
-    from pero_ocr_api_spark.functions.events import REGISTRY as EV
 
     offsets = data.draw(
         st.lists(
@@ -416,15 +413,11 @@ def test_fuzz_event_ops_cross_engine(spark, tmp_path_factory, n, data):
         "event_type string, value double, props string",
     ).coalesce(1).write.mode("overwrite").parquet(str(d / "events.parquet"))
 
-    # td_scd2_versions (cdc registry) and td_profile_key_skew
-    # (sketches registry) also read the events table — same
-    # determinism contract (unique non-NULL ts)
+    # td_scd2_versions (cdc registry) reads the events table
     from pero_ocr_api_spark.functions.cdc import REGISTRY as CDC
-    from pero_ocr_api_spark.functions.sketches import REGISTRY as SK
 
-    for name, reg in [(n, EV) for n in sorted(EV)] + [
+    for name, reg in [
         ("td_scd2_versions", CDC),
-        ("td_profile_key_skew", SK),
     ]:
         fn, sql = reg[name]
         errs = run_pair(spark, str(d), fn, sql)
@@ -695,7 +688,7 @@ _xml_text = st.one_of(
 )
 def test_fuzz_extraction_mm_cross_engine(spark, tmp_path_factory, texts, data):
     """The flagship extraction pipeline, its serializers, and the
-    multimodal/main-content/profiler planes must agree with their
+    multimodal/main-content planes must agree with their
     DuckDB twins on ARBITRARY corpora — the spans table derives
     deterministically from documents (synth.exploded_spans ==
     SQL_EXPLODED_SPANS_CTE), so random text fuzzes the whole
@@ -733,7 +726,6 @@ def test_fuzz_extraction_mm_cross_engine(spark, tmp_path_factory, texts, data):
         "td_mm_decode", "td_mm_features", "td_mm_resize_plan",
         "td_mm_frame_sample",
         "td_mc_blocks", "td_mc_extract",
-        "td_profile_documents",
     ]:
         errs = run_pair(spark, str(d), qs[name], osql[name])
         assert errs == [], (name, errs, rows)

@@ -316,67 +316,6 @@ def test_streaming_cancel_racing_finish(spark, tmp_path_factory):
     assert latest == {p: fold_events(None, evs) for p, evs in per_page.items()}
 
 
-def test_streaming_sessionize_equals_batch(spark, tmp_path_factory):
-    """The F.session_window streaming fold produces the SAME sessions
-    as the batch lag-gap formulation (td_sessionize), including the
-    exact-gap boundary (an event at exactly prev+30min EXTENDS the
-    session in both).  A far-future sentinel user advances the
-    watermark so every real session emits before the drain ends."""
-    import datetime as dt
-
-    from pero_ocr_api_spark.functions.events import q_sessionize
-    from pero_ocr_api_spark.streaming.windows import sessionize_stream
-
-    base = tmp_path_factory.mktemp("sessstream")
-    in_dir, out_dir, ckpt = str(base / "in"), str(base / "out"), str(base / "ck")
-    os.makedirs(in_dir, exist_ok=True)
-
-    t0 = dt.datetime(2024, 1, 1, 10, 0, 0)
-    sec = lambda s: t0 + dt.timedelta(seconds=s)
-    rows = [
-        # user 1: 3 events, middle pair exactly 1800 s apart -> ONE session
-        (1, sec(0), 1), (2, sec(1800), 1), (3, sec(1900), 1),
-        # user 1: second session after a 1801 s gap from event 3
-        (4, sec(1900 + 1801), 1),
-        # user 2: single event
-        (5, sec(500), 2),
-    ]
-    schema = "event_id bigint, ts timestamp, user_id bigint"
-    # batch 1: the real events; batch 2: a far-future sentinel user that
-    # advances the watermark past every real session's end
-    spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-        "append"
-    ).parquet(in_dir)
-    spark.createDataFrame(
-        [(99, sec(10 * 86400), 999)], schema
-    ).coalesce(1).write.mode("append").parquet(in_dir)
-
-    sessionize_stream(spark, in_dir, out_dir, ckpt)
-
-    got = {
-        (r.user_id, r.start_ts, r.end_ts, r.n_events)
-        for r in spark.read.parquet(out_dir).collect()
-        if r.user_id != 999
-    }
-
-    # batch twin over the same events (sans sentinel), reshaped to the
-    # same key: (user, start, end, n)
-    batch_dir = str(base / "batch")
-    spark.createDataFrame(
-        rows,
-        "event_id bigint, ts timestamp_ntz, user_id bigint",
-    ).selectExpr(
-        "event_id", "ts", "user_id", "'click' AS event_type",
-        "CAST(0.0 AS DOUBLE) AS value", "'' AS props"
-    ).write.parquet(os.path.join(batch_dir, "events.parquet"))
-    want = {
-        (r.user_id, r.start_ts, r.end_ts, r.n_events)
-        for r in q_sessionize(spark, batch_dir).collect()
-    }
-    assert got == want
-    assert (1, sec(0), sec(1900), 3) in got  # exact-gap pair merged
-
-
 def test_streaming_upsert_folds_batches_in_order(spark, tmp_path):
     """Streaming MERGE sink: two availableNow drains — the second sees
     only the new change file and its rows overwrite the first's on key

@@ -28,7 +28,7 @@ def _spark_submit() -> str:
     return found
 
 
-def _run(submit, zip_path, out_dir):
+def _run(submit, zip_path, out_dir, *extra):
     proc = subprocess.run(
         [
             submit,
@@ -41,6 +41,7 @@ def _run(submit, zip_path, out_dir):
             "--sf-dir", "/root/testdata/sf0.001",
             "--output", str(out_dir),
             "--groups", "2",
+            *extra,
         ],
         capture_output=True,
         text=True,
@@ -54,12 +55,17 @@ def _run(submit, zip_path, out_dir):
     return json.loads(lines[-1])
 
 
-def test_spark_submit_checkpointed_extractor(tmp_path):
-    submit = _spark_submit()
+def _package_zip(tmp_path):
     zip_path = tmp_path / "pero_ocr_api_spark.zip"
     with zipfile.ZipFile(zip_path, "w", zipfile.ZIP_DEFLATED) as zf:
         for py in (REPO / "pero_ocr_api_spark").rglob("*.py"):
             zf.write(py, py.relative_to(REPO))
+    return zip_path
+
+
+def test_spark_submit_checkpointed_extractor(tmp_path):
+    submit = _spark_submit()
+    zip_path = _package_zip(tmp_path)
     out_dir = tmp_path / "out"
 
     summary = _run(submit, zip_path, out_dir)
@@ -77,3 +83,28 @@ def test_spark_submit_checkpointed_extractor(tmp_path):
     assert resumed["groups"] == summary["groups"]
     assert resumed["docs"] == summary["docs"]
     assert resumed["spans"] == summary["spans"]
+
+
+def test_spark_submit_more_groups_than_docs(spark, sf_smoke, tmp_path):
+    """--groups 64 over at most 20 docs: the groups without docs commit
+    zero lineage rows and the job still finishes with every doc."""
+    from pyspark.sql import functions as F
+
+    from pero_ocr_api_spark.synth import interleaved_documents
+
+    submit = _spark_submit()
+    docs = interleaved_documents(spark, sf_smoke).filter(
+        F.col("doc_id") < "doc-000020"
+    )
+    n_docs = docs.count()
+    input_path = tmp_path / "docs.parquet"
+    docs.write.parquet(str(input_path))
+    out_dir = tmp_path / "out"
+
+    # the extra arguments win: --input over --sf-dir, the last --groups
+    summary = _run(submit, _package_zip(tmp_path), out_dir,
+                   "--input", str(input_path), "--groups", "64")
+    assert summary["groups"] == 64
+    assert summary["docs"] == n_docs > 0
+    assert summary["metrics"]["pages_decoded"] > 0
+    assert len(list((out_dir / "_manifest").glob("group-*.json"))) == 64
