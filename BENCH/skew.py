@@ -6,11 +6,12 @@ BENCH/BASELINE.md pins scale-out (0.905 efficiency) and data-scale
 extraction job over (a) the uniform sf0.1 interleaved corpus and (b) an
 adversarially skewed variant of it — ONE document carrying 100x a
 normal document's spans, plus one media_ref repeated across ~10% of
-all media spans corpus-wide — must keep worker occupancy flat, because
-the media branch salts on xxhash64(doc_id, offset) before inference
-(plans/pipeline.py): a heavy document's pages spread across the
-cluster, and a hot media_ref never becomes a grouping key in the hot
-path.
+all media spans corpus-wide — must keep worker occupancy flat.  The
+media branch hashes on xxhash64(media_ref) into one partition per lane
+before inference (plans/pipeline.py): a heavy document's distinct pages
+spread across the cluster, and the hot media_ref's copies share one
+task, which infers each distinct page of an Arrow batch once, so the
+hot page is inferred once per batch instead of once per span.
 
 Evidence recorded in BENCH/SKEW.md:
 - wall(skewed) / wall(uniform)  — corpus-level flatness;
@@ -181,9 +182,10 @@ def main() -> int:
         + f" ({s['ratio']}).",
         "",
         "Why it holds: the media branch repartitions on",
-        "xxhash64(doc_id, offset) before inference (plans/pipeline.py), so",
-        "the heavy doc's pages spread over all salt partitions, and no hot",
-        "path groups by media_ref, so the shared ref never concentrates.",
+        "xxhash64(media_ref) before inference (plans/pipeline.py), so the",
+        "heavy doc's pages spread over all salt partitions, and the shared",
+        "ref's copies meet in one task, which infers each distinct page of",
+        "an Arrow batch once.",
     ]
     with open(os.path.join(REPO, "BENCH", "SKEW.md"), "w") as f:
         f.write("\n".join(lines) + "\n")

@@ -8,7 +8,9 @@ so the stage is a *deterministic pure function of media_ref* (md5-based,
 constants.py) — but the Spark plumbing is the real thing:
 
 - spans arrive as Arrow record batches through ``mapInPandas`` (one
-  Python crossing per batch, never per row);
+  Python crossing per batch, never per row), and the engine sees each
+  distinct ``media_ref`` of a batch once; its result is expanded back
+  to every span that names the page;
 - the "engine" is a module-level lazy singleton initialised from a
   broadcast config, exactly how real weights would be shipped
   (reference analog: per-worker engine zip cache, run_client.py:44-67);
@@ -205,11 +207,18 @@ def make_infer_fn(broadcast_config):
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            results = engine.infer_batch(pdf["media_ref"])
+            # one device call per distinct page: drop_duplicates keeps
+            # each ref's first row in order of appearance, which is
+            # factorize's code order, and a NULL ref as None (factorize's
+            # own uniques would hold NaN)
+            refs = pdf["media_ref"]
+            codes, _ = pd.factorize(refs, use_na_sentinel=False)
+            distinct = engine.infer_batch(refs.drop_duplicates().reset_index(drop=True))
+            results = [distinct[c] for c in codes]
             out_doc, out_off, out_ref, out_idx, out_text, out_conf, out_err = (
                 [], [], [], [], [], [], [])
             for (doc_id, offset, ref), (err, lines) in zip(
-                zip(pdf["doc_id"], pdf["offset"], pdf["media_ref"]), results
+                zip(pdf["doc_id"], pdf["offset"], refs), results
             ):
                 if err is not None:
                     out_doc.append(doc_id); out_off.append(offset)

@@ -22,10 +22,15 @@ an explode and a projection of ``results``.
 Scale notes (100 TB):
 - the only Python crossing is the Arrow channel of mapInPandas on the
   media branch; everything else is whole-stage codegen.
-- the media branch is repartitioned on xxhash64(doc_id, offset) before
-  inference, so a heavy multi-page doc's media spans spread across the
-  cluster (explicit skew handling per north_rule); the per-doc
-  aggregate then shuffles once on doc_id.
+- with ``salt_partitions`` set, the media branch is repartitioned on
+  xxhash64(media_ref) into min(salt_partitions, defaultParallelism)
+  partitions before inference: one Python task per lane (a Python task
+  has a fixed cost whatever its size, so AQE's byte-based coalescing,
+  which would make a small media input one task, is not relied on).
+  A heavy multi-page doc's pages spread across the lanes (explicit
+  skew handling per north_rule), and every copy of a page lands in
+  one partition, where inference runs once per distinct page of an
+  Arrow batch. The per-doc aggregate then shuffles once on doc_id.
 - no driver-side collect anywhere; the inference counters are
   ``DataFrame.observe`` metrics of the one inference node, so they are
   exact for the first action that runs the plan, persisted or not.
@@ -176,7 +181,8 @@ def extract(
     )
     if salt_partitions:
         media_in = media_in.repartition(
-            salt_partitions, F.xxhash64("doc_id", "offset")
+            min(salt_partitions, spark.sparkContext.defaultParallelism),
+            F.xxhash64("media_ref"),
         )
     inferred = media_in.mapInPandas(make_infer_fn(bconf), schema=INFER_SCHEMA)
     metrics = ExtractMetrics()

@@ -26,7 +26,12 @@ def main() -> None:
     ap.add_argument("--sf-dir", help="testdata dir to synthesize input from")
     ap.add_argument("--output", required=True)
     ap.add_argument("--groups", type=int, default=8)
-    ap.add_argument("--salt-partitions", type=int, default=None)
+    ap.add_argument(
+        "--salt-partitions", type=int, default=None,
+        help="hash the media spans on media_ref into at most this many "
+             "inference tasks (capped at the default parallelism); "
+             "unset, inference runs on the input's partitions",
+    )
     args = ap.parse_args()
 
     from pyspark.sql import SparkSession

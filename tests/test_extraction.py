@@ -232,21 +232,17 @@ def test_heavy_doc_salting_bounds_skew(spark):
         "media_ref:string,offset:int>>",
     )
 
-    # (a) partition balance of the salted media branch
+    # (a) partition balance of the plan's own salted exchange: the
+    # media rows each inference task read
     n_parts = 16
-    from pero_ocr_api_spark.plans.pipeline import explode_spans
-    media = (
-        explode_spans(docs)
-        .filter(F.col("kind") == KIND_MEDIA)
-        .repartition(n_parts, F.xxhash64("doc_id", "offset"))
-    )
+    stage = _salted_inference_stage(spark, docs, n_parts)
     sizes = [
-        r.n
-        for r in media.groupBy(F.spark_partition_id().alias("pid"))
-        .agg(F.count("*").alias("n"))
-        .collect()
+        t.taskMetrics().get().shuffleReadMetrics().recordsRead()
+        for t in _stage_tasks(spark, stage)
     ]
-    assert len(sizes) == n_parts  # every partition got work
+    assert len(sizes) == min(n_parts, spark.sparkContext.defaultParallelism)
+    assert sum(sizes) == len(heavy_spans)
+    assert min(sizes) > 0  # every partition got work
     mean = sum(sizes) / len(sizes)
     assert max(sizes) < 2 * mean, f"skewed: {sizes}"
 
@@ -315,6 +311,203 @@ def test_skewed_input_wall_time_bounded(spark):
         f"skewed/uniform wall ratio {ratio:.2f} "
         f"({t_skewed:.2f}s vs {t_uniform:.2f}s)"
     )
+
+
+_DOCS_SCHEMA = (
+    "doc_id string, spans array<struct<kind:string,text:string,"
+    "media_ref:string,offset:int>>"
+)
+
+
+def _documents(spark, flat_by_doc):
+    """documents frame from {doc_id: [(offset, kind, text, media_ref)]}."""
+    return spark.createDataFrame(
+        [(d, [{"kind": k, "text": t, "media_ref": r, "offset": o}
+              for (o, k, t, r) in flat])
+         for d, flat in flat_by_doc.items()],
+        _DOCS_SCHEMA,
+    )
+
+
+def _assert_oracle_spans(span_rows, flat_by_doc):
+    got = {}
+    for r in span_rows:
+        got.setdefault(r.doc_id, []).append(
+            (r.order, r.kind, r.text, r.media_ref))
+    for doc_id, flat in flat_by_doc.items():
+        exp = oracle.extract_spans(flat)[0]
+        assert sorted(got.get(doc_id, [])) == exp, doc_id
+
+
+def _cluster_names(cluster) -> set:
+    names = {cluster.name()}
+    children = cluster.childClusters()
+    for i in range(children.length()):
+        names |= _cluster_names(children.apply(i))
+    return names
+
+
+def _salted_inference_stage(spark, docs, salt_partitions, out=None):
+    """Run one salted extract with a persisted inference (the scan_batch
+    shape) under its own job group, writing its spans to ``out`` (or
+    counting them), and return the status-store data of the one stage
+    that runs mapInPandas to fill the persisted inference."""
+    sc = spark.sparkContext
+    group = f"salted-inference-{id(docs)}"
+    sc.setJobGroup(group, group)
+    try:
+        res = extract(spark, docs, with_metrics=False, persist_inference=True,
+                      salt_partitions=salt_partitions)
+        if out is None:
+            res.spans.count()
+        else:
+            res.spans.write.parquet(out)
+        res.unpersist()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    store = sc._jsc.sc().statusStore()
+    tracker = sc.statusTracker()
+    stages = []
+    for job in tracker.getJobIdsForGroup(group):
+        for sid in tracker.getJobInfo(job).stageIds:
+            names = _cluster_names(store.operationGraphForStage(sid).rootCluster())
+            # the stages that read the persisted inference show its
+            # lineage too, below an InMemoryTableScan
+            if "MapInPandas" in names and "InMemoryTableScan" not in names:
+                stages.append(store.lastStageAttempt(sid))
+    assert len(stages) == 1, [s.stageId() for s in stages]
+    return stages[0]
+
+
+def _stage_tasks(spark, stage) -> list:
+    seq = spark.sparkContext._jsc.sc().statusStore().taskList(
+        stage.stageId(), stage.attemptId(), 1 << 20)
+    return [seq.apply(i) for i in range(seq.length())]
+
+
+def test_salted_inference_runs_one_task_per_lane(spark, tmp_path):
+    """A salted extract runs inference in one Python task per lane:
+    min(salt_partitions, defaultParallelism) tasks however wide the
+    salt, and its written spans still equal the oracle.  Pages repeat
+    across documents, as in a scanned archive."""
+    flat_by_doc = {
+        f"doc-{j:03d}": [(0, KIND_TEXT, f" title {j} ", None)] + [
+            (i, KIND_MEDIA, None, f"img://scan/p{(j * 7 + i) % 150}")
+            for i in range(1, 13)
+        ]
+        for j in range(40)
+    }
+    out = str(tmp_path / "spans")
+    stage = _salted_inference_stage(
+        spark, _documents(spark, flat_by_doc), 16, out)
+    assert stage.numTasks() == min(16, spark.sparkContext.defaultParallelism)
+    _assert_oracle_spans(spark.read.parquet(out).collect(), flat_by_doc)
+
+
+def test_infer_fn_infers_each_distinct_ref_once(monkeypatch):
+    """make_infer_fn hands each distinct media_ref of an Arrow batch to
+    the engine once (a NULL ref once, as None) and expands the results
+    to exactly the rows the per-row expansion gives, in input order."""
+    import types
+
+    import pandas as pd
+
+    from pero_ocr_api_spark.constants import STATE_NOT_FOUND
+    from pero_ocr_api_spark.operators import inference
+    from pero_ocr_api_spark.operators.inference import (
+        _StubEngine, make_infer_fn, stub_infer_one,
+    )
+
+    def infer_one(ref):
+        return (STATE_NOT_FOUND, []) if ref is None else stub_infer_one(ref)
+
+    class CountingEngine(_StubEngine):
+        def __init__(self):
+            super().__init__({})
+            self.seen = []
+
+        def infer_batch(self, refs):
+            self.seen.extend(refs)
+            return [infer_one(r) for r in refs]
+
+    engine = CountingEngine()
+    monkeypatch.setattr(inference, "_get_engine", lambda config: engine)
+
+    refs = [f"img://p{6 + i % 5}" for i in range(12)] + [None, "img://p7", None]
+    pdf = pd.DataFrame({
+        "doc_id": [f"d{i % 3}" for i in range(len(refs))],
+        "offset": pd.Series(range(len(refs)), dtype="int32"),
+        "media_ref": pd.Series(refs, dtype="object"),
+    })
+    assert any(infer_one(r)[0] is not None for r in refs if r)  # an error row
+    infer = make_infer_fn(types.SimpleNamespace(value={}))
+    got = pd.concat(list(infer(iter([pdf, pdf.iloc[:0]]))), ignore_index=True)
+
+    distinct = list(dict.fromkeys(refs))
+    assert engine.seen == distinct
+    assert engine.seen.count(None) == 1
+
+    exp = []
+    for doc_id, offset, ref in zip(pdf["doc_id"], pdf["offset"], refs):
+        err, lines = infer_one(ref)
+        if err is not None:
+            exp.append((doc_id, offset, ref, 0, None, None, err))
+        for (idx, text, conf) in lines:
+            exp.append((doc_id, offset, ref, idx, text, conf, None))
+    rows = [
+        tuple(None if (v is not None and v != v) else v for v in row)
+        for row in got.itertuples(index=False, name=None)
+    ]
+    assert rows == exp
+    assert [str(t) for t in got.dtypes] == [
+        "object", "int32", "object", "int32", "object", "float64", "object"]
+
+
+def test_hot_ref_wall_time_bounded(spark):
+    """One page named by 10% of all media spans, salted: the salt hashes
+    on media_ref, so every copy of the hot page lands in one inference
+    task, and per-batch deduplication keeps that task short.  The run
+    must take at most 1.5x the wall time of a uniform corpus with the
+    same span count, and its output must equal the oracle."""
+    import time
+
+    def corpus(hot_every):
+        return {
+            f"doc-{j:03d}": [
+                (i, KIND_MEDIA, None,
+                 "img://hot/page" if hot_every and (j * 16 + i) % hot_every == 0
+                 else f"img://d{j}/p{i}")
+                for i in range(16)
+            ]
+            for j in range(100)
+        }
+
+    uniform_flat, hot_flat = corpus(0), corpus(10)
+    assert sum(r == "img://hot/page" for f in hot_flat.values()
+               for (_, _, _, r) in f) == 160  # 10% of 1600 spans
+    uniform, hot = _documents(spark, uniform_flat), _documents(spark, hot_flat)
+    cfg = {"engine": "stub-ocr", "version": 1,
+           "work_iters": 0, "work_sleep_ms": 5.0}
+
+    def wall(docs):
+        best = float("inf")
+        for _ in range(2):
+            t0 = time.monotonic()
+            extract(spark, docs, engine_config=cfg, with_metrics=False,
+                    salt_partitions=16).spans.count()
+            best = min(best, time.monotonic() - t0)
+        return best
+
+    wall(uniform)  # warmup, unmeasured
+    t_uniform = wall(uniform)
+    t_hot = wall(hot)
+    assert t_hot / t_uniform < 1.5, (
+        f"hot/uniform wall ratio {t_hot / t_uniform:.2f} "
+        f"({t_hot:.2f}s vs {t_uniform:.2f}s)"
+    )
+    res = extract(spark, hot, engine_config=cfg, salt_partitions=16)
+    _assert_oracle_spans(res.spans.collect(), hot_flat)
 
 
 def test_partitioning_independence(spark, sf_smoke):
