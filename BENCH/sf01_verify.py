@@ -77,8 +77,8 @@ def main() -> int:
         f"and returned rows.  **{n_ok}/{n_oracled} green, {n_bad} "
         f"mismatches; {n_rows_only} rows-only.**  Captured {ts} by",
         "`python BENCH/sf01_verify.py` (round 5; includes the round-5",
-        "additions td_sim_rerank, td_dedup_substring_spans,",
-        "td_text_hash_classifier and the device-micro-batched engine).",
+        "additions td_dedup_substring_spans, td_text_hash_classifier",
+        "and the device-micro-batched engine).",
         "",
         f"Wall seconds include BOTH engines (Spark local[{CPUS}] + DuckDB)",
         "and any first-use JIT; entries are listed in registry order.",

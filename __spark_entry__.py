@@ -23,7 +23,6 @@ from pero_ocr_api_spark.functions.cluster import REGISTRY as _CLUSTER
 from pero_ocr_api_spark.functions.curation import REGISTRY as _CUR
 from pero_ocr_api_spark.functions.dedup import REGISTRY as _DEDUP
 from pero_ocr_api_spark.functions.maincontent import REGISTRY as _MC
-from pero_ocr_api_spark.functions.similarity import REGISTRY as _SIM
 from pero_ocr_api_spark.functions.text import REGISTRY as _TEXT
 from pero_ocr_api_spark.plans.engine_config import REGISTRY as _CFG
 from pero_ocr_api_spark.plans.layout import REGISTRY as _LAYOUT
@@ -78,13 +77,11 @@ _DRIVER_WINDOW = [
     # PAGE/txt fan-out and of the raw lines — re-record them
     "extract_serialize_txt", "extract_serialize_alto",
     "extract_serialize_page", "extract_conf_histogram",
-    # NEW in round 5 (VERDICT r4 item 8): cross-encoder-style rerank
-    # after LSH-ANN (top-k -> broadcast feature join -> pairwise
-    # token-Jaccard rescore -> final window), and the Lee et al. 2022
+    # NEW in round 5 (VERDICT r4 item 8): the Lee et al. 2022
     # exact-substring duplicated-SPAN extractor (stride-1 length-L
     # anchors + gaps-and-islands merge == suffix-array repeats with
     # minimum match length L)
-    "td_sim_rerank", "td_dedup_substring_spans",
+    "td_dedup_substring_spans",
     # NEW in round 5: fastText-style hashed linear quality gate
     # (unigram+bigram hashing trick, exact-integer weight sums, zero
     # shuffles) — the CCNet/LLaMA corpus-filter shape
@@ -93,19 +90,12 @@ _DRIVER_WINDOW = [
     # lang/source rollup (Expand below a partial agg, one Exchange of
     # group cells only)
     "td_corpus_report",
-    # NEW in round 5: hard-negative mining for contrastive embedding
-    # training (label-filtered top-k; production candidate generator =
-    # the LSH/IVF plane)
-    "td_sim_hard_negatives",
     # NEW in round 5: token-budget corpus selection — histogram
     # threshold (no global sort) vs the oracle's naive running-sum
     # window: a cross-ALGORITHM oracle
     "td_token_budget_select",
     # NEW in round 5: corpus snapshot diff (dataset-versioning report)
     "td_corpus_diff",
-    # NEW in round 5: multi-probe LSH ANN (Hamming-1 probes, 4x recall
-    # for 9x bucket-occupancy candidates; closes the README boundary)
-    "td_sim_lsh_multiprobe",
     # NEW in round 5: dedup-AWARE train/val/test split (split hash on
     # the near-dup cluster key -> no train/test near-dup leakage)
     "td_split_leakage_safe",
@@ -153,22 +143,17 @@ _DRIVER_WINDOW = [
     # pure-Python-oracled.  cp_sql_tpch_q11_stock (r03+r04-green,
     # untouched) is the evicted fill entry
     "td_decontam_winnow",
-    # touched in round 5 (zero-norm exclusion, both engines): the whole
-    # cosine plane re-records (rerank / hard-negatives / multiprobe are
-    # already in the window above) — 5 TPC-H re-confirmation fills
-    # (q3/q17/q18/q21/q22, all r03+r04-green, untouched) are the
-    # evicted entries
-    "td_sim_bruteforce_topk", "td_dedup_embedding_cosine",
-    "td_sim_ivf_topk", "td_dedup_tfidf_cosine",
+    # touched in round 5 (zero-norm exclusion, both engines): re-record it
+    "td_dedup_tfidf_cosine",
     # re-confirmation fill: r04-green entries, unchanged since
-    "td_dedup_minhash_lsh", "td_sim_ann_lsh_topk",
+    "td_dedup_minhash_lsh",
     "td_text_bm25", "td_text_zipf",
     # touched in round 5 (fuzz-gate find): ntile ordering now pins
     # NULLS LAST on both engines — re-record it
     "td_length_deciles",
     "cp_sql_tpch_q2_min_cost", "cp_sql_tpch_q9_profit",
-    "td_dedup_semantic", "td_dedup_incremental", "td_text_bpe_pairs",
-    "td_curation_dsir", "td_sim_ivfpq_search",
+    "td_dedup_incremental", "td_text_bpe_pairs",
+    "td_curation_dsir",
     "td_curation_gumbel_sample",
     # touched in round 5 (fuzz-gate find): the exact-dedup oracle now
     # mirrors Spark's empty-vs-NULL fingerprint semantics
@@ -191,7 +176,6 @@ def _registry() -> dict[str, tuple]:
     reg.update(_CLUSTER)
     reg.update(_CDC)
     reg.update(_CUR)
-    reg.update(_SIM)
     reg.update(_MM)
     reg.update(_SQL)
     ordered = {name: reg[name] for name in _DRIVER_WINDOW}

@@ -4,7 +4,7 @@ with inverse-probability weights, and PII redaction.
 
 The reference has no analog (it curates nothing — every uploaded page
 is processed, /root/reference/app/main/routes.py:66-118); these extend
-the documents plane the same way the dedup/similarity families do.
+the documents plane the same way the dedup family does.
 
 Scale shapes (100 TB):
 - **decontamination**: the Lee/Brown-style n-gram overlap check between

@@ -634,9 +634,8 @@ ORDER BY bm25 DESC, doc_id LIMIT {BM25_TOP_K}""",
 def q_bm25(spark: SparkSession, sf: str) -> DataFrame:
     """BM25 top-k document retrieval for a fixed query-term set — the
     classic lexical ranking a training-data pipeline uses for targeted
-    corpus search and retrieval-based decontamination (dense ANN lives
-    in functions/similarity.py; this is its sparse counterpart over the
-    same documents table).
+    corpus search and retrieval-based decontamination over the
+    documents table.
 
     Scale shape: doc length is a PER-ROW column (size of the token
     array — no explode, no shuffle); the token explode is filtered to
@@ -758,8 +757,7 @@ def q_bpe_pairs(spark: SparkSession, sf: str) -> DataFrame:
     adjacent symbol pairs within words, top-{BPE_TOP_K} by frequency —
     the pair the trainer would merge next is rank 1.  Iterating
     (count → merge best pair → recount) IS distributed BPE training;
-    one verified step pins the recurrence, same contract as
-    td_sim_kmeans_step.
+    one verified step pins the recurrence.
 
     Scale shape: pair extraction is a per-row higher-order function
     (sequence → substr, zero shuffle, whole-stage codegen); the only

@@ -56,12 +56,18 @@ def _hexval(c: str) -> int:
     return o - 87 if o >= 97 else o - 48
 
 
-def stub_infer_one(media_ref: str) -> tuple[Optional[str], list[tuple[int, str, float]]]:
+def stub_infer_one(
+    media_ref: Optional[str],
+) -> tuple[Optional[str], list[tuple[int, str, float]]]:
     """Deterministic per-media inference: (error, [(line_idx, stored_text,
     conf)]).  ``stored_text`` is the raw model output — Arabic lines come
     out in visual (reversed) order, like the reference's pre-normalization
-    transcriptions (run_client.py:218-220).  Shared verbatim by the
-    pure-Python oracle and mirrored by the DuckDB oracle SQL."""
+    transcriptions (run_client.py:218-220).  A NULL ref names no page, so
+    its fetch fails: NOT_FOUND (SURVEY X9).  Shared verbatim by the
+    pure-Python oracle and mirrored by the DuckDB oracle SQL (whose
+    synthesized spans never have a NULL ref)."""
+    if media_ref is None:
+        return STATE_NOT_FOUND, []
     h = hashlib.md5(media_ref.encode()).hexdigest()
     code = (ord(h[0]) * 16 + ord(h[1])) % ERROR_MOD
     if code in _ERROR_BY_CODE:
@@ -176,13 +182,15 @@ class _StubEngine:
 
     def infer_batch(self, refs: pd.Series) -> list[tuple[Optional[str], list]]:
         out = [stub_infer_one(r) for r in refs]
+        # a NULL ref fails before any page reaches the device
+        pages = [r for r in refs if r is not None]
         if self.work_iters:
-            for r in refs:
+            for r in pages:
                 self._burn(r)
         if self.work_sleep_ms:
             sleep_ms = sum(
                 self._device_call_ms(c)
-                for c in self.plan_device_batches(list(refs))
+                for c in self.plan_device_batches(pages)
             )
             time.sleep(sleep_ms / 1000.0)
         return out

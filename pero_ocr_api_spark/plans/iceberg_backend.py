@@ -6,8 +6,7 @@ fall back to the parquet-dir + atomic-manifest stand-in
 (plans/checkpoint.py) otherwise.  This container ships no Iceberg jar,
 so the fallback is what runs here; the Iceberg branch is exercised by
 the env-gated parity test (tests/test_checkpoint_backend_seam.py) on
-any cluster image that configures an Iceberg catalog — the same gating
-pattern as the transformWithStateInPandas engine parity.
+any cluster image that configures an Iceberg catalog.
 
 Mapping of the stand-in's mechanics onto native Iceberg (all public
 API, Iceberg docs "Spark Writes"/"Spark Procedures"):

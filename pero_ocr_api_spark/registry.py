@@ -1,5 +1,5 @@
 """Shared (fn, oracle_sql) registry mechanism for the query-library
-modules (controlplane / text / dedup / similarity / multimodal)."""
+modules (controlplane / text / dedup / multimodal)."""
 
 from __future__ import annotations
 

@@ -11,7 +11,10 @@ Illegal events are ignored, mirroring the reference's rejections
 a claim of a non-WAITING page cannot happen under the row lock).
 
 State per key is one (state, last_ts) pair — bounded by page count in
-flight, exactly the table the reference keeps in Postgres.
+flight, exactly the table the reference keeps in Postgres.  The
+tracker has one stateful path: ``applyInPandasWithState`` needs only
+pandas and pyarrow on the workers (``transformWithStateInPandas`` would
+also need ``google.protobuf``).
 """
 
 from __future__ import annotations
@@ -118,102 +121,3 @@ def track_page_states(
     )
     query.awaitTermination()
     return query
-
-
-# ---- Spark 4 transformWithStateInPandas twin of the tracker ----
-# Same legal-edge fold, new engine: typed ValueState in the RocksDB
-# state store (the API that adds composite state — value/list/map —
-# TTLs and timers over applyInPandasWithState's single tuple).  Kept
-# alongside the original so the repo exercises BOTH stateful surfaces.
-#
-# ENVIRONMENT GATE: the TWS protocol needs `google.protobuf`, which
-# this container does not ship (and installs are off-limits), so the
-# engine-level parity test skips here and runs green on any standard
-# cluster image; the processor's fold logic is unit-tested through a
-# stubbed ValueState either way.  applyInPandasWithState above remains
-# the always-on path.
-
-from pyspark.sql.streaming.stateful_processor import (  # noqa: E402
-    StatefulProcessor,
-    StatefulProcessorHandle,
-)
-
-ROCKSDB_PROVIDER = (
-    "org.apache.spark.sql.execution.streaming.state."
-    "RocksDBStateStoreProvider"
-)
-
-
-class PageTrackerProcessor(StatefulProcessor):
-    """One ValueState cell per page_id: (state, last_ts) — exactly the
-    row the reference keeps in Postgres per page."""
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._page = handle.getValueState("page", TRACK_STATE_SCHEMA)
-
-    def handleInputRows(self, key, rows, timerValues):
-        (page_id,) = key
-        cur, last_ts = (
-            self._page.get() if self._page.exists() else (None, None)
-        )
-        pdf = pd.concat(list(rows), ignore_index=True)
-        pdf = pdf.sort_values(["ts", "event"], kind="mergesort")
-        cur = fold_events(cur, pdf["event"])
-        ts_max = pdf["ts"].max()
-        last = max(x for x in (last_ts, ts_max.value) if x is not None)
-        self._page.update((cur, int(last)))
-        yield pd.DataFrame(
-            {"page_id": [page_id], "state": [cur],
-             "last_ts": [pd.Timestamp(last)]}
-        )
-
-    def close(self) -> None:
-        pass
-
-
-def track_page_states_tws(
-    spark: SparkSession,
-    input_dir: str,
-    output_dir: str,
-    checkpoint_dir: str,
-):
-    """availableNow drain identical in contract to track_page_states,
-    executed by transformWithStateInPandas on the RocksDB store (the
-    only provider the new API supports)."""
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER
-    )
-    try:
-        stream = (
-            spark.readStream.schema(PAGE_EVENTS_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(input_dir)
-        )
-        tracked = stream.groupBy("page_id").transformWithStateInPandas(
-            statefulProcessor=PageTrackerProcessor(),
-            outputStructType=TRACK_OUT_SCHEMA,
-            outputMode="Append",
-            timeMode="None",
-        )
-
-        def sink(batch_df: DataFrame, batch_id: int) -> None:
-            batch_df.write.mode("overwrite").parquet(
-                os.path.join(output_dir, f"batch_id={batch_id}")
-            )
-
-        query = (
-            tracked.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-        return query
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev
-            )

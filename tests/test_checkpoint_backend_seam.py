@@ -1,9 +1,8 @@
 """The checkpoint-backend seam (VERDICT r4 item 5): 'auto' resolves to
 native Iceberg snapshots when the runtime + a catalog exist, and to the
 parquet-dir + atomic-manifest stand-in otherwise — mirroring the codec
-seam.  The real branch's kill/resume parity is env-gated exactly like
-the transformWithStateInPandas test: it runs on any cluster image that
-ships the Iceberg jar, and skips here."""
+seam.  The real branch's kill/resume parity is env-gated: it runs on
+any cluster image that ships the Iceberg jar, and skips here."""
 
 import os
 

@@ -1,7 +1,7 @@
 """Behavior pins for the curation plane (decontamination, stratified
-sampling, PII redaction, winsorizing, language rebalancing), the PQ
-codebook, and the Spark/DuckDB floor-division idiom — edge semantics
-the sf-parity test can't isolate."""
+sampling, PII redaction, winsorizing, language rebalancing) and the
+Spark/DuckDB floor-division idiom — edge semantics the sf-parity test
+can't isolate."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -105,27 +105,6 @@ def test_winsorize_clamps_into_band(spark, sf_smoke):
         assert r["lo"] <= r["clamped"] <= r["hi"]
         if r["lo"] <= r["n_chars"] <= r["hi"]:
             assert r["clamped"] == float(r["n_chars"])
-
-
-def test_pq_encode_codebook_vectors_are_exact(spark, sf_smoke):
-    """The PQ_K codebook seed vectors encode to themselves: codes
-    m->own cid with zero quantization error; every other vector's
-    error is >= 0 and codes parse as PQ_M dash-joined ints."""
-    from pero_ocr_api_spark.functions.similarity import (
-        PQ_K,
-        PQ_M,
-        q_pq_encode,
-    )
-
-    got = {r["vec_id"]: r for r in q_pq_encode(spark, sf_smoke).collect()}
-    for cid in range(PQ_K):
-        assert got[cid]["codes"] == "-".join([str(cid)] * PQ_M)
-        assert got[cid]["quant_err"] == 0.0
-    for r in got.values():
-        parts = r["codes"].split("-")
-        assert len(parts) == PQ_M
-        assert all(0 <= int(p) < PQ_K for p in parts)
-        assert r["quant_err"] >= 0.0
 
 
 def test_lang_rebalance_hits_target_mixture(spark, sf_correct):

@@ -464,6 +464,40 @@ def test_infer_fn_infers_each_distinct_ref_once(monkeypatch):
         "object", "int32", "object", "int32", "object", "float64", "object"]
 
 
+def test_null_media_ref_is_not_found(spark):
+    """A media span with a NULL media_ref names no page, so its fetch
+    fails: one NOT_FOUND error row (SURVEY X9), not a failed job.  Salted
+    and unsalted, with the emulated burn and device calls on, the doc's
+    spans, score and status equal the oracle's and decode_failures
+    counts the span."""
+    from pero_ocr_api_spark.constants import STATE_NOT_FOUND
+    from pero_ocr_api_spark.operators.inference import stub_infer_one
+
+    page = "img://scan/p1"
+    assert stub_infer_one(page)[0] is None
+    flat = [
+        (0, KIND_TEXT, " intro  text ", None),
+        (1, KIND_MEDIA, None, page),
+        (2, KIND_MEDIA, None, None),
+        (3, KIND_TEXT, "outro", None),
+    ]
+    exp_spans, exp_score, exp_status = oracle.extract_spans(flat)
+    assert exp_status == STATE_NOT_FOUND
+    config = {"engine": "stub-ocr", "version": 1, "work_iters": 10,
+              "work_sleep_ms": 1.0, "batch_pages": 4}
+    for salt_partitions in (None, 4):
+        res = extract(spark, _documents(spark, {"doc-null": flat}),
+                      engine_config=config, salt_partitions=salt_partitions)
+        [doc] = res.results.collect()
+        assert [tuple(s) for s in doc.spans] == exp_spans, salt_partitions
+        assert (doc.score, doc.status) == (exp_score, exp_status)
+        assert res.metrics.as_dict() == {
+            "pages_decoded": 1,
+            "lines_emitted": len(stub_infer_one(page)[1]),
+            "decode_failures": 1,
+        }
+
+
 def test_hot_ref_wall_time_bounded(spark):
     """One page named by 10% of all media spans, salted: the salt hashes
     on media_ref, so every copy of the hot page lands in one inference

@@ -4,9 +4,6 @@ in test_oracle_parity; these assert semantic invariants)."""
 from pyspark.sql import functions as F
 
 from pero_ocr_api_spark.functions.dedup import minhash_pairs, shingles_df
-from pero_ocr_api_spark.functions.similarity import (
-    N_QUERIES, TOP_K, ann_topk_lsh, q_bruteforce_topk, q_lsh_signature,
-)
 from pero_ocr_api_spark.operators.multimodal import (
     decode_images, resize_images, sample_frames, synth_media_bytes,
 )
@@ -24,28 +21,6 @@ def test_shingles_shape(spark, sf_smoke):
     sh = shingles_df(spark, sf_smoke)
     row = sh.first()
     assert len(row.sh.split(" ")) == 3
-
-
-def test_bruteforce_topk_shape(spark, sf_smoke):
-    got = q_bruteforce_topk(spark, sf_smoke).collect()
-    by_q = {}
-    for r in got:
-        by_q.setdefault(r.q_id, []).append(r)
-    assert set(by_q) == set(range(N_QUERIES))
-    for q, rows in by_q.items():
-        assert [r.rank for r in sorted(rows, key=lambda r: r.rank)] == list(
-            range(1, TOP_K + 1)
-        )
-        cosines = [r.cosine for r in sorted(rows, key=lambda r: r.rank)]
-        assert cosines == sorted(cosines, reverse=True)
-        assert all(r.n_id != q for r in rows)
-
-
-def test_ann_lsh_subset_of_bucket(spark, sf_smoke):
-    sigs = {r.vec_id: r.signature for r in q_lsh_signature(spark, sf_smoke).collect()}
-    ann = ann_topk_lsh(spark, sf_smoke).collect()
-    for r in ann:
-        assert sigs[r.n_id] == sigs[r.q_id]  # candidates from own bucket only
 
 
 def test_multimodal_plumbing(spark, sf_smoke):
@@ -75,50 +50,6 @@ def test_multimodal_plumbing(spark, sf_smoke):
     # determinism: same refs → same decode output
     again = decode_images(synth_media_bytes(refs)).collect()
     assert sorted(map(tuple, rows)) == sorted(map(tuple, again))
-
-
-def test_ann_recall_vs_bruteforce(spark, sf_smoke):
-    """Approximation-quality documentation: recall@k of the IVF and
-    LSH-bucket ANN paths against the verified brute-force baseline.
-    IVF probes nprobe centroids and recovers nearly all true neighbors
-    (recall ~0.96 on sf0.001).  Single-bucket LSH over isotropic
-    gaussians has ~2% expected recall by geometry (8 hyperplanes,
-    top-neighbor angle ~66deg -> 0.63^8) — it exists for the HIGH-cosine
-    near-dup regime where collisions are likely, so only its structure
-    is asserted, not a recall floor."""
-    from pero_ocr_api_spark.functions.similarity import (
-        REGISTRY as SIM, TOP_K,
-    )
-
-    def topk_sets(df):
-        out = {}
-        for r in df.collect():
-            out.setdefault(r.q_id, set()).add(r.n_id)
-        return out
-
-    truth = topk_sets(SIM["td_sim_bruteforce_topk"][0](spark, sf_smoke))
-    ivf = topk_sets(SIM["td_sim_ivf_topk"][0](spark, sf_smoke))
-    lsh = topk_sets(SIM["td_sim_ann_lsh_topk"][0](spark, sf_smoke))
-    mp = topk_sets(SIM["td_sim_lsh_multiprobe"][0](spark, sf_smoke))
-
-    def recall(approx):
-        hits = sum(len(approx.get(q, set()) & t) for q, t in truth.items())
-        total = sum(len(t) for t in truth.values())
-        return hits / total
-
-    r_ivf, r_lsh, r_mp = recall(ivf), recall(lsh), recall(mp)
-    print(f"recall@{TOP_K}: ivf={r_ivf:.2f} lsh={r_lsh:.2f} mp={r_mp:.2f}")
-    assert r_ivf >= 0.5, r_ivf
-    # multi-probe widens the CANDIDATE set (own bucket is one of the
-    # probes), so with consistent (cosine, n_id) tiebreaks a displaced
-    # single-probe result is always displaced by a closer vector —
-    # recall vs truth cannot fall.  (The per-query top-k RESULT set is
-    # NOT a superset in general: a neighbor bucket can displace a
-    # home-bucket candidate, so only the recall inequality is sound.)
-    assert r_mp >= r_lsh, (r_mp, r_lsh)
-    # every ANN neighbor must at least be a real vector, never the query
-    for q, ns in {**ivf, **lsh, **mp}.items():
-        assert q not in ns
 
 
 def test_main_content_classifier_edges(spark):
@@ -295,51 +226,6 @@ def test_chunk_documents_geometry(spark):
     c1 = rows[(4, 1)].chunk_text.split(" ")
     assert c0[-CHUNK_OVERLAP:] == c1[:CHUNK_OVERLAP]
     assert set(c0) | set(c1) == {f"t{j}" for j in range(1, CHUNK_SIZE + 2)}
-
-
-def test_pq_search_adc_identity(spark, sf_smoke):
-    """ADC correctness pin: the reported adist for (q, x) must equal
-    L2²(q, reconstruct(codes(x))) — the defining identity of
-    asymmetric-distance search — recomputed here from raw embeddings
-    and the deterministic codebook, in float64."""
-    import math
-
-    from pero_ocr_api_spark.functions.similarity import (
-        PQ_K, PQ_M, PQ_SUB, q_pq_search,
-    )
-    from pero_ocr_api_spark.session import load_table
-
-    emb = {
-        r.vec_id: [float(x) for x in r.embedding]
-        for r in load_table(spark, sf_smoke, "embeddings").collect()
-    }
-    codebook = {cid: emb[cid] for cid in range(PQ_K)}
-
-    def codes(v):
-        out = []
-        for m in range(PQ_M):
-            s = v[m * PQ_SUB:(m + 1) * PQ_SUB]
-            best = min(
-                range(PQ_K),
-                key=lambda c: (
-                    sum((a - b) ** 2 for a, b in zip(
-                        s, codebook[c][m * PQ_SUB:(m + 1) * PQ_SUB])),
-                    c,
-                ),
-            )
-            out.append(best)
-        return out
-
-    got = q_pq_search(spark, sf_smoke).collect()
-    assert len(got) > 0
-    for r in got:
-        q, x = emb[r.q_id], emb[r.n_id]
-        recon = []
-        for m, c in enumerate(codes(x)):
-            recon += codebook[c][m * PQ_SUB:(m + 1) * PQ_SUB]
-        expect = sum((a - b) ** 2 for a, b in zip(q, recon))
-        assert math.isclose(r.adist, round(expect, 6), abs_tol=2e-6), (
-            r.q_id, r.n_id, r.adist, expect)
 
 
 def test_merge_upsert_semantics(spark):
@@ -533,34 +419,6 @@ def test_media_refs_stage_is_wide(spark, sf_smoke):
     refs = _media_refs(spark, sf_smoke)
     n = refs.rdd.getNumPartitions()
     assert n == spark.sparkContext.defaultParallelism, n
-
-
-def test_standardize_embeddings_matches_numpy(spark, sf_smoke):
-    """Whitening with the fitted dim-stats table must match numpy's
-    (x - mean) / std per dimension, and the plan must stay a single
-    codegen projection (no join/exchange/Python)."""
-    import numpy as np
-
-    from pero_ocr_api_spark.functions.similarity import standardize_embeddings
-    from pero_ocr_api_spark.session import load_table
-    import __spark_entry__ as entry_mod
-
-    stats = entry_mod.queries()["td_emb_dim_stats"](spark, sf_smoke)
-    emb = load_table(spark, sf_smoke, "embeddings")
-    out = standardize_embeddings(emb, stats)
-
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan and "BatchEvalPython" not in plan
-
-    rows = out.orderBy("vec_id").limit(50).collect()
-    X = np.array([r["embedding"] for r in emb.orderBy("vec_id").limit(50).collect()],
-                 dtype=np.float64)
-    full = np.array([r["embedding"] for r in emb.collect()], dtype=np.float64)
-    mean, std = full.mean(axis=0), full.std(axis=0)
-    exp = (X - mean) / std
-    got = np.array([r["z_embedding"] for r in rows])
-    # stats table is rounded to 6dp, so allow that quantization
-    assert np.allclose(got, exp, atol=5e-4), np.abs(got - exp).max()
 
 
 def test_hash_classifier_features_and_gate(spark):
@@ -909,61 +767,6 @@ def test_tfidf_cosine_zero_norm_pairs_excluded(spark, tmp_path):
     assert run_pair(spark, str(tmp_path), fn, sql) == []
     out = {(r["doc_a"], r["doc_b"]) for r in fn(spark, str(tmp_path)).collect()}
     assert (2, 3) in out and (0, 1) in out
-
-
-def test_similarity_zero_vector_excluded(spark, tmp_path):
-    """Zero-norm embeddings (routine encoder failures at corpus scale)
-    must be EXCLUDED by every cosine-dividing op on BOTH engines — not
-    crash the job with an ANSI DIVIDE_BY_ZERO, and not rank with an
-    undefined 0/0 cosine.  The corpus plants a zero vector on a QUERY
-    id (vec_id=0) and on a candidate id; both engines must agree and
-    neither id may appear in any output."""
-    import random
-
-    from pero_ocr_api_spark.compare import run_pair
-    from pero_ocr_api_spark.functions.similarity import DIM
-    from pero_ocr_api_spark.functions.similarity import REGISTRY as SIM
-
-    rows = []
-    for i in range(24):
-        rng = random.Random(1000 + i)
-        vec = [rng.randint(-16, 16) / 8.0 for _ in range(DIM)]
-        if i in (0, 13):  # query-side and candidate-side zero vectors
-            vec = [0.0] * DIM
-        if i == 17:  # NULL component: norm undefined on BOTH engines
-            vec[5] = None
-        rows.append((i, vec, i % 4))
-    spark.createDataFrame(
-        rows, "vec_id long, embedding array<float>, label int"
-    ).coalesce(1).write.mode("overwrite").parquet(
-        str(tmp_path / "embeddings.parquet")
-    )
-    # td_sim_rerank needs documents text for its candidates
-    spark.createDataFrame(
-        [(i, f"tok{i} tok{i % 5} shared", "en", "s0") for i in range(24)],
-        "doc_id long, text string, lang string, source string",
-    ).coalesce(1).write.mode("overwrite").parquet(
-        str(tmp_path / "documents.parquet")
-    )
-
-    affected = [
-        "td_sim_bruteforce_topk", "td_sim_ann_lsh_topk",
-        "td_sim_lsh_multiprobe", "td_sim_rerank",
-        "td_dedup_embedding_cosine", "td_sim_ivf_topk",
-        "td_dedup_semantic", "td_sim_ivfpq_search",
-        "td_sim_hard_negatives",
-    ]
-    id_cols = ("q_id", "n_id", "id_a", "id_b", "vec_id")
-    for name in affected:
-        fn, sql = SIM[name]
-        errs = run_pair(spark, str(tmp_path), fn, sql)
-        assert errs == [], (name, errs)
-        out = fn(spark, str(tmp_path)).collect()
-        seen = {
-            r[c] for r in out for c in id_cols if c in r.asDict()
-        }
-        assert 0 not in seen and 13 not in seen, (name, sorted(seen))
-        assert 17 not in seen, (name, sorted(seen))
 
 
 def test_blocklist_filter_semantics(spark, tmp_path):

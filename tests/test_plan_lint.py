@@ -22,12 +22,6 @@ _EAGER = {
 # list crossed in deliberately).
 _BNLJ_OK = {
     "cp_admin_add_engine",   # 1-row max-id aggregates crossed into inserts
-    "td_sim_ivf_topk",       # centroid seed rows crossed for assignment
-    "td_sim_ivfpq_search",   # same centroid cross (cell assignment)
-    "td_dedup_semantic",     # same 8-centroid assignment cross (SemDeDup)
-    "td_sim_bruteforce_topk",  # fixed 5-row query set vs corpus (baseline op)
-    "td_sim_hard_negatives",   # same fixed query set crossed for mining
-    "td_sim_kmeans_step",    # 8 seed centroids crossed for assignment
     "td_curation_dsir",      # 1-row feature-total aggregate crossed in
     "td_text_idf",           # 1-row corpus-size aggregate crossed in
     "td_text_unigram_ce",    # 1-row corpus-size aggregate crossed in

@@ -424,94 +424,6 @@ def test_fuzz_event_ops_cross_engine(spark, tmp_path_factory, n, data):
         assert errs == [], (name, errs, rows)
 
 
-@settings(
-    # half the shared budget: each example runs all 16 ops x 2 engines
-    # (~25 s); the corpus STRUCTURE (sizes, dups, labels) is the fuzz
-    # surface, so fewer, more varied examples beat many similar ones
-    max_examples=max(
-        2, int(os.environ.get("PROPERTY_MAX_EXAMPLES", "8")) // 2
-    ),
-    deadline=None,
-    derandomize=True,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-@given(n=st.integers(min_value=6, max_value=20), data=st.data())
-def test_fuzz_similarity_ops_cross_engine(spark, tmp_path_factory, n, data):
-    """The similarity/embedding plane (brute-force cosine, LSH sig/
-    buckets/top-k/multi-probe, rerank, embedding near-dup, IVF, PQ
-    encode/search, IVF-PQ, SemDeDup, k-means step, quantize, dim
-    stats, whitening, hard negatives) must agree with its DuckDB twins
-    on ARBITRARY embedding corpora, not just the frozen testdata.
-
-    Determinism contract encoded in the generator: components are
-    dyadic rationals k/8 with |k| <= 16, so every dot product and
-    squared norm is an exact multiple of 1/64 well inside float64 —
-    sums are exact in ANY summation order, and the downstream sqrt /
-    divide / 6-dp round are IEEE-deterministic on identical operands.
-    Zero vectors are excluded by the cosine plane itself on both
-    engines (see similarity._nonzero; pinned by
-    test_similarity_zero_vector_excluded) — the generator still
-    repairs them so every drawn vector contributes candidate mass;
-    n >= 6 keeps a non-empty candidate set past the N_QUERIES=5 split.
-    stddev_pop (td_emb_dim_stats, whitening) is the one non-plain-sum
-    aggregate: intermediate M2 rounding differs between engines, but
-    the fixed hypothesis seed makes any last-ulp straddle reproducible
-    rather than flaky."""
-    from pero_ocr_api_spark.compare import run_pair
-    from pero_ocr_api_spark.functions.similarity import DIM
-    from pero_ocr_api_spark.functions.similarity import REGISTRY as SIM
-
-    import random as _random
-
-    rows, doc_rows, raw = [], [], []
-    for i in range(n):
-        # one drawn seed per vector, expanded by a local PRNG: 64
-        # component draws per vector through hypothesis dominate the
-        # test's wall clock without adding shrink value — the fuzz
-        # surface here is corpus STRUCTURE, not component values
-        seed = data.draw(st.integers(0, 2**32 - 1), label=f"vec{i}")
-        ks = [_random.Random(seed + j).randint(-16, 16) for j in range(DIM)]
-        if not any(ks):
-            ks[0] = 1
-        # bias toward near-duplicate vectors so the near-dup/SemDeDup
-        # branches produce rows (random +/-16 vectors are ~orthogonal)
-        if i > 0 and data.draw(st.booleans(), label=f"dupv{i}"):
-            ks = list(raw[data.draw(st.integers(0, i - 1), label=f"src{i}")])
-            j = data.draw(st.integers(0, DIM - 1), label=f"flip{i}")
-            ks[j] = min(16, ks[j] + 1)
-        raw.append(ks)
-        rows.append(
-            (i, [k / 8.0 for k in ks], data.draw(st.integers(0, 3),
-                                                 label=f"lab{i}"))
-        )
-        doc_rows.append(
-            (
-                i,
-                data.draw(
-                    st.one_of(
-                        st.none(),
-                        st.text(alphabet=list("abcd "), max_size=24),
-                    ),
-                    label=f"txt{i}",
-                ),
-                "en",
-                f"s{i % 3}",
-            )
-        )
-    d = tmp_path_factory.mktemp("fuzz_sim")
-    spark.createDataFrame(
-        rows, "vec_id long, embedding array<float>, label int"
-    ).coalesce(1).write.mode("overwrite").parquet(str(d / "embeddings.parquet"))
-    # td_sim_rerank attaches documents.text onto the ANN candidates
-    spark.createDataFrame(
-        doc_rows, "doc_id long, text string, lang string, source string"
-    ).coalesce(1).write.mode("overwrite").parquet(str(d / "documents.parquet"))
-
-    for name in sorted(SIM):
-        fn, sql = SIM[name]
-        errs = run_pair(spark, str(d), fn, sql)
-        assert errs == [], (name, errs, rows)
-
 def _write_tpch_fuzz_dir(spark, d, seed: int, size: int) -> None:
     """Deterministically expand one drawn seed into a CONSISTENT random
     TPC-H-ish snowflake (plus events/documents/embeddings) with the

@@ -2,7 +2,6 @@
 invocation must process only newly-arrived files (incremental, no
 duplicates)."""
 
-import importlib.util
 import os
 
 import pytest
@@ -594,139 +593,6 @@ def test_stream_timeout_detector_equals_batch_anti(spark, tmp_path_factory):
     claim_timeout_stream(spark, c_dir, r_dir, out_dir, ckpt)
     again = {tuple(r) for r in spark.read.parquet(out_dir).collect()}
     assert again == want
-
-
-def _has_protobuf() -> bool:
-    try:
-        return importlib.util.find_spec("google.protobuf") is not None
-    except ModuleNotFoundError:
-        return False
-
-
-@pytest.mark.skipif(
-    not _has_protobuf(),
-    reason="transformWithStateInPandas needs google.protobuf, not "
-    "shipped in this container (runs on any standard cluster image); "
-    "the processor logic is covered by test_tws_processor_fold_logic",
-)
-def test_tws_tracker_equals_applyinpandas_tracker(spark, tmp_path_factory):
-    """The transformWithStateInPandas tracker (typed ValueState, RocksDB
-    store — the Spark 4 stateful API) produces exactly the same
-    per-page final states as the applyInPandasWithState tracker on the
-    same two-drain event history, including cross-drain state carry and
-    illegal-event rejection."""
-    from datetime import datetime
-
-    from pero_ocr_api_spark.streaming.statemachine_stream import (
-        track_page_states, track_page_states_tws,
-    )
-
-    base = tmp_path_factory.mktemp("twstream")
-    in_dir = str(base / "in")
-    os.makedirs(in_dir, exist_ok=True)
-    t = lambda m: datetime(2024, 5, 1, 10, m, 0)
-
-    batch1 = [
-        ("p1", "created", t(0)), ("p1", "upload", t(1)), ("p1", "claim", t(2)),
-        ("p2", "created", t(0)),
-        ("p3", "created", t(0)), ("p3", "claim", t(1)),   # illegal: ignored
-    ]
-    batch2 = [
-        ("p1", "finish_ok", t(10)),                        # across-drain state
-        ("p2", "upload", t(11)), ("p2", "cancel", t(12)),
-        ("p3", "upload", t(11)),
-        ("p4", "created", t(11)), ("p4", "upload", t(12)),
-        ("p4", "claim", t(13)), ("p4", "finish_fail", t(14)),
-    ]
-    schema = "page_id string, event string, ts timestamp"
-
-    from pyspark.sql import Window as _W
-    from pyspark.sql import functions as _F
-
-    def run(tracker, tag):
-        out_dir, ckpt = str(base / f"out_{tag}"), str(base / f"ck_{tag}")
-        # fresh input feed per tracker so drains align 1:1
-        feed = str(base / f"in_{tag}")
-        os.makedirs(feed, exist_ok=True)
-        spark.createDataFrame(batch1, schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(feed)
-        tracker(spark, feed, out_dir, ckpt)
-        spark.createDataFrame(batch2, schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(feed)
-        tracker(spark, feed, out_dir, ckpt)
-        out = spark.read.parquet(out_dir)
-        w = _W.partitionBy("page_id").orderBy(_F.col("batch_id").desc())
-        return {
-            (r.page_id, r.state, r.last_ts)
-            for r in out.withColumn("rn", _F.row_number().over(w))
-            .filter("rn = 1")
-            .collect()
-        }
-
-    legacy = run(track_page_states, "apiws")
-    tws = run(track_page_states_tws, "tws")
-    assert tws == legacy
-    assert {(p, s) for p, s, _ in tws} == {
-        ("p1", "PROCESSED"), ("p2", "CANCELED"),
-        ("p3", "WAITING"), ("p4", "PROCESSING_FAILED"),
-    }
-
-
-def test_tws_processor_fold_logic():
-    """PageTrackerProcessor's fold through a stubbed ValueState: the
-    legal-edge semantics (cross-call state carry, illegal-event
-    rejection, last_ts advance) hold without the TWS engine — the part
-    of the operator this container can execute (google.protobuf gate,
-    see statemachine_stream.py)."""
-    import pandas as pd
-
-    from pero_ocr_api_spark.streaming.statemachine_stream import (
-        PageTrackerProcessor,
-    )
-
-    class FakeValueState:
-        def __init__(self):
-            self._v = None
-
-        def exists(self):
-            return self._v is not None
-
-        def get(self):
-            return self._v
-
-        def update(self, v):
-            self._v = v
-
-    class FakeHandle:
-        def __init__(self):
-            self.cell = FakeValueState()
-
-        def getValueState(self, name, schema, ttlDurationMs=None):
-            return self.cell
-
-    proc = PageTrackerProcessor()
-    handle = FakeHandle()
-    proc.init(handle)
-
-    def feed(events):
-        pdf = pd.DataFrame(
-            {"event": [e for e, _ in events],
-             "ts": [pd.Timestamp(t) for _, t in events]}
-        )
-        return list(proc.handleInputRows(("p1",), iter([pdf]), None))
-
-    out1 = feed([("created", "2024-05-01 10:00"),
-                 ("claim", "2024-05-01 10:01")])       # claim illegal here
-    assert out1[0].loc[0, "state"] == "CREATED"
-    out2 = feed([("upload", "2024-05-01 10:02"),
-                 ("claim", "2024-05-01 10:03"),
-                 ("finish_ok", "2024-05-01 10:04")])   # carries prior state
-    assert out2[0].loc[0, "state"] == "PROCESSED"
-    assert out2[0].loc[0, "last_ts"] == pd.Timestamp("2024-05-01 10:04")
-    assert handle.cell.get()[0] == "PROCESSED"
-    proc.close()
 
 
 def test_sliding_rate_equals_batch(spark, tmp_path_factory):
