@@ -2,9 +2,8 @@
 
 Runs EVERY registered query at /root/testdata/sf0.1 and compares it
 cell-exact (row count + schema + values, via pero_ocr_api_spark.compare)
-against its DuckDB oracle; rows-only entries (the cross-engine-
-incomparable sketches) run and must return rows.  Regenerates
-BENCH/SF01_VERIFY.md in registry order.
+against its DuckDB oracle (an entry without one is reported as an
+error).  Regenerates BENCH/SF01_VERIFY.md in registry order.
 
 Usage: python BENCH/sf01_verify.py   (~15-25 min at local[32])
 """
@@ -37,29 +36,24 @@ def main() -> int:
     qs = entrymod.queries()
     osql = entrymod.oracle_sql()
     rows_out: list[tuple[str, str, int, float]] = []
-    n_ok = n_rows_only = n_bad = 0
+    n_ok = n_bad = 0
     for name, fn in qs.items():
         t0 = time.monotonic()
         try:
             spdf = fn(spark, SF_DIR).toPandas()
-            if name in osql:
-                con = duckdb_con(SF_DIR)
-                try:
-                    odf = con.execute(osql[name]).fetchdf()
-                finally:
-                    con.close()
-                errs = compare_frames(spdf, odf)
-                check = "OK" if not errs else "MISMATCH: " + "; ".join(errs)
-            else:
-                check = "rows-only" if len(spdf) > 0 else "rows-only EMPTY"
+            con = duckdb_con(SF_DIR)
+            try:
+                odf = con.execute(osql[name]).fetchdf()
+            finally:
+                con.close()
+            errs = compare_frames(spdf, odf)
+            check = "OK" if not errs else "MISMATCH: " + "; ".join(errs)
             nr = len(spdf)
         except Exception as exc:  # noqa: BLE001 — recorded, not raised
             check, nr = f"ERROR: {type(exc).__name__}: {exc}", -1
         wall = time.monotonic() - t0
         if check == "OK":
             n_ok += 1
-        elif check == "rows-only":
-            n_rows_only += 1
         else:
             n_bad += 1
         rows_out.append((name, check, nr, wall))
@@ -67,15 +61,13 @@ def main() -> int:
     spark.stop()
 
     ts = datetime.datetime.now(datetime.timezone.utc).strftime("%Y-%m-%d")
-    n_oracled = n_ok + n_bad
     lines = [
         "# Full-registry verification at sf0.1 (10x the driver gate)",
         "",
         "Every registered query executed at `" + SF_DIR + "` and compared",
-        "cell-exact (row count + schema + values) against its DuckDB oracle;",
-        "rows-only entries (the two cross-engine-incomparable sketches) ran",
-        f"and returned rows.  **{n_ok}/{n_oracled} green, {n_bad} "
-        f"mismatches; {n_rows_only} rows-only.**  Captured {ts} by",
+        "cell-exact (row count + schema + values) against its DuckDB oracle.",
+        f"**{n_ok}/{n_ok + n_bad} green, {n_bad} mismatches or errors.**",
+        f"Captured {ts} by",
         "`python BENCH/sf01_verify.py` (round 5; includes the round-5",
         "additions td_dedup_substring_spans, td_text_hash_classifier",
         "and the device-micro-batched engine).",
@@ -90,7 +82,7 @@ def main() -> int:
         lines.append(f"| {name} | {check} | {nr} | {wall:.1f} |")
     with open(OUT, "w") as f:
         f.write("\n".join(lines) + "\n")
-    print(f"wrote {OUT}: {n_ok} OK, {n_rows_only} rows-only, {n_bad} bad")
+    print(f"wrote {OUT}: {n_ok} OK, {n_bad} bad")
     return 1 if n_bad else 0
 
 

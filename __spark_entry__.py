@@ -19,8 +19,6 @@ sys.path.insert(0, str(Path(__file__).resolve().parent))
 from pero_ocr_api_spark.queries import extraction as _qx
 from pero_ocr_api_spark.queries import extraction_sql as _sx
 from pero_ocr_api_spark.functions.cdc import REGISTRY as _CDC
-from pero_ocr_api_spark.functions.cluster import REGISTRY as _CLUSTER
-from pero_ocr_api_spark.functions.curation import REGISTRY as _CUR
 from pero_ocr_api_spark.functions.dedup import REGISTRY as _DEDUP
 from pero_ocr_api_spark.functions.maincontent import REGISTRY as _MC
 from pero_ocr_api_spark.functions.text import REGISTRY as _TEXT
@@ -96,15 +94,9 @@ _DRIVER_WINDOW = [
     "td_token_budget_select",
     # NEW in round 5: corpus snapshot diff (dataset-versioning report)
     "td_corpus_diff",
-    # NEW in round 5: dedup-AWARE train/val/test split (split hash on
-    # the near-dup cluster key -> no train/test near-dup leakage)
-    "td_split_leakage_safe",
     # NEW in round 5: inverted-index build (postings lists; the sparse
     # counterpart of the ANN index-build plane)
     "td_text_postings",
-    # NEW in round 5: the whole-engine curation funnel report (raw ->
-    # nonempty -> quality gate -> classifier gate -> dedup canonical)
-    "td_curation_funnel",
     # NEW in round 5: cross-document LINE-level boilerplate dedup
     # (RefinedWeb/MassiveText pass — removal unit is the line, evidence
     # is cross-doc frequency; blacklist broadcasts like the band cap)
@@ -118,10 +110,6 @@ _DRIVER_WINDOW = [
     # corpus is never globally ranked; oracle runs the naive
     # row_number deal — a cross-ALGORITHM gate like token_budget)
     "td_shard_plan",
-    # NEW in round 5: C4-style token-blocklist gate (the "bad words"
-    # document filter) — literal-array higher-order filter, zero
-    # shuffle, with the per-doc audit trail
-    "td_blocklist_filter",
     # NEW in round 5: the exact-substring dedup SURGERY (Lee et al.
     # applied): aggregate-fold splice over disjoint spans vs the
     # oracle's naive per-char algorithm — another cross-ALGORITHM gate
@@ -137,12 +125,6 @@ _DRIVER_WINDOW = [
     # exactly (sketch_md5).  cp_sql_tpch_q20_excess_stock
     # (r03+r04-green, untouched) is the evicted fill entry
     "td_text_winnowing",
-    # NEW in round 5: winnowing-based decontamination — per-pair
-    # contamination localization (which train doc, how many shared
-    # fingerprints), df-capped via the band-cap broadcast idiom; also
-    # pure-Python-oracled.  cp_sql_tpch_q11_stock (r03+r04-green,
-    # untouched) is the evicted fill entry
-    "td_decontam_winnow",
     # touched in round 5 (zero-norm exclusion, both engines): re-record it
     "td_dedup_tfidf_cosine",
     # re-confirmation fill: r04-green entries, unchanged since
@@ -153,8 +135,6 @@ _DRIVER_WINDOW = [
     "td_length_deciles",
     "cp_sql_tpch_q2_min_cost", "cp_sql_tpch_q9_profit",
     "td_dedup_incremental", "td_text_bpe_pairs",
-    "td_curation_dsir",
-    "td_curation_gumbel_sample",
     # touched in round 5 (fuzz-gate find): the exact-dedup oracle now
     # mirrors Spark's empty-vs-NULL fingerprint semantics
     # (array_to_string([]) is NULL in DuckDB, array_join([]) is '' in
@@ -173,9 +153,7 @@ def _registry() -> dict[str, tuple]:
     reg.update(_TEXT)
     reg.update(_MC)
     reg.update(_DEDUP)
-    reg.update(_CLUSTER)
     reg.update(_CDC)
-    reg.update(_CUR)
     reg.update(_MM)
     reg.update(_SQL)
     ordered = {name: reg[name] for name in _DRIVER_WINDOW}

@@ -82,7 +82,3 @@ LINE_W = 3              # token-segment width standing in for "lines"
 LINE_DF = 3             # a segment repeated in >= this many DISTINCT
                         # docs is boilerplate (RefinedWeb-style)
 N_SHARDS = 8            # output shards for the LPT shard-balance plan
-# C4-style token blocklist (stand-in terms drawn from the synthetic
-# vocabulary so the gate fires on testdata; production swaps in the
-# real wordlist — e.g. LDNOOBW — as the same broadcast literal array)
-BLOCKLIST = ("dup", "leak", "spam")

@@ -644,8 +644,8 @@ def q_substring_apply(spark: SparkSession, sf: str) -> DataFrame:
     text (every character covered by a corpus-duplicated span removed)
     — the surgery step that turns td_dedup_substring_spans' profile
     into the actual Lee et al. 2022 training corpus.  Output carries
-    md5(cleaned) plus the audit counts (same payload-compression
-    contract as td_pii_redact); docs with no duplicated span —
+    md5(cleaned) plus the audit counts (the payload is compressed to
+    its md5); docs with no duplicated span —
     including docs shorter than L and NULL text — pass through
     verbatim.
 

@@ -816,8 +816,8 @@ def q_novelty(spark: SparkSession, sf: str) -> DataFrame:
 
     Scale shape: one df aggregate on the shingle key (combine-
     shuffled) joined back onto the shingle table on the same
-    high-cardinality key, then a per-doc aggregate — the same two
-    shuffles as td_decontaminate, nothing pairwise anywhere."""
+    high-cardinality key, then a per-doc aggregate — two shuffles,
+    nothing pairwise anywhere."""
     from .dedup import shingles_df
 
     sh = shingles_df(spark, sf)
@@ -1366,8 +1366,7 @@ WINNOW_W = 4   # winnowing window: >= 1 selection per W consecutive k-grams
 def _winnow_sels_ctes() -> str:
     """Shared CTE chain ending in wsels(doc_id, n_kgrams, h, sp): the
     per-full-window winnowing selections (duplicates possible — one
-    row per window), consumed by the sketch op here and the
-    winnowing-decontamination op in curation.py."""
+    row per window), consumed by the sketch op here."""
     return f"""pos AS (
   SELECT doc_id, length(text) - {WINNOW_K} + 1 AS n_kgrams,
          CAST(t.i AS INTEGER) AS p,
@@ -1400,8 +1399,8 @@ FROM sels GROUP BY doc_id"""
 def _winnow_selected(spark: SparkSession, sf: str) -> DataFrame:
     """(doc_id, n_kgrams, h, sp): the winnowing selections, one row
     per full window (duplicates possible — the same (h, sp) wins
-    consecutive windows).  The Spark twin of the wsels CTE; shared by
-    the sketch op below and curation's td_decontam_winnow."""
+    consecutive windows).  The Spark twin of the wsels CTE, used by
+    the sketch op below."""
     k, w = WINNOW_K, WINNOW_W
     docs = load_table(spark, sf, "documents").select(
         "doc_id", "text", (F.length("text") - k + 1).alias("n_kgrams")

@@ -21,7 +21,8 @@ Mechanics:
   metrics of that same write;
 - a group with no staged docs (no ``_staged/group_id=G`` directory)
   is neither planned nor written: it commits a lineage row with zero
-  counts and zero metrics, in commit order, without a Spark job;
+  counts and zero metrics, in commit order, without a Spark job (an
+  empty source stages no group, so all its groups commit this way);
 - one planner thread builds group G+1's plan (filter → extract →
   observe; driver-only, it runs no Spark job) while group G writes, so
   the Py4J-bound plan construction leaves the critical path; writes,
@@ -39,7 +40,7 @@ Mechanics:
   a killed job re-runs only the uncommitted remainder and the final
   table is identical to an uninterrupted run (tests prove it);
 - ``read_spans`` / ``read_docs`` are an explode and a projection of the
-  committed results.
+  committed results (zero rows when every committed group is empty).
 
 On a real cluster the same code commits to an Iceberg catalog
 (plans/iceberg_backend.py) — only _write_group / _read_committed change.
@@ -57,7 +58,13 @@ from concurrent.futures import ThreadPoolExecutor
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from .pipeline import ExtractMetrics, extract, result_docs, result_spans
+from .pipeline import (
+    DOCUMENTS_SCHEMA,
+    ExtractMetrics,
+    extract,
+    result_docs,
+    result_spans,
+)
 
 
 class SimulatedFailure(RuntimeError):
@@ -182,6 +189,10 @@ class CheckpointedExtractor:
         bucketed by doc_id this staging step disappears — the layout
         already is the grouping."""
         staged = self._staged_dir()
+        # read back with the grouped source's schema, not an inferred
+        # one: an empty source stages no group_id=G directory and no
+        # file to infer it from
+        schema = self._grouped(documents).schema
         meta = self._meta()
         if "fingerprint" not in meta:
             # the staging write observes the source's fingerprint; writing
@@ -195,7 +206,7 @@ class CheckpointedExtractor:
             _write_json_atomic(
                 self._meta_path(), {**meta, "fingerprint": [got["n"], got["h"]]}
             )
-            return spark.read.parquet(staged)
+            return spark.read.schema(schema).parquet(staged)
         # Resuming over an existing snapshot: refuse if the caller's
         # documents differ from what was frozen — silently processing
         # the stale snapshot is the same divergence class the n_groups
@@ -211,7 +222,7 @@ class CheckpointedExtractor:
                 f"({fp_new[1]}) — resuming would silently process "
                 "stale data; use a fresh output_dir for a changed source"
             )
-        return spark.read.parquet(staged)
+        return spark.read.schema(schema).parquet(staged)
 
     def run(
         self,
@@ -333,9 +344,13 @@ class CheckpointedExtractor:
                     "the expiry horizon is gone (expire_snapshots)"
                 )
             paths.append(p)
-        if not paths:
+        if paths:
+            return spark.read.parquet(*paths)
+        if not any(lin["snapshot_id"] <= effective for lin in committed.values()):
             raise ValueError("no committed groups")
-        return spark.read.parquet(*paths)
+        # every visible group is empty: the results of no documents
+        empty = spark.createDataFrame([], DOCUMENTS_SCHEMA)
+        return extract(spark, empty, with_metrics=False).results
 
     # ---- compaction (rewrite-data-files) + snapshot expiry ----
     def _compaction_manifests(self) -> list[dict]:

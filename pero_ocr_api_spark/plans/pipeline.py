@@ -64,6 +64,12 @@ from ..operators.normalize import (
 
 DEFAULT_ENGINE_CONFIG = {"engine": "stub-ocr", "version": 1}
 
+# the input ``extract`` reads: one row per document
+DOCUMENTS_SCHEMA = (
+    "doc_id string, "
+    "spans array<struct<kind:string, text:string, media_ref:string, offset:int>>"
+)
+
 # one engine-config broadcast per canonical config JSON, shared by every
 # extract on the live SparkContext instead of leaking a broadcast file
 # and block per call; a process has one live context, and a new one

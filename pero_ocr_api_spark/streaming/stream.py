@@ -15,9 +15,13 @@ micro-batch already holds every span of its documents.  The plan's one
 so as a streaming aggregation it could not emit in append mode and
 would keep state for every document ever seen.  The pipeline therefore
 runs inside ``foreachBatch`` — each micro-batch is a bounded DataFrame
-processed by the SAME batch plan (plans/pipeline.extract), then
-appended to the sink.  Output equality
-with the pure batch run is asserted in tests/test_streaming.py.
+processed by the SAME batch plan (plans/pipeline.extract), and its
+per-document ``results`` (doc_id, score, status, spans[]) land under
+``results/batch_id=N`` in ONE write action, the one-table layout of
+the checkpointed extractor.  ``pipeline.result_spans`` and
+``result_docs`` read the spans and docs back from that table.  Output
+equality with the pure batch run is asserted in
+tests/test_streaming.py.
 """
 
 from __future__ import annotations
@@ -25,26 +29,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import (
-    ArrayType, IntegerType, StringType, StructField, StructType,
-)
 
-from ..plans.pipeline import extract
-
-SPAN_STRUCT = StructType(
-    [
-        StructField("kind", StringType()),
-        StructField("text", StringType()),
-        StructField("media_ref", StringType()),
-        StructField("offset", IntegerType()),
-    ]
-)
-DOCUMENTS_SCHEMA = StructType(
-    [
-        StructField("doc_id", StringType()),
-        StructField("spans", ArrayType(SPAN_STRUCT)),
-    ]
-)
+from ..plans.pipeline import DOCUMENTS_SCHEMA, extract
 
 
 def incremental_extract(
@@ -55,17 +41,17 @@ def incremental_extract(
     salt_partitions: int | None = None,
 ):
     """Drain all currently-available document parquet files through the
-    extraction pipeline exactly once (availableNow) and append the span
-    output to ``output_dir``.  Re-invoking later processes only files
-    that arrived since (offsets tracked in ``checkpoint_dir``)."""
+    extraction pipeline exactly once (availableNow) and write each
+    micro-batch's per-document results under ``output_dir/results``.
+    Re-invoking later processes only files that arrived since (offsets
+    tracked in ``checkpoint_dir``)."""
     stream = (
         spark.readStream.schema(DOCUMENTS_SCHEMA)
         .option("maxFilesPerTrigger", 64)
         .parquet(input_dir)
     )
 
-    spans_out = os.path.join(output_dir, "spans")
-    docs_out = os.path.join(output_dir, "docs")
+    results_out = os.path.join(output_dir, "results")
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         res = extract(
@@ -73,19 +59,14 @@ def incremental_extract(
             batch_df,
             salt_partitions=salt_partitions,
             with_metrics=False,
-            persist_inference=True,
         )
         # batch-scoped overwrite: a retried micro-batch (crash between
         # the parquet write and the checkpoint commit) rewrites its own
         # batch_id directory instead of appending duplicates; batch_id
         # surfaces as a partition column on read
-        res.spans.write.mode("overwrite").parquet(
-            os.path.join(spans_out, f"batch_id={batch_id}")
+        res.results.write.mode("overwrite").parquet(
+            os.path.join(results_out, f"batch_id={batch_id}")
         )
-        res.docs.write.mode("overwrite").parquet(
-            os.path.join(docs_out, f"batch_id={batch_id}")
-        )
-        res.unpersist()
 
     query = (
         stream.writeStream.foreachBatch(process_batch)

@@ -151,6 +151,26 @@ def test_empty_groups_commit_without_a_plan(
     assert {k: sum(m[k] for m in metrics) for k in metrics[0]} == _oracle_metrics(docs)
 
 
+def test_empty_source_commits_and_resumes(spark, docs, tmp_path_factory):
+    """A source with no documents stages no group directory.  The run
+    and a resume both complete with every group committed at zero
+    counts, and both reads return zero rows with their usual columns."""
+    empty = docs.filter(F.lit(False))
+    ck = CheckpointedExtractor(str(tmp_path_factory.mktemp("ckvoid")), n_groups=4)
+    for run_id in ("first", "resume"):
+        committed = ck.run(spark, empty, run_id=run_id)
+        assert sorted(committed) == [0, 1, 2, 3]
+        for lin in committed.values():
+            assert lin["run_id"] == "first"
+            assert (lin["doc_count"], lin["span_count"]) == (0, 0)
+            assert set(lin["metrics"].values()) == {0}
+    full = extract(spark, docs, with_metrics=False)
+    for got, want in ((ck.read_spans(spark), full.spans),
+                      (ck.read_docs(spark), full.docs)):
+        assert got.schema.simpleString() == want.schema.simpleString()
+        assert got.count() == 0
+
+
 def test_crash_after_group_data_before_manifest(
     spark, docs, uninterrupted, tmp_path_factory, monkeypatch
 ):

@@ -90,31 +90,12 @@ def test_main_content_classifier_edges(spark):
     assert out["B"].content == "" and out["B"].n_good == 0
 
 
-def test_connected_components_chain_triangle_singleton_pair(spark):
-    """Min-label propagation fixpoint: a 3-chain, a triangle, and an
-    isolated pair each collapse to their lexicographic-min doc id."""
-    from pero_ocr_api_spark.functions.cluster import connected_components
-
-    pairs = spark.createDataFrame(
-        [("a", "b"), ("b", "c"), ("x", "y"), ("y", "z"), ("x", "z"),
-         ("q", "r")],
-        "doc_a string, doc_b string",
-    )
-    got = {r.doc_id: r.cluster_id for r in connected_components(pairs).collect()}
-    assert got == {"a": "a", "b": "a", "c": "a",
-                   "x": "x", "y": "x", "z": "x",
-                   "q": "q", "r": "q"}
-
-
 def test_minhash_degenerate_bucket_bounded(spark, tmp_path):
     """VERDICT r2: a corpus of N identical docs must NOT generate the
     quadratic ~N²/2 candidate pairs a degenerate band bucket implies.
     The band cap routes the over-full bucket through the
     exact-signature star pre-pass: exactly N-1 (rep, other) pairs, all
-    jaccard 1.0 — linear, and connected-components restores the full
-    duplicate cluster."""
-    from pyspark.sql import functions as F
-
+    jaccard 1.0 — linear."""
     n = 200
     text = "the quick brown fox jumps over the lazy dog again and again"
     docs = spark.createDataFrame(
@@ -126,30 +107,6 @@ def test_minhash_degenerate_bucket_bounded(spark, tmp_path):
     assert len(rows) == n - 1  # star, not quadratic (would be 19900)
     assert all(r.doc_a == "d0000" and r.jaccard == 1.0 for r in rows)
     assert {r.doc_b for r in rows} == {f"d{i:04d}" for i in range(1, n)}
-    # the full cluster is recoverable downstream
-    from pero_ocr_api_spark.functions.cluster import connected_components
-
-    labels = connected_components(pairs.select("doc_a", "doc_b"))
-    assert labels.filter(F.col("cluster_id") == "d0000").count() == n
-
-
-def test_connected_components_raises_when_unconverged(spark):
-    """ADVICE r2: an iteration budget too small for the component
-    diameter must FAIL LOUDLY — a silent split would keep extra
-    'canonical' docs downstream with no error."""
-    import pytest as _pytest
-
-    from pero_ocr_api_spark.functions.cluster import connected_components
-
-    chain = spark.createDataFrame(
-        [(f"d{i}", f"d{i+1}") for i in range(6)],
-        "doc_a string, doc_b string",
-    )
-    with _pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(chain, max_iter=1)
-    # a sufficient budget converges to one cluster
-    got = connected_components(chain, max_iter=10)
-    assert {r.cluster_id for r in got.collect()} == {"d0"}
 
 
 def test_pack_groups_use_full_byte(spark, sf_smoke):
@@ -380,32 +337,6 @@ def test_merge_cdc_ops_semantics(spark):
     assert sorted((r.id, r.v) for r in again.collect()) == got
 
 
-def test_gumbel_topk_is_weight_biased_and_deterministic(spark):
-    """Heavier log-weights must dominate the sample, and the draw must
-    be identical across invocations (hashed noise, no RNG state)."""
-    from pyspark.sql import functions as F
-
-    from pero_ocr_api_spark.functions.curation import gumbel_topk
-
-    # 500 light docs (weight 1) + 500 heavy docs (weight e^4 ≈ 55x)
-    df = spark.range(1000).select(
-        F.col("id").alias("doc_id"),
-        F.when(F.col("id") >= 500, 4.0).otherwise(0.0).alias("lw"),
-    )
-    s1 = gumbel_topk(df, F.col("lw"), 100)
-    rows = s1.collect()
-    heavy = sum(1 for r in rows if r.doc_id >= 500)
-    # E[heavy] ≈ 98 under P ∝ e^lw; even with hash noise it must crush
-    # the uniform expectation of 50
-    assert heavy >= 85, heavy
-    assert len(rows) == 100
-    # determinism
-    s2 = gumbel_topk(df, F.col("lw"), 100)
-    assert sorted(r.doc_id for r in rows) == sorted(
-        r.doc_id for r in s2.collect()
-    )
-
-
 def test_media_refs_stage_is_wide(spark, sf_smoke):
     """Regression for the AQE-coalesce-then-explode trap: the media-ref
     relation feeding the heavy mapInPandas stages must carry cluster
@@ -540,93 +471,6 @@ def test_corpus_diff_null_text_parity(spark, tmp_path):
     # sanity: the synthetic buckets produced a non-degenerate diff
     statuses = {r["status"] for r in out.collect()}
     assert "unchanged" in statuses and len(statuses) >= 3
-
-
-def test_leakage_safe_split_keeps_clusters_together(spark, sf_smoke):
-    """Every near-dup cluster's members must share ONE split — the
-    invariant td_corpus_split's per-doc hash cannot give."""
-    from pero_ocr_api_spark.functions.cluster import (
-        REGISTRY as CL, connected_components,
-    )
-    from pero_ocr_api_spark.functions.dedup import q_ngram_jaccard
-
-    split = {
-        r["doc_id"]: r["split"]
-        for r in CL["td_split_leakage_safe"][0](spark, sf_smoke).collect()
-    }
-    pairs = q_ngram_jaccard(spark, sf_smoke).select("doc_a", "doc_b")
-    clusters = connected_components(pairs).collect()
-    assert clusters, "fixture must contain near-dup clusters"
-    by_cluster = {}
-    for r in clusters:
-        by_cluster.setdefault(r["cluster_id"], set()).add(split[r["doc_id"]])
-    assert all(len(v) == 1 for v in by_cluster.values()), by_cluster
-    # and the waterfall still produces all three splits corpus-wide
-    assert set(split.values()) == {"train", "val", "test"}
-
-
-def test_curation_funnel_is_monotone(spark, sf_smoke):
-    """Cumulative stages can only shrink: docs and tokens must be
-    non-increasing down the funnel, raw must cover the whole corpus,
-    and every stage row is present exactly once in order."""
-    from pero_ocr_api_spark.functions.curation import REGISTRY
-    from pero_ocr_api_spark.session import load_table
-
-    rows = sorted(
-        REGISTRY["td_curation_funnel"][0](spark, sf_smoke).collect(),
-        key=lambda r: r["stage_idx"],
-    )
-    assert [r["stage"] for r in rows] == [
-        "raw", "nonempty", "quality_gate", "classifier_gate",
-        "dedup_canonical",
-    ]
-    assert rows[0]["n_docs"] == load_table(spark, sf_smoke, "documents").count()
-    for a, b in zip(rows, rows[1:]):
-        assert b["n_docs"] <= a["n_docs"]
-        assert b["n_tokens"] <= a["n_tokens"]
-    assert rows[-1]["n_docs"] > 0  # the funnel keeps something
-
-
-def test_curation_funnel_matches_source_ops(spark, sf_smoke):
-    """The funnel's stage predicates are hand-inlined copies of
-    td_corpus_filter, td_text_hash_classifier and td_dedup_canonical —
-    this pins the docstring's exactness promise so an edit to any
-    source op cannot silently desynchronize the funnel's counts."""
-    from pero_ocr_api_spark.functions.cluster import REGISTRY as CL
-    from pero_ocr_api_spark.functions.curation import REGISTRY as CUR
-    from pero_ocr_api_spark.functions.text import REGISTRY as TXT
-
-    rows = {
-        r["stage"]: r
-        for r in CUR["td_curation_funnel"][0](spark, sf_smoke).collect()
-    }
-    quality_keep = {
-        r["doc_id"]
-        for r in TXT["td_corpus_filter"][0](spark, sf_smoke).collect()
-        if r["keep"]
-    }
-    assert rows["quality_gate"]["n_docs"] == len(quality_keep)
-
-    cls_keep = {
-        r["doc_id"]
-        for r in TXT["td_text_hash_classifier"][0](spark, sf_smoke).collect()
-        if r["keep"]
-    }
-    assert rows["classifier_gate"]["n_docs"] == len(quality_keep & cls_keep)
-
-    clustered = {
-        r["doc_id"]
-        for r in CL["td_dedup_clusters"][0](spark, sf_smoke).collect()
-    }
-    canon = {
-        r["canonical_doc"]
-        for r in CL["td_dedup_canonical"][0](spark, sf_smoke).collect()
-    }
-    survivors = {
-        d for d in (quality_keep & cls_keep)
-        if d not in clustered or d in canon
-    }
-    assert rows["dedup_canonical"]["n_docs"] == len(survivors)
 
 
 def test_line_dedup_drops_exactly_frequent_lines(spark, tmp_path):
@@ -767,42 +611,6 @@ def test_tfidf_cosine_zero_norm_pairs_excluded(spark, tmp_path):
     assert run_pair(spark, str(tmp_path), fn, sql) == []
     out = {(r["doc_a"], r["doc_b"]) for r in fn(spark, str(tmp_path)).collect()}
     assert (2, 3) in out and (0, 1) in out
-
-
-def test_blocklist_filter_semantics(spark, tmp_path):
-    """C4 bad-words gate on a hand-built corpus: blocked token anywhere
-    (any case, repeated) drops the doc with the full audit trail;
-    clean, empty and NULL texts keep with n_hits=0/matched=''."""
-    from pero_ocr_api_spark.compare import run_pair
-    from pero_ocr_api_spark.functions.curation import REGISTRY
-
-    texts = [
-        "clean scan join merge",          # keep
-        "a dup in the middle",            # 1 hit
-        "DUP dup spam Dup",               # 4 hits, 2 distinct terms
-        "",                               # keep (no tokens)
-        None,                             # keep (NULL text)
-        "leakage is not leak able",       # 'leakage' != 'leak'; 1 hit
-    ]
-    rows = [
-        (i, t, "en", "s0", 0 if t is None else len(t))
-        for i, t in enumerate(texts)
-    ]
-    spark.createDataFrame(
-        rows,
-        "doc_id long, text string, lang string, source string,"
-        " n_chars long",
-    ).coalesce(1).write.mode("overwrite").parquet(
-        str(tmp_path / "documents.parquet")
-    )
-    fn, sql = REGISTRY["td_blocklist_filter"]
-    assert run_pair(spark, str(tmp_path), fn, sql) == []
-    out = {r["doc_id"]: r for r in fn(spark, str(tmp_path)).collect()}
-    assert out[0]["keep"] and out[0]["n_hits"] == 0 and out[0]["matched"] == ""
-    assert not out[1]["keep"] and out[1]["n_hits"] == 1
-    assert out[2]["n_hits"] == 4 and out[2]["matched"] == "dup,spam"
-    assert out[3]["keep"] and out[4]["keep"]
-    assert not out[5]["keep"] and out[5]["matched"] == "leak"
 
 
 def test_substring_spans_merge_and_apply(spark, tmp_path):
@@ -946,88 +754,3 @@ def test_winnowing_plan_single_exchange(spark, sf_smoke):
     )
     assert plan.count("Exchange hashpartitioning") == 1, plan
     assert "BroadcastExchange" not in plan, plan
-
-
-def test_decontam_winnow_matches_pure_python(spark, tmp_path):
-    """Third-engine oracle for the winnowing decontamination: pure
-    Python recomputes split assignment (md5-byte bucket), winnowing
-    fingerprint sets, the train df cap, pair overlaps, and the
-    per-heldout-doc rollup — and must agree with BOTH engines."""
-    import hashlib
-
-    from pero_ocr_api_spark.compare import run_pair
-    from pero_ocr_api_spark.functions.curation import (
-        REGISTRY as CUR, WINNOW_DF_CAP, WINNOW_MIN_SHARED,
-    )
-    from pero_ocr_api_spark.functions.text import WINNOW_K, WINNOW_W
-
-    shared_a = "the first plagiarized long passage used everywhere ok"
-    shared_b = "a second distinct duplicated block of notable length!"
-    texts = {}
-    for i in range(60):
-        uniq = hashlib.md5(f"u{i}".encode()).hexdigest()
-        if i % 3 == 0:
-            texts[i] = uniq + " " + shared_a + " " + uniq[::-1]
-        elif i % 3 == 1:
-            texts[i] = uniq + " " + shared_b
-        else:
-            texts[i] = uniq + hashlib.md5(f"v{i}".encode()).hexdigest()
-    rows = [(i, t, "en", "s0", len(t)) for i, t in texts.items()]
-    spark.createDataFrame(
-        rows,
-        "doc_id long, text string, lang string, source string,"
-        " n_chars long",
-    ).coalesce(1).write.mode("overwrite").parquet(
-        str(tmp_path / "documents.parquet")
-    )
-
-    def bucket(doc_id):
-        h = hashlib.md5(str(doc_id).encode()).hexdigest()
-        return int(h[:2], 16)
-
-    def fps(text):
-        k, w = WINNOW_K, WINNOW_W
-        n = len(text) - k + 1
-        if n < w:
-            return set()
-        hs = [hashlib.md5(text[p:p + k].encode()).hexdigest()
-              for p in range(n)]
-        out = set()
-        for s in range(n - w + 1):
-            h, np = min((hs[s + j], -(s + j + 1)) for j in range(w))
-            out.add(h)
-        return out
-
-    split = {i: ("train" if bucket(i) < 205 else "heldout") for i in texts}
-    f = {i: fps(t) for i, t in texts.items()}
-    tr_df = {}
-    for i, s in split.items():
-        if s == "train":
-            for h in f[i]:
-                tr_df[h] = tr_df.get(h, 0) + 1
-    ok = {h for h, d in tr_df.items() if d <= WINNOW_DF_CAP}
-    expected = {}
-    for i, s in split.items():
-        if s != "heldout":
-            continue
-        pairs = {}
-        for j, sj in split.items():
-            if sj != "train":
-                continue
-            n = len(f[i] & f[j] & ok)
-            if n >= WINNOW_MIN_SHARED:
-                pairs[j] = n
-        if pairs:
-            mx = max(pairs.values())
-            top = min(j for j, n in pairs.items() if n == mx)
-            expected[i] = (len(pairs), mx, top)
-
-    fn, sql = CUR["td_decontam_winnow"]
-    assert run_pair(spark, str(tmp_path), fn, sql) == []
-    got = {
-        r["doc_id"]: (r["n_contaminating"], r["max_shared"],
-                      r["top_train_doc"])
-        for r in fn(spark, str(tmp_path)).collect()
-    }
-    assert expected, "fixture produced no contamination — inputs broken"
-    assert got == expected

@@ -8,11 +8,9 @@ import pytest
 
 import __spark_entry__ as entry_mod
 
-# Iterative queries run eagerly at plan-build time (localCheckpoint
-# loop); their components are linted via their own tests instead.
+# Queries that run eagerly at plan-build time (localCheckpoint); their
+# components are linted via their own tests instead.
 _EAGER = {
-    "td_dedup_clusters", "td_dedup_canonical", "td_split_leakage_safe",
-    "td_curation_funnel",
     # localCheckpoint at plan-build (single materialized scoring scan)
     "td_token_budget_select",
 }
@@ -22,13 +20,11 @@ _EAGER = {
 # list crossed in deliberately).
 _BNLJ_OK = {
     "cp_admin_add_engine",   # 1-row max-id aggregates crossed into inserts
-    "td_curation_dsir",      # 1-row feature-total aggregate crossed in
     "td_text_idf",           # 1-row corpus-size aggregate crossed in
     "td_text_unigram_ce",    # 1-row corpus-size aggregate crossed in
     "td_text_bigram_ce",     # 1-row vocab-size aggregate crossed into
                              # the |vocab|-row history table (not the
                              # per-bigram stream)
-    "td_lang_rebalance",     # 1-row waterfill-scale aggregate crossed in
     "td_text_bm25",          # 1-row corpus-stats aggregate crossed in
     # partsupp derivation: part × a fixed 4-row VALUES list (the
     # deterministic in-SQL stand-in for the absent partsupp table)

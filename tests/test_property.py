@@ -261,12 +261,11 @@ def test_fuzz_new_ops_cross_engine(spark, tmp_path_factory, texts, data):
     parquet dir and each op runs through the real run_pair gate."""
     from pero_ocr_api_spark.compare import run_pair
     from pero_ocr_api_spark.functions.cdc import REGISTRY as CDC
-    from pero_ocr_api_spark.functions.curation import REGISTRY as CUR
     from pero_ocr_api_spark.functions.text import REGISTRY as TXT
 
     rows = []
     for i, t in enumerate(texts):
-        # bias toward duplicate content so diff/cluster paths light up
+        # bias toward duplicate content so diff/dedup paths light up
         if t is not None and data.draw(st.booleans(), label=f"dup{i}"):
             t = texts[0] if texts[0] is not None else t
         rows.append(
@@ -284,7 +283,6 @@ def test_fuzz_new_ops_cross_engine(spark, tmp_path_factory, texts, data):
         "doc_id long, text string, lang string, source string, n_chars long",
     ).coalesce(1).write.mode("overwrite").parquet(str(d / "documents.parquet"))
 
-    from pero_ocr_api_spark.functions.cluster import REGISTRY as CL
     from pero_ocr_api_spark.functions.dedup import REGISTRY as DD
 
     for name, reg in [
@@ -294,13 +292,10 @@ def test_fuzz_new_ops_cross_engine(spark, tmp_path_factory, texts, data):
         ("td_token_budget_select", TXT),
         ("td_text_postings", TXT),
         ("td_corpus_diff", CDC),
-        ("td_curation_funnel", CUR),
         ("td_dedup_lines", DD),
         ("td_text_bigram_ce", TXT),
         ("td_shard_plan", TXT),
-        ("td_blocklist_filter", CUR),
         ("td_text_winnowing", TXT),
-        ("td_decontam_winnow", CUR),
         # established documents-table ops: random corpora harden the
         # whole text/dedup plane, not just this round's additions
         ("td_text_tokens", TXT),
@@ -315,11 +310,10 @@ def test_fuzz_new_ops_cross_engine(spark, tmp_path_factory, texts, data):
         ("td_dedup_exact", DD),
         ("td_dedup_ngram_jaccard", DD),
         ("td_dedup_simhash", DD),
-        ("td_dedup_clusters", CL),
         # the rest of the documents-table planes: every op whose only
         # input is the documents table goes through the same gate, so
-        # the whole text/dedup/curation surface is fuzz-hardened.
-        # log()-based scores (bm25/idf/zipf/CE/DSIR/gumbel) are
+        # the whole text/dedup surface is fuzz-hardened.
+        # log()-based scores (bm25/idf/zipf/CE) are
         # last-ulp platform-dependent but deterministic per input; the
         # fixed seed keeps any straddle reproducible, not flaky.
         ("td_chunk_documents", TXT),
@@ -330,13 +324,6 @@ def test_fuzz_new_ops_cross_engine(spark, tmp_path_factory, texts, data):
         ("td_text_idf", TXT),
         ("td_text_unigram_ce", TXT),
         ("td_text_zipf", TXT),
-        ("td_curation_dsir", CUR),
-        ("td_curation_gumbel_sample", CUR),
-        ("td_decontaminate", CUR),
-        ("td_lang_rebalance", CUR),
-        ("td_length_winsorize", CUR),
-        ("td_pii_redact", CUR),
-        ("td_stratified_sample", CUR),
         ("td_dedup_incremental", DD),
         ("td_dedup_minhash_lsh", DD),
         ("td_dedup_source_matrix", DD),
@@ -344,8 +331,6 @@ def test_fuzz_new_ops_cross_engine(spark, tmp_path_factory, texts, data):
         ("td_dedup_substring_spans", DD),
         ("td_dedup_substring_apply", DD),
         ("td_dedup_tfidf_cosine", DD),
-        ("td_dedup_canonical", CL),
-        ("td_split_leakage_safe", CL),
         ("td_merge_upsert", CDC),
         ("td_merge_cdc_delete", CDC),
     ]:

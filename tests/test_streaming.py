@@ -6,7 +6,7 @@ import os
 
 import pytest
 
-from pero_ocr_api_spark.plans.pipeline import extract
+from pero_ocr_api_spark.plans.pipeline import extract, result_docs, result_spans
 from pero_ocr_api_spark.streaming.stream import incremental_extract
 from pero_ocr_api_spark.synth import interleaved_documents
 
@@ -26,11 +26,14 @@ def test_streaming_equals_batch(spark, sf_smoke, tmp_path_factory):
     first = docs.filter("doc_id < 'doc-000250'")
     second = docs.filter("doc_id >= 'doc-000250'")
 
+    def sink():
+        return spark.read.parquet(os.path.join(out_dir, "results"))
+
     os.makedirs(in_dir, exist_ok=True)
     first.write.mode("append").parquet(in_dir)
     incremental_extract(spark, in_dir, out_dir, ckpt)
 
-    got_first = _sorted_rows(spark.read.parquet(os.path.join(out_dir, "spans")))
+    got_first = _sorted_rows(result_spans(sink()))
     exp_first = _sorted_rows(extract(spark, first, with_metrics=False).spans)
     assert got_first == exp_first
 
@@ -38,9 +41,12 @@ def test_streaming_equals_batch(spark, sf_smoke, tmp_path_factory):
     second.write.mode("append").parquet(in_dir)
     incremental_extract(spark, in_dir, out_dir, ckpt)
 
-    got_all = _sorted_rows(spark.read.parquet(os.path.join(out_dir, "spans")))
-    exp_all = _sorted_rows(extract(spark, docs, with_metrics=False).spans)
+    batch = extract(spark, docs, with_metrics=False)
+    got_all = _sorted_rows(result_spans(sink()))
+    exp_all = _sorted_rows(batch.spans)
     assert got_all == exp_all  # no duplicates, nothing missing
+    got_docs = sorted(tuple(r) for r in result_docs(sink()).collect())
+    assert got_docs == sorted(tuple(r) for r in batch.docs.collect())
 
 
 def _write_events(spark, path, rows):
