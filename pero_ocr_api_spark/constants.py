@@ -35,11 +35,6 @@ STATE_INVALID_FILE = "INVALID_FILE"
 STATE_PROCESSING_FAILED = "PROCESSING_FAILED"
 STATE_CANCELED = "CANCELED"
 STATE_EXPIRED = "EXPIRED"
-ALL_STATES = [
-    STATE_CREATED, STATE_WAITING, STATE_PROCESSING, STATE_PROCESSED,
-    STATE_NOT_FOUND, STATE_INVALID_FILE, STATE_PROCESSING_FAILED,
-    STATE_CANCELED, STATE_EXPIRED,
-]
 ERROR_STATES = [STATE_NOT_FOUND, STATE_INVALID_FILE, STATE_PROCESSING_FAILED]
 
 # ---- deterministic interleaved-document synthesis (FIXTURES.md §1) ----
@@ -75,7 +70,6 @@ MINHASH_PERMS = 8       # tiny signature, oracle-SQL friendly
 LSH_BANDS = 4           # 2 rows per band
 LSH_BAND_CAP = 16       # max band-bucket size for pairwise candidate gen;
                         # bigger buckets take the exact-signature star path
-SIMHASH_BITS = 16
 SUBSTR_W = 8            # token-window width for exact-substring dedup
 LINE_W = 3              # token-segment width standing in for "lines"
                         # (the synthetic corpus has no newlines)

@@ -16,7 +16,12 @@ constants.py) — but the Spark plumbing is the real thing:
   (reference analog: per-worker engine zip cache, run_client.py:44-67);
 - row-level failures are caught into an ``error`` column, never thrown
   (run_client.py:150-202 error taxonomy); the pipeline counts them
-  with ``DataFrame.observe`` on this stage's output.
+  with ``DataFrame.observe`` on this stage's output;
+- the engine double-buffers its emulated device: the task thread does
+  the host work of the next device call while the lane's one device
+  thread runs the current one, so a batch costs about max(host,
+  device) plus one call rather than their sum.  Device calls stay
+  serial, one device per Python worker.
 
 Output of one media span with L surviving lines is L rows
 (doc_id, offset, line_idx, text, conf, error=NULL); a failed span is
@@ -28,6 +33,7 @@ from __future__ import annotations
 import hashlib
 import time
 from collections.abc import Iterator
+from concurrent.futures import ThreadPoolExecutor
 from typing import Optional
 
 import pandas as pd
@@ -129,6 +135,12 @@ class _StubEngine:
       overhead-amortization curve of a real accelerator.
     - ``config['work_iters']`` — per-page CPU md5 chains (the pre/post
       processing share; ~0.5 µs per chain).
+    ``infer_batch`` walks the call plan in order: it does a call's host
+    work on the task thread, then hands the call to a single device
+    thread, so host work for call k+1 overlaps call k on the device.  A
+    batch costs about max(host, device) plus one call; device calls
+    never overlap each other.  An engine with no device time starts no
+    thread.
     The md5 stub alone is ~10 µs/page — any scaling measurement without
     these knobs measures scheduler overhead, not pipeline parallelism."""
 
@@ -180,19 +192,28 @@ class _StubEngine:
         frac = self.batch_marginal_frac
         return self.work_sleep_ms * ((1.0 - frac) + frac * mp / _MP_REF)
 
+    def _device_call(self, call: list[str]) -> None:
+        time.sleep(self._device_call_ms(call) / 1000.0)
+
     def infer_batch(self, refs: pd.Series) -> list[tuple[Optional[str], list]]:
         out = [stub_infer_one(r) for r in refs]
         # a NULL ref fails before any page reaches the device
         pages = [r for r in refs if r is not None]
-        if self.work_iters:
+        if not self.work_sleep_ms:
             for r in pages:
                 self._burn(r)
-        if self.work_sleep_ms:
-            sleep_ms = sum(
-                self._device_call_ms(c)
-                for c in self.plan_device_batches(pages)
-            )
-            time.sleep(sleep_ms / 1000.0)
+            return out
+        # one device thread: calls stay serial, and none outlives the batch
+        with ThreadPoolExecutor(max_workers=1) as device:
+            running = None
+            for call in self.plan_device_batches(pages):
+                for r in call:
+                    self._burn(r)
+                if running is not None:
+                    running.result()
+                running = device.submit(self._device_call, call)
+            if running is not None:
+                running.result()
         return out
 
 

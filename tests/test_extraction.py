@@ -267,7 +267,8 @@ def test_skewed_input_wall_time_bounded(spark):
     wall time of a uniform corpus with the SAME total span count.  The
     emulated per-page model latency makes the media stage time-bound,
     so an unsalted plan (doc-partitioned) would serialize the heavy doc
-    on one task; the (doc_id, offset) hash salt spreads it."""
+    on one task; the xxhash64(media_ref) salt spreads its distinct
+    pages over the lanes."""
     import time
 
     def corpus(split):
@@ -665,3 +666,68 @@ def test_device_micro_batching():
     fast_serial = _StubEngine({})
     fast_batched = _StubEngine({"batch_pages": 16})
     assert fast_serial.infer_batch(s) == fast_batched.infer_batch(s)
+    # ... nor does the overlapped host/device path
+    costly = _StubEngine(
+        {"work_sleep_ms": 0.5, "work_iters": 10, "batch_pages": 16}
+    )
+    assert costly.infer_batch(s) == fast_serial.infer_batch(s)
+
+
+def test_device_overlaps_host_work():
+    """A lane's host work for device call k+1 runs while call k is on
+    the device: with ~0.3 s of each per batch, the batch wall stays well
+    under their sum.  Device calls still run one at a time, in plan
+    order, and the results are those of an engine with no cost."""
+    import threading
+    import time
+
+    import pandas as pd
+
+    from pero_ocr_api_spark.operators.inference import _StubEngine
+
+    refs = [f"ov/{i}.jpg" for i in range(32)]
+    s = pd.Series(refs)
+    target_s = 0.3
+
+    def best_wall(engine):
+        best = float("inf")
+        for _ in range(3):
+            t0 = time.monotonic()
+            engine.infer_batch(s)
+            best = min(best, time.monotonic() - t0)
+        return best
+
+    # size work_iters so the batch's host work takes ~target_s
+    probe = _StubEngine({"work_iters": 20000})
+    per_iter_s = best_wall(probe) / (len(refs) * 20000)
+    work_iters = max(1, int(target_s / len(refs) / per_iter_s))
+    host_s = best_wall(_StubEngine({"work_iters": work_iters}))
+
+    # size work_sleep_ms so the batch's device calls sum to ~target_s
+    cfg = {"work_iters": work_iters, "batch_pages": 4}
+    unit = _StubEngine({**cfg, "work_sleep_ms": 1.0})
+    plan = unit.plan_device_batches(refs)
+    assert len(plan) > 2 and max(len(c) for c in plan) > 1
+    unit_ms = sum(unit._device_call_ms(c) for c in plan)
+    engine = _StubEngine({**cfg, "work_sleep_ms": 1000.0 * target_s / unit_ms})
+    device_s = sum(engine._device_call_ms(c) for c in plan) / 1000.0
+
+    intervals = []
+    device_call = engine._device_call
+
+    def recording(call):
+        t0 = time.monotonic()
+        device_call(call)
+        intervals.append((t0, time.monotonic(), call))
+
+    engine._device_call = recording
+    threads_before = threading.active_count()
+    best = best_wall(engine)
+    assert best < 0.8 * (host_s + device_s), (best, host_s, device_s)
+    # serial, in plan order, and no device thread outlives its batch
+    assert [c for _, _, c in intervals] == plan * 3
+    assert all(
+        prev[1] <= nxt[0] for prev, nxt in zip(intervals, intervals[1:])
+    )
+    assert threading.active_count() == threads_before
+    assert engine.infer_batch(s) == _StubEngine({}).infer_batch(s)

@@ -16,10 +16,11 @@ def test_oracle_parity(spark, sf_smoke, name, fn, sql):
     assert not problems, problems
 
 
-def test_rows_only_queries_run(spark, sf_smoke):
-    for name, (fn, sql) in _REG.items():
-        if sql is None:
-            assert fn(spark, sf_smoke).count() >= 0, name
+def test_rows_only_queries_run():
+    """Every registry entry carries oracle SQL, so test_oracle_parity
+    runs (and value-checks) all of them; an entry without one would run
+    nowhere in this suite."""
+    assert [n for n, (_fn, sql) in _REG.items() if sql is None] == []
 
 
 def test_entry_smoke(spark):
