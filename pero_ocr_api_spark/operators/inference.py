@@ -20,8 +20,10 @@ constants.py) — but the Spark plumbing is the real thing:
 - the engine double-buffers its emulated device: the task thread does
   the host work of the next device call while the lane's one device
   thread runs the current one, so a batch costs about max(host,
-  device) plus one call rather than their sum.  Device calls stay
-  serial, one device per Python worker.
+  device) plus one call rather than their sum.  The task thread waits
+  until each call has started before it goes back to host work, so a
+  call never waits for the GIL.  Device calls stay serial, one device
+  per Python worker.
 
 Output of one media span with L surviving lines is L rows
 (doc_id, offset, line_idx, text, conf, error=NULL); a failed span is
@@ -31,6 +33,7 @@ one row with error set and text NULL.
 from __future__ import annotations
 
 import hashlib
+import threading
 import time
 from collections.abc import Iterator
 from concurrent.futures import ThreadPoolExecutor
@@ -139,8 +142,9 @@ class _StubEngine:
     work on the task thread, then hands the call to a single device
     thread, so host work for call k+1 overlaps call k on the device.  A
     batch costs about max(host, device) plus one call; device calls
-    never overlap each other.  An engine with no device time starts no
-    thread.
+    never overlap each other.  The task thread resumes host work only
+    once the device thread has started the call it handed over.  An
+    engine with no device time starts no thread.
     The md5 stub alone is ~10 µs/page — any scaling measurement without
     these knobs measures scheduler overhead, not pipeline parallelism."""
 
@@ -211,10 +215,19 @@ class _StubEngine:
                     self._burn(r)
                 if running is not None:
                     running.result()
-                running = device.submit(self._device_call, call)
+                # wait until the call is on the device: the next call's
+                # host work would otherwise hold the GIL for up to a
+                # switch interval before the device thread could start
+                started = threading.Event()
+                running = device.submit(self._start_call, call, started)
+                started.wait()
             if running is not None:
                 running.result()
         return out
+
+    def _start_call(self, call: list[str], started: threading.Event) -> None:
+        started.set()
+        self._device_call(call)
 
 
 _ENGINE: Optional[_StubEngine] = None

@@ -40,9 +40,12 @@ def serialize_alto(
     confidence and always serialize.
 
     Input: raw_spans(doc_id, offset, line_idx, kind, text, media_ref,
-    conf) from ExtractResult.raw_spans.  Pure JVM string assembly:
-    collect_list → array_sort on (offset, line_idx) → transform →
-    array_join; no UDF, no extra shuffle beyond the per-doc groupBy.
+    conf) from ExtractResult.raw_spans, an explode of the ALTO lines
+    that ``extract``'s per-doc aggregate collects.  Pure JVM string
+    assembly: collect_list → array_sort on (offset, line_idx) →
+    transform → array_join; no UDF.  The explode keeps the aggregate's
+    doc_id partitioning, so this groupBy adds no exchange: over a
+    persisted extract it is one job that reads the cache.
     """
     if threshold > 0:
         kept = raw_spans.filter(

@@ -8,16 +8,24 @@ DataFrame program:
       → explode(spans)
       → [text branch: whitespace normalize, drop empties]          (X10)
       ⊎ [media branch: salt-repartition → mapInPandas(inference)   (X2-X5)
-         → arabic fix (F10) → confidence filter (N3), error rows kept]
+         → arabic fix (F10), raw text kept, error rows kept]
       ⊎ one carrier row per input doc
-      → groupBy(doc_id): spans array_sort(offset, line_idx)         (W2)
-                         score (A7/X8: median conf ×100, 2dp)
+      → groupBy(doc_id): spans: confident lines (N3),
+                                array_sort(offset, line_idx)        (W2)
+                         ALTO lines: every line, raw text + conf
+                         score (A7/X8: median confident conf ×100, 2dp)
                          status (X9: first error by offset)
       → results(doc_id, score, status,
                 spans array<struct<order, kind, text, media_ref>>)
 
 ``spans`` (one row per output span) and ``docs`` (one row per doc) are
-an explode and a projection of ``results``.
+an explode and a projection of ``results``; ``raw_spans``, the input
+of ``serialize_alto``, is an explode of the ALTO lines.  A plan that
+reads only ``results`` (checkpoint, stream) has the ALTO lines pruned
+by Catalyst.  ``persist_inference=True`` persists the per-doc
+aggregate, so a caller that writes all four outputs runs inference
+and the doc_id shuffle once, and each later output is a projection
+of the cache with no exchange.
 
 Scale notes (100 TB):
 - the only Python crossing is the Arrow channel of mapInPandas on the
@@ -56,11 +64,7 @@ from ..constants import (
     STATE_PROCESSED,
 )
 from ..operators.inference import INFER_SCHEMA, make_infer_fn
-from ..operators.normalize import (
-    confident,
-    normalize_text_spans,
-    normalize_transcriptions,
-)
+from ..operators.normalize import confident, fix_arabic, normalize_text_spans
 
 DEFAULT_ENGINE_CONFIG = {"engine": "stub-ocr", "version": 1}
 
@@ -114,12 +118,15 @@ class ExtractResult:
     results: DataFrame     # doc_id, score, status, spans[order, kind, text, media_ref]
     spans: DataFrame       # doc_id, order, kind, text, media_ref
     docs: DataFrame        # doc_id, score, status
-    raw_spans: DataFrame = None   # pre-strip/pre-arabic-fix lines for the
-                                  # ALTO path (run_client.py:210-211 builds
-                                  # ALTO before the confidence strip and
+    raw_spans: DataFrame = None   # doc_id, offset, line_idx, kind, text,
+                                  # media_ref, conf: the ALTO lines, an
+                                  # explode of the per-doc aggregate
+                                  # (run_client.py:210-211 builds ALTO
+                                  # before the confidence strip and
                                   # before arabic normalization)
     metrics: ExtractMetrics = field(default_factory=ExtractMetrics)
-    persisted: DataFrame = None   # set when persist_inference=True
+    persisted: DataFrame = None   # the per-doc aggregate, when
+                                  # persist_inference=True
 
     def unpersist(self) -> None:
         if self.persisted is not None:
@@ -160,8 +167,11 @@ def extract(
     persist_inference: bool = False,
 ) -> ExtractResult:
     """Build the extraction plan (lazy).  ``persist_inference`` keeps the
-    inference output for callers that run several actions on the result;
-    a single action runs inference once without it."""
+    per-doc aggregate (spans, ALTO lines, score, status) for callers
+    that run several actions on the result: the first action runs
+    inference and the doc_id shuffle once, and ``spans``, ``docs``,
+    ``raw_spans`` and the serializers over them read the cache.  A
+    single action runs inference once without it."""
     bconf = _engine_broadcast(
         spark.sparkContext, engine_config or DEFAULT_ENGINE_CONFIG
     )
@@ -204,41 +214,42 @@ def extract(
             F.count_if(ok).alias("lines_emitted"),
             F.count_if(~ok).alias("decode_failures"),
         )
-    if persist_inference:
-        inferred = inferred.persist()
-
-    raw_spans = text_branch.drop("error").unionByName(
-        inferred.filter(F.col("error").isNull()).select(
-            "doc_id", "offset", "line_idx",
-            F.lit(KIND_MEDIA).alias("kind"),
-            "text", "media_ref", "conf",
-        )
-    )
-    # confident lines and error rows in one pass over the inference
-    # output; an error row has no kind and no span
-    media_branch = normalize_transcriptions(inferred).filter(
-        F.col("error").isNotNull() | confident(F.col("conf"))
-    ).select(
+    # every row below carries its final text and its raw text: the
+    # ALTO lines keep the raw model output and every decoded line with
+    # its conf (run_client.py:210-211), the spans the arabic-fixed,
+    # confident ones; an error row has no kind and no span
+    media_branch = inferred.select(
         "doc_id", "offset", "line_idx",
         F.when(F.col("error").isNull(), F.lit(KIND_MEDIA)).alias("kind"),
-        "text", "media_ref", "conf", "error",
+        fix_arabic(F.col("text")).alias("text"),
+        F.col("text").alias("raw_text"),
+        "media_ref", "conf", "error",
     )
-    lines = text_branch.unionByName(media_branch)
+    lines = text_branch.withColumn("raw_text", F.col("text")).unionByName(
+        media_branch
+    )
 
     # ---- one shuffle on doc_id: reading order (W2), score (A7/X8),
-    # status (X9); a carrier row (doc_id only) gives every input doc a
-    # result row, with or without spans ----
+    # status (X9) and the ALTO lines; a carrier row (doc_id only) gives
+    # every input doc a result row, with or without spans ----
+    kind = F.col("kind")
+    keep = kind.isNotNull() & ((kind == KIND_TEXT) | confident(F.col("conf")))
     per_doc = lines.unionByName(
         documents.select("doc_id"), allowMissingColumns=True
     ).groupBy("doc_id").agg(
         F.array_sort(F.collect_list(F.when(
-            F.col("kind").isNotNull(),
-            F.struct("offset", "line_idx", "kind", "text", "media_ref"),
+            keep, F.struct("offset", "line_idx", "kind", "text", "media_ref"),
         ))).alias("lines"),
-        F.expr("percentile(conf, 0.5)").alias("median_conf"),
+        F.collect_list(F.when(kind.isNotNull(), F.struct(
+            "offset", "line_idx", "kind", F.col("raw_text").alias("text"),
+            "media_ref", "conf",
+        ))).alias("alto_lines"),
+        F.percentile(F.when(keep, F.col("conf")), 0.5).alias("median_conf"),
         F.min_by("error", F.when(F.col("error").isNotNull(), F.col("offset")))
         .alias("first_error"),
     )
+    if persist_inference:
+        per_doc = per_doc.persist()
     results = per_doc.select(
         "doc_id",
         F.coalesce(
@@ -253,6 +264,9 @@ def extract(
             s["media_ref"].alias("media_ref"),
         )).alias("spans"),
     )
+    raw_spans = per_doc.select(
+        "doc_id", F.explode("alto_lines").alias("s")
+    ).select("doc_id", "s.*")
 
     return ExtractResult(
         results=results,
@@ -260,5 +274,5 @@ def extract(
         docs=result_docs(results),
         raw_spans=raw_spans,
         metrics=metrics,
-        persisted=inferred if persist_inference else None,
+        persisted=per_doc if persist_inference else None,
     )

@@ -1,9 +1,10 @@
 """SparkSession builder tuned for the extraction workload.
 
 Arrow on (every Python crossing is an Arrow batch), AQE on (runtime
-skew-join + partition coalescing), UTC session time zone (determinism
-vs the DuckDB oracle).  ``parallelism`` controls local[] width so the
-bench can run the same job at N and 4N cores.
+skew-join + partition coalescing, also of a cached plan's shuffle), UTC
+session time zone (determinism vs the DuckDB oracle).  ``parallelism``
+controls local[] width so the bench can run the same job at N and 4N
+cores.
 """
 
 from __future__ import annotations
@@ -33,6 +34,7 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")

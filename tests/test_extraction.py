@@ -235,10 +235,9 @@ def test_heavy_doc_salting_bounds_skew(spark):
     # (a) partition balance of the plan's own salted exchange: the
     # media rows each inference task read
     n_parts = 16
-    stage = _salted_inference_stage(spark, docs, n_parts)
     sizes = [
         t.taskMetrics().get().shuffleReadMetrics().recordsRead()
-        for t in _stage_tasks(spark, stage)
+        for t in _salted_inference_tasks(spark, docs, n_parts)
     ]
     assert len(sizes) == min(n_parts, spark.sparkContext.defaultParallelism)
     assert sum(sizes) == len(heavy_spans)
@@ -348,11 +347,15 @@ def _cluster_names(cluster) -> set:
     return names
 
 
-def _salted_inference_stage(spark, docs, salt_partitions, out=None):
-    """Run one salted extract with a persisted inference (the scan_batch
-    shape) under its own job group, writing its spans to ``out`` (or
-    counting them), and return the status-store data of the one stage
-    that runs mapInPandas to fill the persisted inference."""
+def _salted_inference_tasks(spark, docs, salt_partitions, out=None):
+    """Run one salted extract with a persisted per-doc result (the
+    scan_batch shape) under its own job group, writing its spans to
+    ``out`` (or counting them), and return the status-store data of its
+    inference tasks.  Inference runs in the map stage of the per-doc
+    exchange, next to the text and carrier partitions, which read the
+    input directly: the inference tasks are the tasks of that stage
+    that read the salted shuffle.  A lane whose salted partition got no
+    rows reads nothing, so it is missing from the list."""
     sc = spark.sparkContext
     group = f"salted-inference-{id(docs)}"
     sc.setJobGroup(group, group)
@@ -372,13 +375,18 @@ def _salted_inference_stage(spark, docs, salt_partitions, out=None):
     stages = []
     for job in tracker.getJobIdsForGroup(group):
         for sid in tracker.getJobInfo(job).stageIds:
+            stage = store.lastStageAttempt(sid)
+            # later jobs list the stages they reuse, skipped
+            if str(stage.status()) == "SKIPPED":
+                continue
             names = _cluster_names(store.operationGraphForStage(sid).rootCluster())
-            # the stages that read the persisted inference show its
-            # lineage too, below an InMemoryTableScan
-            if "MapInPandas" in names and "InMemoryTableScan" not in names:
-                stages.append(store.lastStageAttempt(sid))
+            if "MapInPandas" in names:
+                stages.append(stage)
     assert len(stages) == 1, [s.stageId() for s in stages]
-    return stages[0]
+    return [
+        t for t in _stage_tasks(spark, stages[0])
+        if t.taskMetrics().get().shuffleReadMetrics().recordsRead() > 0
+    ]
 
 
 def _stage_tasks(spark, stage) -> list:
@@ -400,10 +408,70 @@ def test_salted_inference_runs_one_task_per_lane(spark, tmp_path):
         for j in range(40)
     }
     out = str(tmp_path / "spans")
-    stage = _salted_inference_stage(
+    tasks = _salted_inference_tasks(
         spark, _documents(spark, flat_by_doc), 16, out)
-    assert stage.numTasks() == min(16, spark.sparkContext.defaultParallelism)
+    assert len(tasks) == min(16, spark.sparkContext.defaultParallelism)
     _assert_oracle_spans(spark.read.parquet(out).collect(), flat_by_doc)
+
+
+def test_scan_outputs_read_one_cached_result(spark, tmp_path):
+    """The scan shape (a persisted salted extract written as spans,
+    docs, ALTO and PAGE) computes the per-doc result once: the docs,
+    ALTO and PAGE writes each run one Spark job over the cached per-doc
+    frame and write one file, and their rows equal those of an
+    unpersisted extract.  A plan that reads only the results prunes the
+    ALTO lines."""
+    import os
+
+    from pero_ocr_api_spark.operators.serialize import serialize_alto
+
+    flat_by_doc = {
+        f"doc-{j:03d}": [(0, KIND_TEXT, f" <title> & {j} ", None)] + [
+            (i, KIND_MEDIA, None, f"img://scan/p{(j * 5 + i) % 60}")
+            for i in range(1, 1 + j % 7)
+        ]
+        for j in range(30)
+    }
+    flat_by_doc["doc-empty"] = []
+    docs = _documents(spark, flat_by_doc)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    res = extract(spark, docs, persist_inference=True, salt_partitions=4)
+    outputs = {
+        "spans": lambda: res.spans,
+        "docs": lambda: res.docs,
+        "alto": lambda: serialize_alto(res.raw_spans),
+        "page": lambda: serialize_artifacts(res.spans),
+    }
+    jobs = {}
+    try:
+        for name, frame in outputs.items():
+            group = f"scan-{name}-{id(docs)}"
+            sc.setJobGroup(group, group)
+            try:
+                frame().write.parquet(str(tmp_path / name))
+            finally:
+                sc._jsc.clearJobGroup()
+            jobs[name] = len(tracker.getJobIdsForGroup(group))
+    finally:
+        res.unpersist()
+    assert {n: jobs[n] for n in ("docs", "alto", "page")} == {
+        "docs": 1, "alto": 1, "page": 1}, jobs
+    for name in outputs:
+        data = [f for f in os.listdir(tmp_path / name) if f.endswith(".parquet")]
+        assert len(data) == 1, (name, data)
+
+    plain = extract(spark, docs, persist_inference=False)
+    for name, frame in (("alto", serialize_alto(plain.raw_spans)),
+                        ("page", serialize_artifacts(plain.spans))):
+        written = spark.read.parquet(str(tmp_path / name))
+        assert sorted(written.collect()) == sorted(frame.collect()), name
+    _assert_oracle_spans(
+        spark.read.parquet(str(tmp_path / "spans")).collect(), flat_by_doc)
+
+    optimized = plain.results._jdf.queryExecution().optimizedPlan().toString()
+    assert "raw_text" not in optimized, optimized
 
 
 def test_infer_fn_infers_each_distinct_ref_once(monkeypatch):
@@ -731,3 +799,39 @@ def test_device_overlaps_host_work():
     )
     assert threading.active_count() == threads_before
     assert engine.infer_batch(s) == _StubEngine({}).infer_batch(s)
+
+
+def test_device_call_starts_without_waiting_for_host_work():
+    """Each device call starts as soon as it is handed over: with about
+    30 calls whose host work is a third of a call, the batch wall stays
+    within 10% of the device time.  A device thread that had to wait
+    for the task thread's GIL switch interval before each call would
+    add up to a switch interval per call."""
+    import time
+
+    import pandas as pd
+
+    from pero_ocr_api_spark.operators.inference import _StubEngine
+
+    refs = pd.Series([f"start/{i}.jpg" for i in range(30)])
+    call_ms = 15.0
+
+    def best_wall(engine):
+        best = float("inf")
+        for _ in range(3):
+            t0 = time.monotonic()
+            engine.infer_batch(refs)
+            best = min(best, time.monotonic() - t0)
+        return best
+
+    # size work_iters so each page's host work takes about a third of
+    # its device call, the serial one-page-per-call plan
+    probe = _StubEngine({"work_iters": 20000})
+    per_iter_s = best_wall(probe) / (len(refs) * 20000)
+    work_iters = max(1, int(call_ms / 3000.0 / per_iter_s))
+    engine = _StubEngine({"work_iters": work_iters, "work_sleep_ms": call_ms})
+    plan = engine.plan_device_batches(list(refs))
+    assert len(plan) == len(refs)
+    device_s = sum(engine._device_call_ms(c) for c in plan) / 1000.0
+    best = best_wall(engine)
+    assert best <= 1.1 * device_s, (best, device_s)
