@@ -19,7 +19,6 @@ sys.path.insert(0, str(Path(__file__).resolve().parent))
 from pero_ocr_api_spark.queries import extraction as _qx
 from pero_ocr_api_spark.queries import extraction_sql as _sx
 from pero_ocr_api_spark.functions.cdc import REGISTRY as _CDC
-from pero_ocr_api_spark.functions.dedup import REGISTRY as _DEDUP
 from pero_ocr_api_spark.functions.maincontent import REGISTRY as _MC
 from pero_ocr_api_spark.functions.text import REGISTRY as _TEXT
 from pero_ocr_api_spark.plans.engine_config import REGISTRY as _CFG
@@ -61,11 +60,11 @@ _DRIVER_WINDOW = [
     # round-5 GPU-micro-batching change to the inference stage touches
     # all three)
     "extract_pipeline_spans", "extract_doc_results", "extract_regions",
-    # changed in round 5 (VERDICT r4 item 1 + ADVICE): the two r04
-    # driver-reds were cell-exact but dtype-hash-mismatched — both
-    # integer sum(CASE...) aggregates now CAST ... AS BIGINT in the
+    # changed in round 5 (VERDICT r4 item 1 + ADVICE): the r04
+    # driver-red was cell-exact but dtype-hash-mismatched — its
+    # integer sum(CASE...) aggregate now CASTs ... AS BIGINT in the
     # shared/oracle SQL (q17 precedent)
-    "cp_sql_tpch_q12_late_mix", "td_text_novelty",
+    "cp_sql_tpch_q12_late_mix",
     # changed in round 5 (ADVICE): seq-tie now resolves by op (both
     # engines), decode routes by payload magic bytes (fake path
     # bit-identical here)
@@ -75,11 +74,6 @@ _DRIVER_WINDOW = [
     # PAGE/txt fan-out and of the raw lines — re-record them
     "extract_serialize_txt", "extract_serialize_alto",
     "extract_serialize_page", "extract_conf_histogram",
-    # NEW in round 5 (VERDICT r4 item 8): the Lee et al. 2022
-    # exact-substring duplicated-SPAN extractor (stride-1 length-L
-    # anchors + gaps-and-islands merge == suffix-array repeats with
-    # minimum match length L)
-    "td_dedup_substring_spans",
     # NEW in round 5: fastText-style hashed linear quality gate
     # (unigram+bigram hashing trick, exact-integer weight sums, zero
     # shuffles) — the CCNet/LLaMA corpus-filter shape
@@ -97,10 +91,6 @@ _DRIVER_WINDOW = [
     # NEW in round 5: inverted-index build (postings lists; the sparse
     # counterpart of the ANN index-build plane)
     "td_text_postings",
-    # NEW in round 5: cross-document LINE-level boilerplate dedup
-    # (RefinedWeb/MassiveText pass — removal unit is the line, evidence
-    # is cross-doc frequency; blacklist broadcasts like the band cap)
-    "td_dedup_lines",
     # NEW in round 5: add-1-smoothed bigram-LM cross-entropy (the
     # KenLM perplexity gate's conditional-probability upgrade of
     # td_text_unigram_ce; integer-grid exact summation)
@@ -110,37 +100,19 @@ _DRIVER_WINDOW = [
     # corpus is never globally ranked; oracle runs the naive
     # row_number deal — a cross-ALGORITHM gate like token_budget)
     "td_shard_plan",
-    # NEW in round 5: the exact-substring dedup SURGERY (Lee et al.
-    # applied): aggregate-fold splice over disjoint spans vs the
-    # oracle's naive per-char algorithm — another cross-ALGORITHM gate
-    # (this build also fixed the spans op's island merge: gap <= L,
-    # not == 1, so spans are disjoint and dup_chars never
-    # double-counts; td_dedup_substring_spans re-records above).
-    # cp_sql_tpch_q16_supp_count (r03+r04-green, untouched) is the
-    # evicted fill entry
-    "td_dedup_substring_apply",
     # NEW in round 5: winnowing fingerprints (Schleimer et al. 2003) —
     # positional document sketches with the every-W-window selection
     # guarantee; verified against a pure-Python third-engine oracle
     # exactly (sketch_md5).  cp_sql_tpch_q20_excess_stock
     # (r03+r04-green, untouched) is the evicted fill entry
     "td_text_winnowing",
-    # touched in round 5 (zero-norm exclusion, both engines): re-record it
-    "td_dedup_tfidf_cosine",
     # re-confirmation fill: r04-green entries, unchanged since
-    "td_dedup_minhash_lsh",
     "td_text_bm25", "td_text_zipf",
     # touched in round 5 (fuzz-gate find): ntile ordering now pins
     # NULLS LAST on both engines — re-record it
     "td_length_deciles",
     "cp_sql_tpch_q2_min_cost", "cp_sql_tpch_q9_profit",
-    "td_dedup_incremental", "td_text_bpe_pairs",
-    # touched in round 5 (fuzz-gate find): the exact-dedup oracle now
-    # mirrors Spark's empty-vs-NULL fingerprint semantics
-    # (array_to_string([]) is NULL in DuckDB, array_join([]) is '' in
-    # Spark) — re-record it; td_dedup_source_matrix (r04-green,
-    # untouched) is the evicted fill entry
-    "td_dedup_exact",
+    "td_text_bpe_pairs",
 ]
 
 
@@ -152,7 +124,6 @@ def _registry() -> dict[str, tuple]:
     reg.update(_SM)
     reg.update(_TEXT)
     reg.update(_MC)
-    reg.update(_DEDUP)
     reg.update(_CDC)
     reg.update(_MM)
     reg.update(_SQL)

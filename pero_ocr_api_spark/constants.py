@@ -65,14 +65,4 @@ PINNED_NOW = "2024-01-30 00:00:00"  # inside the events ts range
 
 # ---- training-data ops ----
 STOPWORDS = ["the", "a", "of", "and", "to", "in", "is", "it"]
-SHINGLE_K = 3           # token-shingle width for minhash / jaccard
-MINHASH_PERMS = 8       # tiny signature, oracle-SQL friendly
-LSH_BANDS = 4           # 2 rows per band
-LSH_BAND_CAP = 16       # max band-bucket size for pairwise candidate gen;
-                        # bigger buckets take the exact-signature star path
-SUBSTR_W = 8            # token-window width for exact-substring dedup
-LINE_W = 3              # token-segment width standing in for "lines"
-                        # (the synthetic corpus has no newlines)
-LINE_DF = 3             # a segment repeated in >= this many DISTINCT
-                        # docs is boilerplate (RefinedWeb-style)
 N_SHARDS = 8            # output shards for the LPT shard-balance plan

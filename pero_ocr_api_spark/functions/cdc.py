@@ -273,8 +273,7 @@ def q_corpus_diff(spark: SparkSession, sf: str) -> DataFrame:
     against the previous one — added / removed / changed / unchanged
     counts per source, the table a data-card release review reads.
     The two snapshots derive deterministically from the documents
-    table via the repo's md5-bucket idiom (same pattern as
-    td_dedup_incremental's new-batch split): ~6% of docs are absent
+    table via the repo's md5-bucket idiom: ~6% of docs are absent
     from the current snapshot (removed), ~9% absent from the previous
     (added), ~9% carry a mutated previous fingerprint (changed).
 

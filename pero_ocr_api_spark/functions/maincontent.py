@@ -32,7 +32,6 @@ from pyspark.sql import functions as F
 from ..constants import STOPWORDS
 from ..registry import make_registry
 from ..session import load_table
-from .text import tokens_col
 
 REGISTRY, _reg = make_registry()
 
@@ -43,6 +42,10 @@ LINK_DENSITY_BAD = 0.2     # > → 'bad' regardless of the rest
 _URL_RE = "^https?://"
 
 _SW_SQL = "[" + ", ".join(f"'{w}'" for w in STOPWORDS) + "]"
+
+
+def tokens_col(text_col="text"):
+    return F.filter(F.split(text_col, " "), lambda t: t != F.lit(""))
 
 
 def classify_blocks(docs: DataFrame) -> DataFrame:

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from ..constants import STOPWORDS, WS_CLASS
 from ..session import load_table
 from .hashing import md5_byte_col, md5_byte_sql
+from .maincontent import tokens_col
 
 from ..registry import make_registry
 
@@ -25,10 +26,6 @@ _WORD_RE = r"[A-Za-z0-9]+"
 # see operators/normalize.py)
 _PUNCT_RE = r"[^A-Za-z0-9 \t\n\r\f\x0b]"
 _SW_SQL = "[" + ", ".join(f"'{w}'" for w in STOPWORDS) + "]"
-
-
-def tokens_col(text_col="text"):
-    return F.filter(F.split(text_col, " "), lambda t: t != F.lit(""))
 
 
 # ---- token counting: whitespace + BPE-ish regex ----
@@ -789,54 +786,6 @@ def q_bpe_pairs(spark: SparkSession, sf: str) -> DataFrame:
     return ranked.filter(F.col("rank") <= BPE_TOP_K).select("rank", "pair", "n")
 
 
-# ---- novelty score (unique-content fraction) ----
-
-
-def _novelty_sql() -> str:
-    from .dedup import _SQL_SHINGLES
-
-    return f"""WITH {_SQL_SHINGLES.strip()},
-dfs AS (SELECT sh, count(*) AS df FROM sh GROUP BY sh)
-SELECT s.doc_id,
-       count(*) AS n_shingles,
-       CAST(sum(CASE WHEN d.df = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_unique,
-       round(sum(CASE WHEN d.df = 1 THEN 1 ELSE 0 END)
-             / CAST(count(*) AS DOUBLE), 6) AS novelty
-FROM sh s JOIN dfs d ON d.sh = s.sh
-GROUP BY s.doc_id"""
-
-
-@_reg("td_text_novelty", _novelty_sql())
-def q_novelty(spark: SparkSession, sf: str) -> DataFrame:
-    """Per-document novelty: the fraction of its shingles that appear
-    in NO other document (df = 1) — the inverse of the duplication
-    planes' signal.  Low novelty = templated/copied content; a
-    training-mix report reads this next to the dedup verdicts to
-    decide whether to drop or downweight.
-
-    Scale shape: one df aggregate on the shingle key (combine-
-    shuffled) joined back onto the shingle table on the same
-    high-cardinality key, then a per-doc aggregate — two shuffles,
-    nothing pairwise anywhere."""
-    from .dedup import shingles_df
-
-    sh = shingles_df(spark, sf)
-    dfs = sh.groupBy("sh").agg(F.count("*").alias("df"))
-    return (
-        sh.join(dfs, "sh")
-        .groupBy("doc_id")
-        .agg(
-            F.count("*").alias("n_shingles"),
-            F.sum(F.when(F.col("df") == 1, 1).otherwise(0)).alias("n_unique"),
-            F.round(
-                F.sum(F.when(F.col("df") == 1, 1).otherwise(0))
-                / F.count("*").cast("double"),
-                6,
-            ).alias("novelty"),
-        )
-    )
-
-
 # ---- fastText-style hashed linear quality classifier ----
 def _classifier_sql() -> str:
     from .hashing import md5_u16_sql
@@ -1075,7 +1024,7 @@ def q_token_budget_select(spark: SparkSession, sf: str) -> DataFrame:
     # the scoring scan (md5 per unigram+bigram feature) is the whole
     # cost of this query and feeds FOUR subtrees (cells agg reused by
     # full + boundary, and both keep-side probes) — materialize it once
-    # (the dedup plane's localCheckpoint idiom) instead of 4 rescans
+    # with localCheckpoint instead of 4 rescans
     ).localCheckpoint()
 
     cells = scored.groupBy("cell").agg(F.sum("n_tokens").alias("cell_toks"))
@@ -1447,12 +1396,12 @@ def q_winnowing(spark: SparkSession, sf: str) -> DataFrame:
     selections, density, and md5 over the position-sorted (hash@pos)
     sketch so the driver hash verifies every selected fingerprint.
 
-    Plan: stride-1 k-gram explode (the suffix-array cost model shared
-    with td_dedup_substring_spans) -> codegen md5 -> ONE doc-keyed
-    shuffle feeding both the rolling-min frame and the per-doc
-    aggregate (the window sort is reused); distinct-ing selections is
-    per-doc, never global.  At 100 TB the k-gram hash would be
-    xxhash64 instead of an md5 hex string (8-byte rows), same plan.
+    Plan: stride-1 k-gram explode (the suffix-array cost model) ->
+    codegen md5 -> ONE doc-keyed shuffle feeding both the rolling-min
+    frame and the per-doc aggregate (the window sort is reused);
+    distinct-ing selections is per-doc, never global.  At 100 TB the
+    k-gram hash would be xxhash64 instead of an md5 hex string (8-byte
+    rows), same plan.
 
     Reference scope: no sketching plane in the reference; SURVEY §2
     extras (training-data toolkit)."""
@@ -1462,9 +1411,9 @@ def q_winnowing(spark: SparkSession, sf: str) -> DataFrame:
     )
     # collect_set dedupes INSIDE the doc-keyed aggregate: a global
     # .distinct() here cost a second full shuffle of 32-byte hash rows
-    # (measured 5.7x wall at 4x data in BENCH/SUBSTR_SCALE.md); the
-    # aggregate instead reuses the rolling-min window's doc_id
-    # partitioning — zero additional exchanges after the one shuffle
+    # (measured 5.7x wall at 4x data); the aggregate instead reuses the
+    # rolling-min window's doc_id partitioning — zero additional
+    # exchanges after the one shuffle
     agg = sels.groupBy("doc_id").agg(
         F.first("n_kgrams").cast("int").alias("n_kgrams"),
         F.array_sort(F.collect_set("fp")).alias("fps"),

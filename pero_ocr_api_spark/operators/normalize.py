@@ -31,11 +31,11 @@ path; whole-stage codegen applies end-to-end).
   on one base comes back run-reversed — canonically equivalent under
   Unicode reordering, documented corner).
 - ``filter_confident_lines``: the PAGE/txt-path strip
-  (run_client.py:36-37,213-216): with a positive threshold the
-  reference keeps only lines where ``l.transcription_confidence and
-  l.transcription_confidence > min_conf`` — i.e. NULL/zero-confidence
-  lines are dropped too; with threshold <= 0 the strip is skipped
-  entirely (``if args.min_confidence > 0``) and every line passes.
+  (run_client.py:36-37,213-216): the reference keeps only lines where
+  ``l.transcription_confidence and l.transcription_confidence >
+  min_conf`` — i.e. NULL/zero-confidence lines are dropped too.  Its
+  ``if args.min_confidence > 0`` gate always holds here: the engine
+  pins ``MIN_CONFIDENCE > 0`` (``oracle.py`` keeps the full gate).
 """
 
 from __future__ import annotations
@@ -92,9 +92,9 @@ def normalized_text(col: Column) -> Column:
     return F.trim(F.regexp_replace(col, WS_CLASS + "+", " "))
 
 
-def normalize_text_spans(df: DataFrame, text_col: str = "text") -> DataFrame:
-    out = df.withColumn(text_col, normalized_text(F.col(text_col)))
-    return out.filter(F.col(text_col) != "")
+def normalize_text_spans(df: DataFrame) -> DataFrame:
+    out = df.withColumn("text", normalized_text(F.col("text")))
+    return out.filter(F.col("text") != "")
 
 
 def label_form_to_logical(col: Column) -> Column:
@@ -128,18 +128,15 @@ def fix_arabic(col: Column) -> Column:
     ).otherwise(col)
 
 
-def normalize_transcriptions(df: DataFrame, text_col: str = "text") -> DataFrame:
-    return df.withColumn(text_col, fix_arabic(F.col(text_col)))
+def normalize_transcriptions(df: DataFrame) -> DataFrame:
+    return df.withColumn("text", fix_arabic(F.col("text")))
 
 
-def confident(conf: Column, threshold: float = MIN_CONFIDENCE) -> Column:
-    """The strip's keep-predicate (every line passes at threshold <= 0)."""
-    if threshold <= 0:
-        return F.lit(True)
-    return conf.isNotNull() & (conf > F.lit(threshold))
+def confident(conf: Column) -> Column:
+    """The strip's keep-predicate at the engine's pinned
+    ``MIN_CONFIDENCE > 0``."""
+    return conf.isNotNull() & (conf > F.lit(MIN_CONFIDENCE))
 
 
-def filter_confident_lines(
-    df: DataFrame, conf_col: str = "conf", threshold: float = MIN_CONFIDENCE
-) -> DataFrame:
-    return df.filter(confident(F.col(conf_col), threshold))
+def filter_confident_lines(df: DataFrame) -> DataFrame:
+    return df.filter(confident(F.col("conf")))

@@ -28,16 +28,16 @@ def xml_escape(col: Column) -> Column:
     return F.replace(out, F.lit('"'), F.lit("&quot;"))
 
 
-def serialize_alto(
-    raw_spans: DataFrame, threshold: float = MIN_CONFIDENCE
-) -> DataFrame:
+def serialize_alto(raw_spans: DataFrame) -> DataFrame:
     """Faithful ALTO-path semantics (run_client.py:210-211): the ALTO
     artifact is built from the *pre-strip, pre-arabic-fix* lines — the
     raw model transcriptions (Arabic still in visual order) — with
     ``min_line_confidence`` applied *inside* serialization rather than
     by the upstream strip, and a per-line WC (word confidence)
-    attribute.  Text spans (our interleaved extension) carry no model
-    confidence and always serialize.
+    attribute.  The engine pins ``MIN_CONFIDENCE > 0``, so the
+    reference's ``if args.min_confidence > 0`` gate always holds.  Text
+    spans (our interleaved extension) carry no model confidence and
+    always serialize.
 
     Input: raw_spans(doc_id, offset, line_idx, kind, text, media_ref,
     conf) from ExtractResult.raw_spans, an explode of the ALTO lines
@@ -47,15 +47,9 @@ def serialize_alto(
     doc_id partitioning, so this groupBy adds no exchange: over a
     persisted extract it is one job that reads the cache.
     """
-    if threshold > 0:
-        kept = raw_spans.filter(
-            (F.col("kind") != KIND_MEDIA) | (F.col("conf") > F.lit(threshold))
-        )
-    else:
-        # threshold <= 0 disables filtering entirely (even conf == 0.0
-        # lines serialize), matching filter_confident_lines and the
-        # reference's `if args.min_confidence > 0` gate
-        kept = raw_spans
+    kept = raw_spans.filter(
+        (F.col("kind") != KIND_MEDIA) | (F.col("conf") > F.lit(MIN_CONFIDENCE))
+    )
     lines = F.array_sort(
         F.collect_list(F.struct("offset", "line_idx", "kind", "text", "conf"))
     )

@@ -1,5 +1,5 @@
 """Shared (fn, oracle_sql) registry mechanism for the query-library
-modules (controlplane / text / dedup / multimodal)."""
+modules (controlplane / text / multimodal)."""
 
 from __future__ import annotations
 

@@ -3,24 +3,10 @@ in test_oracle_parity; these assert semantic invariants)."""
 
 from pyspark.sql import functions as F
 
-from pero_ocr_api_spark.functions.dedup import minhash_pairs, shingles_df
 from pero_ocr_api_spark.operators.multimodal import (
     decode_images, resize_images, sample_frames, synth_media_bytes,
 )
 from pero_ocr_api_spark.synth import exploded_spans
-
-
-def test_jaccard_bounds(spark, sf_smoke):
-    pairs = minhash_pairs(spark, sf_smoke, threshold=0.0).collect()
-    for r in pairs:
-        assert 0.0 <= r.jaccard <= 1.0
-        assert r.doc_a < r.doc_b
-
-
-def test_shingles_shape(spark, sf_smoke):
-    sh = shingles_df(spark, sf_smoke)
-    row = sh.first()
-    assert len(row.sh.split(" ")) == 3
 
 
 def test_multimodal_plumbing(spark, sf_smoke):
@@ -88,25 +74,6 @@ def test_main_content_classifier_edges(spark):
     assert out["A"].content == good + " tail"       # order preserved
     assert out["A"].n_good == 2 and out["A"].n_blocks == 2
     assert out["B"].content == "" and out["B"].n_good == 0
-
-
-def test_minhash_degenerate_bucket_bounded(spark, tmp_path):
-    """VERDICT r2: a corpus of N identical docs must NOT generate the
-    quadratic ~N²/2 candidate pairs a degenerate band bucket implies.
-    The band cap routes the over-full bucket through the
-    exact-signature star pre-pass: exactly N-1 (rep, other) pairs, all
-    jaccard 1.0 — linear."""
-    n = 200
-    text = "the quick brown fox jumps over the lazy dog again and again"
-    docs = spark.createDataFrame(
-        [(f"d{i:04d}", text) for i in range(n)], "doc_id string, text string"
-    )
-    docs.write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
-    pairs = minhash_pairs(spark, str(tmp_path), threshold=0.5)
-    rows = pairs.collect()
-    assert len(rows) == n - 1  # star, not quadratic (would be 19900)
-    assert all(r.doc_a == "d0000" and r.jaccard == 1.0 for r in rows)
-    assert {r.doc_b for r in rows} == {f"d{i:04d}" for i in range(1, n)}
 
 
 def test_pack_groups_use_full_byte(spark, sf_smoke):
@@ -473,39 +440,6 @@ def test_corpus_diff_null_text_parity(spark, tmp_path):
     assert "unchanged" in statuses and len(statuses) >= 3
 
 
-def test_line_dedup_drops_exactly_frequent_lines(spark, tmp_path):
-    """A LINE_W-token segment shared by >= LINE_DF distinct docs is
-    dropped from all of them; segments below the threshold survive.
-    Hand-checkable fixture: 'a b c' in 3 docs (dropped), 'd e f' in 2
-    (kept), plus a short tail segment."""
-    from pero_ocr_api_spark.functions.dedup import REGISTRY as DD
-
-    rows = [
-        (1, "a b c d e f"),        # 2 lines: [a b c][d e f]
-        (2, "a b c d e f"),        # 2 lines: [a b c][d e f]
-        (3, "a b c q r s t"),      # 3 lines: [a b c][q r s][t]
-        (4, "u v w"),              # 1 line:  [u v w]
-    ]
-    spark.createDataFrame(
-        [(i, t, "en", "s0", len(t)) for i, t in rows],
-        "doc_id long, text string, lang string, source string, n_chars long",
-    ).coalesce(1).write.parquet(str(tmp_path / "documents.parquet"))
-
-    out = {
-        r["doc_id"]: r
-        for r in DD["td_dedup_lines"][0](spark, str(tmp_path)).collect()
-    }
-    # 'a b c' has df=3 -> boilerplate; 'd e f' has df=2 -> kept
-    assert (out[1]["n_lines"], out[1]["n_dropped"],
-            out[1]["n_tokens_kept"]) == (2, 1, 3)
-    assert (out[2]["n_lines"], out[2]["n_dropped"],
-            out[2]["n_tokens_kept"]) == (2, 1, 3)
-    assert (out[3]["n_lines"], out[3]["n_dropped"],
-            out[3]["n_tokens_kept"]) == (3, 1, 4)  # q r s + t survive
-    assert (out[4]["n_lines"], out[4]["n_dropped"],
-            out[4]["n_tokens_kept"]) == (1, 0, 3)
-
-
 def test_bigram_ce_matches_closed_form(spark, tmp_path):
     """td_text_bigram_ce equals the hand-computed add-1-smoothed
     bigram cross-entropy (same 1e-6 grid snapping)."""
@@ -576,95 +510,6 @@ def test_shard_plan_matches_naive_lpt(spark, tmp_path):
         0: (2, 4), 1: (2, 4),
         **{s: (1, 2) for s in range(2, 8)},
     }
-
-
-def test_tfidf_cosine_zero_norm_pairs_excluded(spark, tmp_path):
-    """Fuzz-found (ANSI DIVIDE_BY_ZERO): when the only shingled docs
-    are exact duplicates, every kept shingle has df == n_docs, every
-    idf weight is 0, and both norms are 0 — cosine is 0/0.  Such pairs
-    are excluded on BOTH engines; with a third distinct doc sharing no
-    shingles, the non-degenerate pairs still rank normally."""
-    from pero_ocr_api_spark.compare import run_pair
-    from pero_ocr_api_spark.functions.dedup import REGISTRY
-
-    def write(texts):
-        spark.createDataFrame(
-            [(i, t, "en", "s0", len(t)) for i, t in enumerate(texts)],
-            "doc_id long, text string, lang string, source string,"
-            " n_chars long",
-        ).coalesce(1).write.mode("overwrite").parquet(
-            str(tmp_path / "documents.parquet")
-        )
-
-    fn, sql = REGISTRY["td_dedup_tfidf_cosine"]
-
-    # the falsifying shape: 2 shingled docs, exact duplicates, plus a
-    # doc too short to shingle -> all weights zero -> no pairs at all
-    write(["a b c d", "a b c d", "x y"])
-    assert run_pair(spark, str(tmp_path), fn, sql) == []
-    assert fn(spark, str(tmp_path)).count() == 0
-
-    # with two more distinct docs, n_docs=4 makes the duplicates'
-    # df=2 shingles carry idf ln(2) > 0 again — BOTH pairs now score
-    # normally (the exclusion is norm-driven, not duplicate-driven)
-    write(["a b c d", "a b c d", "p q r s t", "p q r u v"])
-    assert run_pair(spark, str(tmp_path), fn, sql) == []
-    out = {(r["doc_a"], r["doc_b"]) for r in fn(spark, str(tmp_path)).collect()}
-    assert (2, 3) in out and (0, 1) in out
-
-
-def test_substring_spans_merge_and_apply(spark, tmp_path):
-    """The islands merge must join dup windows whose char coverage
-    overlaps (start gap 2..L) — the == 1 rule left OVERLAPPING
-    'maximal' spans whose lengths double-counted dup_chars (here
-    2 spans x 20 chars = 40 > len 22, i.e. dup_char_frac 1.8).  Also
-    pins the apply op's splice against hand-computed survivors."""
-    from pero_ocr_api_spark.compare import run_pair
-    from pero_ocr_api_spark.functions.dedup import REGISTRY, SUBSTR_SPAN_L
-
-    assert SUBSTR_SPAN_L == 20
-    w1 = "abcdefghijklmnopqrst"          # doc1[1..20]
-    w3 = "cdefghijklmnopqrstuv"          # doc1[3..22]
-    texts = [
-        w1 + "uv",                        # dup windows at p=1 and p=3
-        w1 + "!!!" + w3,                  # the duplicating doc; gap 23
-        "unique text here",               # < L, untouched
-        None,                             # NULL text, untouched
-    ]
-    rows = [
-        (i, t, "en", "s0", 0 if t is None else len(t))
-        for i, t in enumerate(texts)
-    ]
-    spark.createDataFrame(
-        rows,
-        "doc_id long, text string, lang string, source string,"
-        " n_chars long",
-    ).coalesce(1).write.mode("overwrite").parquet(
-        str(tmp_path / "documents.parquet")
-    )
-
-    fn, sql = REGISTRY["td_dedup_substring_spans"]
-    assert run_pair(spark, str(tmp_path), fn, sql) == []
-    sp = {r["doc_id"]: r for r in fn(spark, str(tmp_path)).collect()}
-    # doc0: ONE merged span [1,22] covering the whole doc (the old
-    # rule reported 2 spans / 40 chars / frac 1.818 here)
-    assert sp[0]["n_spans"] == 1 and sp[0]["dup_chars"] == 22
-    assert sp[0]["longest_span"] == 22 and sp[0]["dup_char_frac"] == 1.0
-    # doc1: gap 23 > L keeps two genuinely disjoint spans
-    assert sp[1]["n_spans"] == 2 and sp[1]["dup_chars"] == 40
-    assert 2 not in sp and 3 not in sp
-
-    fn, sql = REGISTRY["td_dedup_substring_apply"]
-    assert run_pair(spark, str(tmp_path), fn, sql) == []
-    ap = {r["doc_id"]: r for r in fn(spark, str(tmp_path)).collect()}
-    import hashlib
-    md5 = lambda s: hashlib.md5(s.encode()).hexdigest()
-    assert ap[0]["kept_chars"] == 0 and ap[0]["cleaned_md5"] == md5("")
-    assert ap[1]["kept_chars"] == 3 and ap[1]["removed_chars"] == 40
-    assert ap[1]["cleaned_md5"] == md5("!!!")
-    assert ap[2]["kept_chars"] == 16 and ap[2]["n_spans"] == 0
-    assert ap[2]["cleaned_md5"] == md5("unique text here")
-    assert ap[3]["kept_chars"] == 0 and ap[3]["cleaned_md5"] is None
 
 
 def test_winnowing_matches_pure_python(spark, tmp_path):
@@ -740,10 +585,10 @@ def test_winnowing_matches_pure_python(spark, tmp_path):
 
 def test_winnowing_plan_single_exchange(spark, sf_smoke):
     """Pin the winnowing plan shape: exactly ONE shuffle (the doc_id
-    exchange feeding the rolling-min window; the dedup aggregate
-    reuses its partitioning).  A reintroduced global distinct — the
-    5.7x-at-4x-data regression BENCH/SUBSTR_SCALE.md measured — would
-    add a second hashpartitioning exchange and fail here."""
+    exchange feeding the rolling-min window; the collect_set aggregate
+    reuses its partitioning).  A reintroduced global distinct — a
+    measured 5.7x-at-4x-data regression — would add a second
+    hashpartitioning exchange and fail here."""
     from pero_ocr_api_spark.functions.text import REGISTRY as TXT
 
     plan = (

@@ -265,7 +265,7 @@ def test_fuzz_new_ops_cross_engine(spark, tmp_path_factory, texts, data):
 
     rows = []
     for i, t in enumerate(texts):
-        # bias toward duplicate content so diff/dedup paths light up
+        # bias toward duplicate content so the diff paths light up
         if t is not None and data.draw(st.booleans(), label=f"dup{i}"):
             t = texts[0] if texts[0] is not None else t
         rows.append(
@@ -283,8 +283,6 @@ def test_fuzz_new_ops_cross_engine(spark, tmp_path_factory, texts, data):
         "doc_id long, text string, lang string, source string, n_chars long",
     ).coalesce(1).write.mode("overwrite").parquet(str(d / "documents.parquet"))
 
-    from pero_ocr_api_spark.functions.dedup import REGISTRY as DD
-
     for name, reg in [
         # round-5 ops
         ("td_text_hash_classifier", TXT),
@@ -292,12 +290,11 @@ def test_fuzz_new_ops_cross_engine(spark, tmp_path_factory, texts, data):
         ("td_token_budget_select", TXT),
         ("td_text_postings", TXT),
         ("td_corpus_diff", CDC),
-        ("td_dedup_lines", DD),
         ("td_text_bigram_ce", TXT),
         ("td_shard_plan", TXT),
         ("td_text_winnowing", TXT),
         # established documents-table ops: random corpora harden the
-        # whole text/dedup plane, not just this round's additions
+        # whole text plane, not just this round's additions
         ("td_text_tokens", TXT),
         ("td_text_quality", TXT),
         ("td_text_langid", TXT),
@@ -306,13 +303,9 @@ def test_fuzz_new_ops_cross_engine(spark, tmp_path_factory, texts, data):
         ("td_corpus_filter", TXT),
         ("td_corpus_split", TXT),
         ("td_text_repetition", TXT),
-        ("td_text_novelty", TXT),
-        ("td_dedup_exact", DD),
-        ("td_dedup_ngram_jaccard", DD),
-        ("td_dedup_simhash", DD),
         # the rest of the documents-table planes: every op whose only
         # input is the documents table goes through the same gate, so
-        # the whole text/dedup surface is fuzz-hardened.
+        # the whole text surface is fuzz-hardened.
         # log()-based scores (bm25/idf/zipf/CE) are
         # last-ulp platform-dependent but deterministic per input; the
         # fixed seed keeps any straddle reproducible, not flaky.
@@ -324,13 +317,6 @@ def test_fuzz_new_ops_cross_engine(spark, tmp_path_factory, texts, data):
         ("td_text_idf", TXT),
         ("td_text_unigram_ce", TXT),
         ("td_text_zipf", TXT),
-        ("td_dedup_incremental", DD),
-        ("td_dedup_minhash_lsh", DD),
-        ("td_dedup_source_matrix", DD),
-        ("td_dedup_substring", DD),
-        ("td_dedup_substring_spans", DD),
-        ("td_dedup_substring_apply", DD),
-        ("td_dedup_tfidf_cosine", DD),
         ("td_merge_upsert", CDC),
         ("td_merge_cdc_delete", CDC),
     ]:

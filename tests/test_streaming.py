@@ -141,60 +141,6 @@ def test_rate_limited_notifications_state_across_batches(spark, tmp_path_factory
     assert got == [("e1", "n1"), ("e1", "n5"), ("e2", "n3"), ("e2", "n6")]
 
 
-def test_streaming_dedup_first_seen_across_drains(spark, tmp_path_factory):
-    """Native stateful dedup: duplicates within the watermark horizon
-    are dropped, including duplicates arriving in a LATER drain (state
-    survives via the checkpoint); output equals batch dropDuplicates
-    on content hash."""
-    from datetime import datetime
-
-    from pero_ocr_api_spark.streaming.dedup_stream import streaming_dedup
-
-    base = tmp_path_factory.mktemp("sdedup")
-    in_dir, out_dir, ckpt = (str(base / d) for d in ("in", "out", "ckpt"))
-    os.makedirs(in_dir, exist_ok=True)
-    t = datetime(2024, 3, 1, 12, 0, 0)
-
-    first = [
-        ("a1", "the quick brown fox", t),
-        ("a2", "lorem ipsum dolor", t),
-        ("a3", "the quick brown fox", t),     # dup of a1, same drain
-    ]
-    spark.createDataFrame(
-        first, "doc_id string, text string, ingest_ts timestamp"
-    ).coalesce(1).write.mode("append").parquet(in_dir)
-    streaming_dedup(spark, in_dir, out_dir, ckpt)
-
-    out1 = spark.read.parquet(out_dir)
-    assert out1.count() == 2
-    assert sorted(r.text for r in out1.collect()) == [
-        "lorem ipsum dolor", "the quick brown fox",
-    ]
-
-    second = [
-        ("b1", "lorem ipsum dolor", datetime(2024, 3, 1, 12, 1, 0)),  # dup, later drain
-        ("b2", "entirely new content", datetime(2024, 3, 1, 12, 1, 0)),
-    ]
-    spark.createDataFrame(
-        second, "doc_id string, text string, ingest_ts timestamp"
-    ).coalesce(1).write.mode("append").parquet(in_dir)
-    streaming_dedup(spark, in_dir, out_dir, ckpt)
-
-    out2 = spark.read.parquet(out_dir)
-    assert out2.count() == 3                   # b1 deduped against drain 1
-    assert "entirely new content" in {r.text for r in out2.collect()}
-    # parity with the batch sweep over the same input
-    from pyspark.sql import functions as _F
-
-    batch = (
-        spark.read.parquet(in_dir)
-        .withColumn("h", _F.md5("text"))
-        .dropDuplicates(["h"])
-        .count()
-    )
-    assert out2.count() == batch
-
-
 def test_streaming_page_state_tracker_equals_batch_fold(spark, tmp_path_factory):
     """Stateful lifecycle tracking: events drained in two separate
     availableNow runs fold to exactly the states a single-pass Python
