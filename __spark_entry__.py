@@ -95,7 +95,7 @@ _DRIVER_WINDOW = [
     # KenLM perplexity gate's conditional-probability upgrade of
     # td_text_unigram_ce; integer-grid exact summation)
     "td_text_bigram_ce",
-    # NEW in round 5: LPT token-balanced shard plan — per-shard totals
+    # NEW in round 5: sorted round-robin shard plan — per-shard totals
     # from closed-form arithmetic over the token-count histogram (the
     # corpus is never globally ranked; oracle runs the naive
     # row_number deal — a cross-ALGORITHM gate like token_budget)

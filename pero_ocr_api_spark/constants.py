@@ -65,4 +65,4 @@ PINNED_NOW = "2024-01-30 00:00:00"  # inside the events ts range
 
 # ---- training-data ops ----
 STOPWORDS = ["the", "a", "of", "and", "to", "in", "is", "it"]
-N_SHARDS = 8            # output shards for the LPT shard-balance plan
+N_SHARDS = 8            # output shards for the sorted round-robin shard plan

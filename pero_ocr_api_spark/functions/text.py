@@ -1216,7 +1216,7 @@ def q_bigram_ce(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-# ---- LPT shard-balance plan (histogram arithmetic, no global rank) ----
+# ---- sorted round-robin shard plan (histogram arithmetic, no global rank) ----
 from ..constants import N_SHARDS  # noqa: E402  (grouped with the op)
 
 _SHARD_PLAN_SQL = f"""WITH t AS (
@@ -1238,9 +1238,11 @@ FROM r GROUP BY 1"""
 def q_shard_plan(spark: SparkSession, sf: str) -> DataFrame:
     """Token-balanced output-shard plan (the tokenized-dataset writer's
     layout step): rank docs by token count descending and deal them
-    round-robin into N_SHARDS shards — the LPT heuristic that keeps
-    data-loader shards within one document of equal token mass —
-    reporting per-shard doc and token totals.
+    round-robin into N_SHARDS shards — a sorted round-robin deal, not
+    LPT (which gives each doc to the least-loaded shard): shard doc
+    counts differ by at most one, and two shards' token masses by at
+    most the largest document's — reporting per-shard doc and token
+    totals.
 
     Scale shape — the corpus is NEVER ranked, shuffled, or even
     re-scanned.  The naive semantics (what the DuckDB oracle runs) is

@@ -1,6 +1,16 @@
 r"""Normalization stages — all JVM-side built-ins (no Python in the hot
 path; whole-stage codegen applies end-to-end).
 
+Each expression function here returns Spark SQL expression text over a
+given SQL expression (``fix_arabic("text")``), built from the constants
+and the import-time tables, and each stage applies it in one
+``withColumn``/``where`` call: Spark parses the text on the JVM in one
+Py4J round trip, where the same tree of ``Column`` calls costs one per
+function and literal (the ligature chain alone cost about 300).  ``sql_str``
+quotes a Python string as a SQL literal, backslashes doubled (Spark
+unescapes them), so a pattern like ``WS_CLASS`` reaches the regex
+engine unchanged.  The plans are the ones the ``Column`` form gives.
+
 - ``normalize_text_spans``: the text-branch boilerplate strip (SURVEY
   §2.9 X10): collapse whitespace runs, trim, drop empty spans.
   Whitespace is the EXPLICIT class ``[ \t\n\r\f\x0b]`` in all three
@@ -15,7 +25,7 @@ path; whole-stage codegen applies end-to-end).
   detection is a char-class rlike (logical block + presentation-form
   blocks); the fix is mark-reattach → reverse → presentation-form
   mapping, ALL built-in codegen expressions (regexp_replace + reverse
-  + one translate + a short ligature-replace chain), which beats the
+  + one translate + a 33-step ligature-replace chain), which beats the
   survey's pandas_udf suggestion (no Arrow crossing).  The
   presentation-form table (Unicode Arabic Presentation Forms-A/B →
   logical base letters) is generated at import time from stdlib
@@ -42,7 +52,7 @@ from __future__ import annotations
 
 import unicodedata
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..constants import MIN_CONFIDENCE, WS_CLASS
@@ -88,16 +98,25 @@ _BASE_CLASS = (
 )
 
 
-def normalized_text(col: Column) -> Column:
-    return F.trim(F.regexp_replace(col, WS_CLASS + "+", " "))
+def sql_str(s: str) -> str:
+    """``s`` as a Spark SQL string literal.  Spark unescapes backslash
+    sequences inside a literal and drops the backslash of an unknown
+    one (``'[\\x0b]'`` reads back as ``[x0b]``), so every backslash is
+    doubled and every quote escaped; any other character, a tab or an
+    Arabic ligature included, stands for itself."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def normalized_text(expr: str) -> str:
+    return f"trim(regexp_replace({expr}, {sql_str(WS_CLASS + '+')}, ' '))"
 
 
 def normalize_text_spans(df: DataFrame) -> DataFrame:
-    out = df.withColumn("text", normalized_text(F.col("text")))
-    return out.filter(F.col("text") != "")
+    out = df.withColumn("text", F.expr(normalized_text("text")))
+    return out.where("text != ''")
 
 
-def label_form_to_logical(col: Column) -> Column:
+def label_form_to_logical(expr: str) -> str:
     """Visual-order presentation-form label → logical-order string (the
     reference's arabic_helper.label_form_to_string, run_client.py:220),
     unconditionally applied.  Three codegen stages:
@@ -113,30 +132,31 @@ def label_form_to_logical(col: Column) -> Column:
        decompositions (lam-alef &c. — their decompositions are already
        logical order, and they are single codepoints pre-reverse, so
        order is preserved)."""
-    fixed = F.regexp_replace(
-        col, f"({_BASE_CLASS})({_MARK_CLASS}+)", "$2$1"
-    )
-    fixed = F.translate(F.reverse(fixed), _PF_FROM, _PF_TO)
+    marks = sql_str(f"({_BASE_CLASS})({_MARK_CLASS}+)")
+    fixed = f"regexp_replace({expr}, {marks}, '$2$1')"
+    fixed = f"translate(reverse({fixed}), {sql_str(_PF_FROM)}, {sql_str(_PF_TO)})"
     for form, logical in _PF_LIGATURES:
-        fixed = F.replace(fixed, F.lit(form), F.lit(logical))
+        fixed = f"replace({fixed}, {sql_str(form)}, {sql_str(logical)})"
     return fixed
 
 
-def fix_arabic(col: Column) -> Column:
-    return F.when(
-        col.rlike(ARABIC_CHARCLASS), label_form_to_logical(col)
-    ).otherwise(col)
+def fix_arabic(expr: str) -> str:
+    return (
+        f"CASE WHEN {expr} RLIKE {sql_str(ARABIC_CHARCLASS)} "
+        f"THEN {label_form_to_logical(expr)} ELSE {expr} END"
+    )
 
 
 def normalize_transcriptions(df: DataFrame) -> DataFrame:
-    return df.withColumn("text", fix_arabic(F.col("text")))
+    return df.withColumn("text", F.expr(fix_arabic("text")))
 
 
-def confident(conf: Column) -> Column:
+def confident(conf: str) -> str:
     """The strip's keep-predicate at the engine's pinned
-    ``MIN_CONFIDENCE > 0``."""
-    return conf.isNotNull() & (conf > F.lit(MIN_CONFIDENCE))
+    ``MIN_CONFIDENCE > 0`` (the ``D`` suffix makes a double literal; a
+    bare ``0.66`` is a decimal)."""
+    return f"({conf} IS NOT NULL AND {conf} > {MIN_CONFIDENCE}D)"
 
 
 def filter_confident_lines(df: DataFrame) -> DataFrame:
-    return df.filter(confident(F.col("conf")))
+    return df.where(confident("conf"))

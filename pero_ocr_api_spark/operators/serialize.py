@@ -8,24 +8,44 @@ Two serializers build all three: ``serialize_alto`` the ALTO member,
 pure JVM-side string assembly over the ordered span rows:
 collect_list(struct(order, ...)) → array_sort → transform/format_string
 → array_join.  No UDFs; exact-match testable.
+
+Each expression is Spark SQL text built in Python, its string
+constants quoted by ``normalize.sql_str``, and each serializer is one
+``groupBy(doc_id).agg`` plus one ``selectExpr``: Spark parses a stage's
+expressions in one call, where building them from ``Column`` objects
+costs a Py4J round trip per function, literal and alias.  The plans
+are the ones the equivalent ``Column`` expressions give.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..constants import KIND_MEDIA, MIN_CONFIDENCE
+from .normalize import sql_str
+
+_MEDIA = sql_str(KIND_MEDIA)
+_NL = sql_str("\n")
 
 
-def xml_escape(col: Column) -> Column:
+def xml_escape(expr: str) -> str:
     """Minimal XML attribute/text escaping, & first.  Mirrored verbatim
     by the DuckDB oracle (extraction_sql.py) — keep the replace order in
     sync."""
-    out = F.replace(col, F.lit("&"), F.lit("&amp;"))
-    out = F.replace(out, F.lit("<"), F.lit("&lt;"))
-    out = F.replace(out, F.lit(">"), F.lit("&gt;"))
-    return F.replace(out, F.lit('"'), F.lit("&quot;"))
+    for char, entity in (("&", "&amp;"), ("<", "&lt;"), (">", "&gt;"),
+                         ('"', "&quot;")):
+        expr = f"replace({expr}, {sql_str(char)}, {sql_str(entity)})"
+    return expr
+
+
+def _sorted_lines(*fields: str) -> str:
+    """The group's rows as structs, sorted on their first fields."""
+    return f"array_sort(collect_list(struct({', '.join(fields)})))"
+
+
+def _concat(*parts: str) -> str:
+    return f"concat({', '.join(parts)})"
 
 
 def serialize_alto(raw_spans: DataFrame) -> DataFrame:
@@ -40,46 +60,36 @@ def serialize_alto(raw_spans: DataFrame) -> DataFrame:
     always serialize.
 
     Input: raw_spans(doc_id, offset, line_idx, kind, text, media_ref,
-    conf) from ExtractResult.raw_spans, an explode of the ALTO lines
-    that ``extract``'s per-doc aggregate collects.  Pure JVM string
-    assembly: collect_list → array_sort on (offset, line_idx) →
-    transform → array_join; no UDF.  The explode keeps the aggregate's
-    doc_id partitioning, so this groupBy adds no exchange: over a
-    persisted extract it is one job that reads the cache.
+    conf) from ExtractResult.raw_spans, an explode of the text lines
+    and the decoded media lines that ``extract``'s per-doc aggregate
+    collects.  Pure JVM string assembly: collect_list → array_sort on
+    (offset, line_idx) → transform → array_join; no UDF.  The explode
+    keeps the aggregate's doc_id partitioning, so this groupBy adds no
+    exchange: over a persisted extract it is one job that reads the
+    cache.
     """
-    kept = raw_spans.filter(
-        (F.col("kind") != KIND_MEDIA) | (F.col("conf") > F.lit(MIN_CONFIDENCE))
+    wc = sql_str(' WC="%.2f"')
+    line = _concat(
+        sql_str('    <TextLine ID="l'),
+        "CAST(s.offset * 1000 + s.line_idx AS STRING)",
+        sql_str('"'),
+        f"CASE WHEN s.kind = {_MEDIA} THEN format_string({wc}, s.conf) ELSE '' END",
+        sql_str('><String CONTENT="'),
+        xml_escape("s.text"),
+        sql_str('"/></TextLine>'),
     )
-    lines = F.array_sort(
-        F.collect_list(F.struct("offset", "line_idx", "kind", "text", "conf"))
+    lines = _sorted_lines("offset", "line_idx", "kind", "text", "conf")
+    out = raw_spans.where(
+        f"kind != {_MEDIA} OR conf > {MIN_CONFIDENCE}D"
+    ).groupBy("doc_id").agg(
+        F.expr(f"array_join(transform({lines}, s -> {line}), {_NL}) AS alto_lines")
     )
-    body = F.array_join(
-        F.transform(
-            lines,
-            lambda s: F.concat(
-                F.lit('    <TextLine ID="l'),
-                (s["offset"] * 1000 + s["line_idx"]).cast("string"),
-                F.lit('"'),
-                F.when(
-                    s["kind"] == KIND_MEDIA,
-                    F.format_string(' WC="%.2f"', s["conf"]),
-                ).otherwise(F.lit("")),
-                F.lit('><String CONTENT="'),
-                xml_escape(s["text"]),
-                F.lit('"/></TextLine>'),
-            ),
-        ),
-        "\n",
-    )
-    out = kept.groupBy("doc_id").agg(body.alias("alto_lines"))
-    return out.select(
+    head = sql_str('<alto><Layout><Page ID="%s">\n')
+    tail = sql_str("\n</Page></Layout></alto>")
+    return out.selectExpr(
         "doc_id",
-        F.format_string("%s_alto.xml", "doc_id").alias("alto_name"),
-        F.concat(
-            F.format_string('<alto><Layout><Page ID="%s">\n', "doc_id"),
-            F.col("alto_lines"),
-            F.lit("\n</Page></Layout></alto>"),
-        ).alias("alto_xml"),
+        "format_string('%s_alto.xml', doc_id) AS alto_name",
+        f"{_concat(f'format_string({head}, doc_id)', 'alto_lines', tail)} AS alto_xml",
     )
 
 
@@ -90,37 +100,26 @@ def serialize_artifacts(spans: DataFrame) -> DataFrame:
     from ``serialize_alto`` (it has different filter/normalize
     semantics — see there).  The PAGE shape is simplified but
     deterministic: one line element per span in reading order."""
-    lines = F.array_sort(
-        F.collect_list(F.struct("order", "kind", "text", "media_ref"))
+    lines = _sorted_lines("`order`", "kind", "text", "media_ref")
+    line = _concat(
+        sql_str('    <TextLine id="l'),
+        "CAST(s.`order` AS STRING)",
+        sql_str('" kind="'),
+        "s.kind",
+        sql_str('"><Unicode>'),
+        xml_escape("s.text"),
+        sql_str("</Unicode></TextLine>"),
     )
-    page_body = F.array_join(
-        F.transform(
-            lines,
-            lambda s: F.concat(
-                F.lit('    <TextLine id="l'),
-                s["order"].cast("string"),
-                F.lit('" kind="'),
-                s["kind"],
-                F.lit('"><Unicode>'),
-                xml_escape(s["text"]),
-                F.lit("</Unicode></TextLine>"),
-            ),
-        ),
-        "\n",
-    )
-    txt_body = F.array_join(F.transform(lines, lambda s: s["text"]), "\n")
     out = spans.groupBy("doc_id").agg(
-        page_body.alias("page_lines"),
-        txt_body.alias("txt"),
+        F.expr(f"array_join(transform({lines}, s -> {line}), {_NL}) AS page_lines"),
+        F.expr(f"array_join(transform({lines}, s -> s.text), {_NL}) AS txt"),
     )
-    return out.select(
+    head = sql_str('<PcGts><Page imageFilename="%s">\n')
+    tail = sql_str("\n</Page></PcGts>")
+    return out.selectExpr(
         "doc_id",
-        F.format_string("%s_page.xml", "doc_id").alias("page_name"),
-        F.concat(
-            F.format_string('<PcGts><Page imageFilename="%s">\n', "doc_id"),
-            F.col("page_lines"),
-            F.lit("\n</Page></PcGts>"),
-        ).alias("page_xml"),
-        F.format_string("%s.txt", "doc_id").alias("txt_name"),
+        "format_string('%s_page.xml', doc_id) AS page_name",
+        f"{_concat(f'format_string({head}, doc_id)', 'page_lines', tail)} AS page_xml",
+        "format_string('%s.txt', doc_id) AS txt_name",
         "txt",
     )

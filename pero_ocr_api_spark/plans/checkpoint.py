@@ -59,7 +59,7 @@ from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .pipeline import (
-    DOCUMENTS_SCHEMA,
+    RESULTS_SCHEMA,
     ExtractMetrics,
     extract,
     result_docs,
@@ -344,13 +344,14 @@ class CheckpointedExtractor:
                     "the expiry horizon is gone (expire_snapshots)"
                 )
             paths.append(p)
+        # read with the known schema: inferring it from the files runs
+        # a Spark job per read
         if paths:
-            return spark.read.parquet(*paths)
+            return spark.read.schema(RESULTS_SCHEMA).parquet(*paths)
         if not any(lin["snapshot_id"] <= effective for lin in committed.values()):
             raise ValueError("no committed groups")
         # every visible group is empty: the results of no documents
-        empty = spark.createDataFrame([], DOCUMENTS_SCHEMA)
-        return extract(spark, empty, with_metrics=False).results
+        return spark.createDataFrame([], RESULTS_SCHEMA)
 
     # ---- compaction (rewrite-data-files) + snapshot expiry ----
     def _compaction_manifests(self) -> list[dict]:

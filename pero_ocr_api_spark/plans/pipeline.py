@@ -12,7 +12,7 @@ DataFrame program:
       ⊎ one carrier row per input doc
       → groupBy(doc_id): spans: confident lines (N3),
                                 array_sort(offset, line_idx)        (W2)
-                         ALTO lines: every line, raw text + conf
+                         ALTO lines: decoded media lines, raw text + conf
                          score (A7/X8: median confident conf ×100, 2dp)
                          status (X9: first error by offset)
       → results(doc_id, score, status,
@@ -20,12 +20,22 @@ DataFrame program:
 
 ``spans`` (one row per output span) and ``docs`` (one row per doc) are
 an explode and a projection of ``results``; ``raw_spans``, the input
-of ``serialize_alto``, is an explode of the ALTO lines.  A plan that
-reads only ``results`` (checkpoint, stream) has the ALTO lines pruned
-by Catalyst.  ``persist_inference=True`` persists the per-doc
-aggregate, so a caller that writes all four outputs runs inference
-and the doc_id shuffle once, and each later output is a projection
-of the cache with no exchange.
+of ``serialize_alto``, is an explode of the text lines of the spans
+(every text line is kept, so each travels the shuffle once) and the
+ALTO media lines.  A plan that reads only ``results`` (checkpoint,
+stream) has the ALTO lines pruned by Catalyst.
+``persist_inference=True`` persists the per-doc aggregate, so a caller
+that writes all four outputs runs inference and the doc_id shuffle
+once, and each later output is a projection of the cache with no
+exchange.
+
+Every expression is Spark SQL text built in Python from ``constants``
+(string literals quoted by ``normalize.sql_str``), one ``selectExpr``,
+``where`` or ``agg`` per stage: PySpark sends each stage to the JVM in
+one call, where a ``Column`` expression tree costs a Py4J round trip
+per function, literal and alias (about 3,000 for the scan plan, with
+its 33-step ligature chain).  The plan is the one the ``Column`` form
+gives.
 
 Scale notes (100 TB):
 - the only Python crossing is the Arrow channel of mapInPandas on the
@@ -49,6 +59,7 @@ from __future__ import annotations
 import json
 import threading
 from dataclasses import dataclass, field
+from functools import cached_property
 from typing import Optional
 
 from pyspark import Broadcast, SparkContext
@@ -64,14 +75,27 @@ from ..constants import (
     STATE_PROCESSED,
 )
 from ..operators.inference import INFER_SCHEMA, make_infer_fn
-from ..operators.normalize import confident, fix_arabic, normalize_text_spans
+from ..operators.normalize import (
+    confident,
+    fix_arabic,
+    normalize_text_spans,
+    sql_str,
+)
 
 DEFAULT_ENGINE_CONFIG = {"engine": "stub-ocr", "version": 1}
+
+_TEXT, _MEDIA = sql_str(KIND_TEXT), sql_str(KIND_MEDIA)
 
 # the input ``extract`` reads: one row per document
 DOCUMENTS_SCHEMA = (
     "doc_id string, "
     "spans array<struct<kind:string, text:string, media_ref:string, offset:int>>"
+)
+# what ``extract`` returns per document (``ExtractResult.results``), as
+# a reader of its written files sees it (every field nullable)
+RESULTS_SCHEMA = (
+    "doc_id string, score double, status string, "
+    "spans array<struct<`order`:int, kind:string, text:string, media_ref:string>>"
 )
 
 # one engine-config broadcast per canonical config JSON, shared by every
@@ -115,47 +139,62 @@ class ExtractMetrics:
 
 @dataclass
 class ExtractResult:
+    """The outputs of one ``extract``.  ``spans``, ``docs`` and
+    ``raw_spans`` are built on first use: a caller that reads only
+    ``results`` (checkpoint, stream) never builds them."""
+
     results: DataFrame     # doc_id, score, status, spans[order, kind, text, media_ref]
-    spans: DataFrame       # doc_id, order, kind, text, media_ref
-    docs: DataFrame        # doc_id, score, status
-    raw_spans: DataFrame = None   # doc_id, offset, line_idx, kind, text,
-                                  # media_ref, conf: the ALTO lines, an
-                                  # explode of the per-doc aggregate
-                                  # (run_client.py:210-211 builds ALTO
-                                  # before the confidence strip and
-                                  # before arabic normalization)
+    per_doc: DataFrame     # the per-doc aggregate ``results`` projects
     metrics: ExtractMetrics = field(default_factory=ExtractMetrics)
-    persisted: DataFrame = None   # the per-doc aggregate, when
-                                  # persist_inference=True
+    persisted: bool = False   # per_doc is persisted (persist_inference)
+
+    @cached_property
+    def spans(self) -> DataFrame:
+        """doc_id, order, kind, text, media_ref"""
+        return result_spans(self.results)
+
+    @cached_property
+    def docs(self) -> DataFrame:
+        """doc_id, score, status"""
+        return result_docs(self.results)
+
+    @cached_property
+    def raw_spans(self) -> DataFrame:
+        """doc_id, offset, line_idx, kind, text, media_ref, conf: the
+        ALTO lines, the text rows of ``lines`` (no conf) and the decoded
+        media lines (run_client.py:210-211 builds ALTO before the
+        confidence strip and before arabic normalization)."""
+        return self.per_doc.selectExpr(
+            "doc_id",
+            f"inline(concat(transform(filter(lines, s -> s.kind = {_TEXT}), "
+            "s -> struct(s.offset AS offset, s.line_idx AS line_idx, "
+            "s.kind AS kind, s.text AS text, s.media_ref AS media_ref, "
+            "CAST(NULL AS DOUBLE) AS conf)), alto_lines))",
+        )
 
     def unpersist(self) -> None:
-        if self.persisted is not None:
-            self.persisted.unpersist()
+        if self.persisted:
+            self.per_doc.unpersist()
 
 
 def explode_spans(docs: DataFrame) -> DataFrame:
     """documents(doc_id, spans[]) → one row per span (N1/N2)."""
-    return docs.select(
-        "doc_id", F.explode("spans").alias("s")
-    ).select(
-        "doc_id",
-        F.col("s.kind").alias("kind"),
-        F.col("s.text").alias("text"),
-        F.col("s.media_ref").alias("media_ref"),
-        F.col("s.offset").alias("offset"),
+    return docs.selectExpr("doc_id", "explode(spans) AS s").selectExpr(
+        "doc_id", "s.kind AS kind", "s.text AS text",
+        "s.media_ref AS media_ref", "s.offset AS offset",
     )
 
 
 def result_spans(results: DataFrame) -> DataFrame:
     """results(doc_id, ..., spans[]) → one row per output span."""
-    return results.select("doc_id", F.explode("spans").alias("s")).select(
-        "doc_id", "s.order", "s.kind", "s.text", "s.media_ref"
+    return results.selectExpr("doc_id", "explode(spans) AS s").selectExpr(
+        "doc_id", "s.`order`", "s.kind", "s.text", "s.media_ref"
     )
 
 
 def result_docs(results: DataFrame) -> DataFrame:
     """results → one row per doc (doc_id, score, status)."""
-    return results.select("doc_id", "score", "status")
+    return results.selectExpr("doc_id", "score", "status")
 
 
 def extract(
@@ -179,26 +218,21 @@ def extract(
 
     # ---- text branch: pure codegen ----
     text_branch = normalize_text_spans(
-        spans.filter(F.col("kind") == KIND_TEXT).select("doc_id", "offset", "text")
-    ).select(
-        "doc_id",
-        "offset",
-        F.lit(0).cast("int").alias("line_idx"),
-        F.lit(KIND_TEXT).alias("kind"),
-        "text",
-        F.lit(None).cast("string").alias("media_ref"),
-        F.lit(None).cast("double").alias("conf"),
-        F.lit(None).cast("string").alias("error"),
+        spans.where(f"kind = {_TEXT}").selectExpr("doc_id", "offset", "text")
+    ).selectExpr(
+        "doc_id", "offset", "0 AS line_idx", f"{_TEXT} AS kind", "text",
+        "CAST(NULL AS STRING) AS media_ref", "CAST(NULL AS DOUBLE) AS conf",
+        "CAST(NULL AS STRING) AS error",
     )
 
     # ---- media branch: salted repartition → Arrow-batched inference ----
-    media_in = spans.filter(F.col("kind") == KIND_MEDIA).select(
+    media_in = spans.where(f"kind = {_MEDIA}").selectExpr(
         "doc_id", "offset", "media_ref"
     )
     if salt_partitions:
         media_in = media_in.repartition(
             min(salt_partitions, spark.sparkContext.defaultParallelism),
-            F.xxhash64("media_ref"),
+            F.expr("xxhash64(media_ref)"),
         )
     inferred = media_in.mapInPandas(make_infer_fn(bconf), schema=INFER_SCHEMA)
     metrics = ExtractMetrics()
@@ -206,73 +240,49 @@ def extract(
         # a decoded page emits lines 1..L (L >= 1), a failed page one
         # error row; observed on the single inference node every
         # consumer below shares
-        ok = F.col("error").isNull()
         metrics = ExtractMetrics(Observation())
-        inferred = inferred.observe(
-            metrics.observation,
-            F.count_if(ok & (F.col("line_idx") == 1)).alias("pages_decoded"),
-            F.count_if(ok).alias("lines_emitted"),
-            F.count_if(~ok).alias("decode_failures"),
-        )
-    # every row below carries its final text and its raw text: the
-    # ALTO lines keep the raw model output and every decoded line with
-    # its conf (run_client.py:210-211), the spans the arabic-fixed,
+        inferred = inferred.observe(metrics.observation, *map(F.expr, (
+            "count_if(error IS NULL AND line_idx = 1) AS pages_decoded",
+            "count_if(error IS NULL) AS lines_emitted",
+            "count_if(error IS NOT NULL) AS decode_failures",
+        )))
+    # a media row carries its final text and its raw text: the ALTO
+    # lines keep the raw model output and every decoded line with its
+    # conf (run_client.py:210-211), the spans the arabic-fixed,
     # confident ones; an error row has no kind and no span
-    media_branch = inferred.select(
+    media_branch = inferred.selectExpr(
         "doc_id", "offset", "line_idx",
-        F.when(F.col("error").isNull(), F.lit(KIND_MEDIA)).alias("kind"),
-        fix_arabic(F.col("text")).alias("text"),
-        F.col("text").alias("raw_text"),
-        "media_ref", "conf", "error",
-    )
-    lines = text_branch.withColumn("raw_text", F.col("text")).unionByName(
-        media_branch
+        f"CASE WHEN error IS NULL THEN {_MEDIA} END AS kind",
+        f"{fix_arabic('text')} AS text",
+        "text AS raw_text", "media_ref", "conf", "error",
     )
 
     # ---- one shuffle on doc_id: reading order (W2), score (A7/X8),
-    # status (X9) and the ALTO lines; a carrier row (doc_id only) gives
-    # every input doc a result row, with or without spans ----
-    kind = F.col("kind")
-    keep = kind.isNotNull() & ((kind == KIND_TEXT) | confident(F.col("conf")))
-    per_doc = lines.unionByName(
-        documents.select("doc_id"), allowMissingColumns=True
-    ).groupBy("doc_id").agg(
-        F.array_sort(F.collect_list(F.when(
-            keep, F.struct("offset", "line_idx", "kind", "text", "media_ref"),
-        ))).alias("lines"),
-        F.collect_list(F.when(kind.isNotNull(), F.struct(
-            "offset", "line_idx", "kind", F.col("raw_text").alias("text"),
-            "media_ref", "conf",
-        ))).alias("alto_lines"),
-        F.percentile(F.when(keep, F.col("conf")), 0.5).alias("median_conf"),
-        F.min_by("error", F.when(F.col("error").isNotNull(), F.col("offset")))
-        .alias("first_error"),
-    )
+    # status (X9) and the ALTO media lines; a carrier row (doc_id only)
+    # gives every input doc a result row, with or without spans.  A
+    # text row travels once, in ``lines`` (every text row is kept) ----
+    keep = f"kind IS NOT NULL AND (kind = {_TEXT} OR {confident('conf')})"
+    per_doc = text_branch.unionByName(
+        media_branch, allowMissingColumns=True
+    ).unionByName(
+        documents.selectExpr("doc_id"), allowMissingColumns=True
+    ).groupBy("doc_id").agg(*map(F.expr, (
+        f"array_sort(collect_list(CASE WHEN {keep} THEN "
+        "struct(offset, line_idx, kind, text, media_ref) END)) AS lines",
+        f"collect_list(CASE WHEN kind = {_MEDIA} THEN "
+        "struct(offset, line_idx, kind, raw_text AS text, media_ref, conf) END)"
+        " AS alto_lines",
+        f"percentile(CASE WHEN {keep} THEN conf END, 0.5D, 1) AS median_conf",
+        "min_by(error, CASE WHEN error IS NOT NULL THEN offset END) AS first_error",
+    )))
     if persist_inference:
         per_doc = per_doc.persist()
-    results = per_doc.select(
+    results = per_doc.selectExpr(
         "doc_id",
-        F.coalesce(
-            F.round(F.col("median_conf") * SCORE_SCALE, SCORE_DP),
-            F.lit(DEFAULT_SCORE),
-        ).alias("score"),
-        F.coalesce("first_error", F.lit(STATE_PROCESSED)).alias("status"),
-        F.transform("lines", lambda s, i: F.struct(
-            i.alias("order"),
-            s["kind"].alias("kind"),
-            s["text"].alias("text"),
-            s["media_ref"].alias("media_ref"),
-        )).alias("spans"),
+        f"coalesce(round(median_conf * {SCORE_SCALE}, {SCORE_DP}), "
+        f"{DEFAULT_SCORE}D) AS score",
+        f"coalesce(first_error, {sql_str(STATE_PROCESSED)}) AS status",
+        "transform(lines, (s, i) -> struct(i AS `order`, s.kind AS kind, "
+        "s.text AS text, s.media_ref AS media_ref)) AS spans",
     )
-    raw_spans = per_doc.select(
-        "doc_id", F.explode("alto_lines").alias("s")
-    ).select("doc_id", "s.*")
-
-    return ExtractResult(
-        results=results,
-        spans=result_spans(results),
-        docs=result_docs(results),
-        raw_spans=raw_spans,
-        metrics=metrics,
-        persisted=per_doc if persist_inference else None,
-    )
+    return ExtractResult(results, per_doc, metrics, persist_inference)

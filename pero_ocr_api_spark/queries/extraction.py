@@ -11,7 +11,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..constants import KIND_TEXT
-from ..operators.normalize import confident
+from ..operators.normalize import confident, sql_str
 from ..operators.serialize import serialize_alto, serialize_artifacts
 from ..plans.pipeline import extract
 from ..synth import exploded_spans, interleaved_documents
@@ -65,7 +65,7 @@ def q_conf_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the output lines: every text line and the confident media lines
     # (the arabic fix changes text, not conf)
     raw = _run(spark, sf_dir).raw_spans
-    lines = raw.filter((F.col("kind") == KIND_TEXT) | confident(F.col("conf")))
+    lines = raw.where(f"kind = {sql_str(KIND_TEXT)} OR {confident('conf')}")
     # avg as round(sum,4)/count: a raw float avg differs between engines
     # in the last ulps (summation order) and can flip a 6-dp rounding at
     # a boundary; rounding the sum first (conf values are 2-dp decimals,

@@ -15,7 +15,7 @@ from pero_ocr_api_spark.constants import KIND_MEDIA
 from pero_ocr_api_spark.operators.inference import stub_infer_one
 from pero_ocr_api_spark.plans import checkpoint
 from pero_ocr_api_spark.plans.checkpoint import CheckpointedExtractor, SimulatedFailure
-from pero_ocr_api_spark.plans.pipeline import explode_spans, extract
+from pero_ocr_api_spark.plans.pipeline import RESULTS_SCHEMA, explode_spans, extract
 from pero_ocr_api_spark.session import load_table
 from pero_ocr_api_spark.synth import interleaved_documents
 
@@ -169,6 +169,43 @@ def test_empty_source_commits_and_resumes(spark, docs, tmp_path_factory):
                       (ck.read_docs(spark), full.docs)):
         assert got.schema.simpleString() == want.schema.simpleString()
         assert got.count() == 0
+
+
+def test_results_schema_is_what_extract_writes(spark, docs, tmp_path):
+    """``RESULTS_SCHEMA`` is the schema of ``extract(...).results``, and
+    a read with it sees exactly what a read that infers the schema from
+    the written files sees."""
+    results = extract(spark, docs, with_metrics=False).results
+    known = spark.createDataFrame([], RESULTS_SCHEMA).schema
+    assert known.simpleString() == results.schema.simpleString()
+    path = str(tmp_path / "results")
+    results.write.parquet(path)
+    assert spark.read.schema(RESULTS_SCHEMA).parquet(path).schema == (
+        spark.read.parquet(path).schema)
+
+
+def test_checkpoint_reads_infer_no_schema(spark, docs, tmp_path):
+    """Compaction and both reads read the committed files with the
+    known schema, so none of them runs a schema-inference job:
+    ``compact`` runs 2 Spark jobs, and collecting ``read_spans`` or
+    ``read_docs`` 1 each."""
+    ck = CheckpointedExtractor(str(tmp_path / "out"), n_groups=4)
+    ck.run(spark, docs)
+    sc = spark.sparkContext
+
+    def jobs(name, action):
+        sc.setJobGroup(name, name)
+        try:
+            action()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(name))
+
+    assert {
+        "compact": jobs("ck-compact", lambda: ck.compact(spark)),
+        "spans": jobs("ck-spans", lambda: ck.read_spans(spark).collect()),
+        "docs": jobs("ck-docs", lambda: ck.read_docs(spark).collect()),
+    } == {"compact": 2, "spans": 1, "docs": 1}
 
 
 def test_crash_after_group_data_before_manifest(

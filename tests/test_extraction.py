@@ -85,7 +85,7 @@ def test_arabic_normalization_roundtrip(spark):
     df = spark.createDataFrame(
         [("plain-line",), ("ar-ابتث"[::-1],)], "text string"
     )
-    out = [r.text for r in df.select(fix_arabic(F.col("text")).alias("text")).collect()]
+    out = [r.text for r in df.select(F.expr(fix_arabic("text")).alias("text")).collect()]
     assert out[0] == "plain-line"
     assert out[1] == "ar-ابتث"
 
@@ -121,7 +121,7 @@ def test_arabic_presentation_forms_to_logical(spark):
     df = spark.createDataFrame([(v,) for v, _ in cases], "text string")
     got = [
         r.text
-        for r in df.select(fix_arabic(F.col("text")).alias("text")).collect()
+        for r in df.select(F.expr(fix_arabic("text")).alias("text")).collect()
     ]
     assert got == [want for _, want in cases]
 
@@ -472,6 +472,70 @@ def test_scan_outputs_read_one_cached_result(spark, tmp_path):
 
     optimized = plain.results._jdf.queryExecution().optimizedPlan().toString()
     assert "raw_text" not in optimized, optimized
+
+
+def test_scan_plan_builds_in_few_py4j_commands(spark, tmp_path, monkeypatch):
+    """Building the scan plan (a persisted salted extract over a parquet
+    input, ``serialize_alto`` of its raw spans and
+    ``serialize_artifacts`` of its spans) stays within 800 Py4J
+    commands: each stage's expressions go to Spark as SQL text in one
+    call, not as one command per column function, literal and alias
+    (about 2,500 commands that way).  The first build is a warm-up.
+    py4j's deferred garbage-collection commands are not counted: they
+    free objects of earlier builds, in bursts of up to several hundred
+    whenever py4j flushes its queue."""
+    import py4j.clientserver
+    from py4j.protocol import MEMORY_COMMAND_NAME, MEMORY_DEL_SUBCOMMAND_NAME
+
+    from pero_ocr_api_spark.operators.serialize import serialize_alto
+
+    free = MEMORY_COMMAND_NAME + MEMORY_DEL_SUBCOMMAND_NAME
+    flat_by_doc = {
+        f"doc-{j:03d}": [(0, KIND_TEXT, f" title {j} ", None)] + [
+            (i, KIND_MEDIA, None, f"img://scan/p{(j * 3 + i) % 40}")
+            for i in range(1, 6)
+        ]
+        for j in range(20)
+    }
+    src = str(tmp_path / "docs")
+    _documents(spark, flat_by_doc).write.parquet(src)
+    docs = spark.read.parquet(src)
+
+    def build():
+        res = extract(spark, docs, persist_inference=True, salt_partitions=4)
+        serialize_alto(res.raw_spans)
+        serialize_artifacts(res.spans)
+        res.unpersist()
+
+    build()
+    sent = []
+    send = py4j.clientserver.ClientServerConnection.send_command
+
+    def counting(self, command):
+        if not command.startswith(free):
+            sent.append(command)
+        return send(self, command)
+
+    monkeypatch.setattr(
+        py4j.clientserver.ClientServerConnection, "send_command", counting)
+    build()
+    monkeypatch.undo()
+    assert len(sent) <= 800, len(sent)
+
+
+def test_sql_str_round_trips_through_expr(spark):
+    """A Python string quoted by ``sql_str`` reads back unchanged from
+    ``F.expr``: quote, backslash, tab, \\x0b, NBSP, an Arabic ligature
+    and the whitespace class, whose backslashes Spark's unescaping
+    would otherwise drop."""
+    from pero_ocr_api_spark.constants import WS_CLASS
+    from pero_ocr_api_spark.operators.normalize import sql_str
+
+    values = ["it's", "a\\b", "a\tb", "a\x0bb", "a\u00a0b", "\ufefb", WS_CLASS]
+    row = spark.range(1).select(
+        *[F.expr(sql_str(v)).alias(f"c{i}") for i, v in enumerate(values)]
+    ).first()
+    assert list(row) == values
 
 
 def test_infer_fn_infers_each_distinct_ref_once(monkeypatch):
