@@ -23,12 +23,19 @@ Mechanics:
   is neither planned nor written: it commits a lineage row with zero
   counts and zero metrics, in commit order, without a Spark job (an
   empty source stages no group, so all its groups commit this way);
-- one planner thread builds group G+1's plan (filter → extract →
-  observe; driver-only, it runs no Spark job) while group G writes, so
-  the Py4J-bound plan construction leaves the critical path; writes,
-  manifest commits, snapshot ids and the injected kill stay on the
-  calling thread in group order, so at most one group's data is ever
-  in flight;
+- a pool of two worker threads lands the occupied groups: each worker
+  builds one group's plan (filter → extract → observe; driver-only),
+  writes it and reads its observed counts and metrics, under the
+  caller's Spark job group.  The calling thread keeps everything that
+  orders the log, in group order: it waits for group G's worker,
+  writes G's lineage row and snapshot id, commits G's manifest, checks
+  the injected kill, and only then submits the next occupied group.
+  So at most two groups' data is ever in flight (G, being committed
+  next, and the occupied group after it); a crash can leave both
+  landed without a manifest, which keeps them invisible and the
+  resume rewrites them.  On any error the caller waits for the write
+  still in flight before it re-raises, so no Spark job of a run
+  outlives ``run()``;
 - a group becomes VISIBLE only when its manifest file
   ``_manifest/group-G.json`` is atomically renamed into place with its
   lineage row (doc/span counts, wall_ms, metrics) — write-then-rename
@@ -53,10 +60,12 @@ import os
 import shutil
 import time
 import uuid
+from collections import deque
 from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from .pipeline import (
     RESULTS_SCHEMA,
@@ -162,8 +171,8 @@ class CheckpointedExtractor:
 
     # ---- run / resume ----
     def _grouped(self, documents: DataFrame) -> DataFrame:
-        return documents.withColumn(
-            "group_id", F.pmod(F.xxhash64("doc_id"), F.lit(self.n_groups)).cast("int")
+        return documents.selectExpr(
+            "*", f"CAST(pmod(xxhash64(doc_id), {self.n_groups}) AS INT) AS group_id"
         )
 
     def _staged_dir(self) -> str:
@@ -246,26 +255,25 @@ class CheckpointedExtractor:
         )
         todo = [g for g in range(self.n_groups) if g not in done]
         occupied = self._staged_groups()
-        # the planner thread holds exactly one occupied group's plan
-        # ahead of the write on this thread (Mechanics)
-        planner = ThreadPoolExecutor(max_workers=1)
-        to_plan = iter([g for g in todo if g in occupied])
+        # the two workers each land one occupied group while this thread
+        # commits in group order (Mechanics)
+        pool = ThreadPoolExecutor(max_workers=2)
+        to_land = iter([g for g in todo if g in occupied])
+        landing = deque()
 
-        def plan_next():
-            g = next(to_plan, None)
-            if g is None:
-                return None
-            return planner.submit(self._plan_group, spark, grouped, g)
+        def fill():
+            while len(landing) < 2 and (g := next(to_land, None)) is not None:
+                # wrapped here, so the worker runs its jobs under this
+                # thread's job group and tags
+                land = inheritable_thread_target(spark)(self._land_group)
+                landing.append(pool.submit(land, spark, grouped, g))
 
         try:
             turn = time.monotonic()
-            ahead = plan_next()
+            fill()
             for i, g in enumerate(todo):
                 if g in occupied:
-                    results, observed, metrics = ahead.result()
-                    ahead = plan_next()
-                    self._write_group(g, results)
-                    counts, metrics = observed.get, metrics.as_dict()
+                    counts, metrics = landing.popleft().result()
                 else:
                     # no staged docs: nothing to plan or write, and an
                     # empty group's observations would never be filled
@@ -288,24 +296,36 @@ class CheckpointedExtractor:
                     raise SimulatedFailure(
                         f"injected failure after {i + 1} group commits"
                     )
+                fill()
         finally:
-            # a plan built ahead of a failure is dropped, not waited for
-            planner.shutdown(wait=False, cancel_futures=True)
+            # a write still in flight finishes before run() returns or
+            # raises, so none of its jobs races a resume
+            pool.shutdown(wait=True)
         return self.committed_groups()
+
+    def _land_group(
+        self, spark: SparkSession, grouped: DataFrame, g: int
+    ) -> tuple[dict, dict]:
+        """Plan and write group ``g`` on a worker thread; returns its
+        observed doc/span counts and inference metrics.  The data lands
+        invisible: the caller commits it."""
+        results, observed, metrics = self._plan_group(spark, grouped, g)
+        self._write_group(g, results)
+        return observed.get, metrics.as_dict()
 
     def _plan_group(
         self, spark: SparkSession, grouped: DataFrame, g: int
     ) -> tuple[DataFrame, Observation, ExtractMetrics]:
         """Group ``g``'s lazy plan: its results with the doc/span counts
         observed, the counts and the inference metrics.  Driver-only (no
-        Spark job), so it runs on the planner thread."""
-        sub = grouped.filter(F.col("group_id") == g).drop("group_id")
+        Spark job); built from SQL text to keep Py4J calls few."""
+        sub = grouped.where(f"group_id = {g}").drop("group_id")
         res = extract(spark, sub, salt_partitions=self.salt_partitions)
         counts = Observation()
         results = res.results.observe(
             counts,
-            F.count("*").alias("doc_count"),
-            F.coalesce(F.sum(F.size("spans")), F.lit(0)).alias("span_count"),
+            F.expr("count(*) AS doc_count"),
+            F.expr("coalesce(sum(size(spans)), 0) AS span_count"),
         )
         return results, counts, res.metrics
 

@@ -16,6 +16,14 @@ API, Iceberg docs "Spark Writes"/"Spark Procedures"):
                                    ``group_id`` partition: one table,
                                    one native snapshot per group,
                                    idempotent on re-run
+- two groups in flight          → two concurrent ``overwritePartitions``
+  (``run()``'s two workers)        on distinct ``group_id`` partitions:
+                                   the table commit that loses the race
+                                   is retried by Iceberg on the new
+                                   table metadata (``commit.retry.*``),
+                                   and the partitions are disjoint, so
+                                   the retry still replaces only its
+                                   own group's partition
 - per-group visibility          → unchanged: the lineage manifest
   (manifest write-then-rename)     (``_manifest/group-G.json``) lands
                                    under ``staging_dir`` next to the

@@ -124,14 +124,19 @@ def test_empty_groups_commit_without_a_plan(
     assert [committed[g]["snapshot_id"] for g in range(64)] == list(range(1, 65))
     occupied = {g for g, lin in committed.items() if lin["doc_count"]}
     assert 0 < len(occupied) < 64
-    # only occupied groups are planned; the kill drops the one plan
-    # built ahead, and the resume builds it again
+    # only occupied groups are planned.  Up to two occupied groups are
+    # in flight: after group 31's commit, one if group 31 was occupied
+    # (its successor), else two.  The kill lands them without a
+    # manifest, and the resume plans them again.
     by_run = {
         rid: sum(1 for g in occupied if committed[g]["run_id"] == rid)
         for rid in ("try1", "try2")
     }
     assert by_run["try1"] > 0 and by_run["try2"] > 0
-    assert n_planned == {"try1": by_run["try1"] + 1, "try2": by_run["try2"]}
+    in_flight = min(by_run["try2"], 1 if 31 in occupied else 2)
+    assert n_planned == {
+        "try1": by_run["try1"] + in_flight, "try2": by_run["try2"]
+    }
     for g, lin in committed.items():
         assert os.path.exists(ck._group_path(g)) == (g in occupied)
         if g not in occupied:
@@ -212,7 +217,10 @@ def test_crash_after_group_data_before_manifest(
     spark, docs, uninterrupted, tmp_path_factory, monkeypatch
 ):
     """A crash after a group's results land but before its manifest
-    leaves that group invisible; the resume rewrites it."""
+    leaves that group invisible; the resume rewrites it.  Three result
+    directories exist at the crash: group 0 committed, group 1 landed
+    before its failing manifest, and group 2, in flight since group 0's
+    commit, which run() waits for before it raises."""
     out = str(tmp_path_factory.mktemp("ckcrash"))
     ck = CheckpointedExtractor(out, n_groups=4)
     commit = CheckpointedExtractor._commit_group
@@ -226,7 +234,7 @@ def test_crash_after_group_data_before_manifest(
         m.setattr(CheckpointedExtractor, "_commit_group", crash_on_second)
         with pytest.raises(SimulatedFailure):
             ck.run(spark, docs)
-    assert len(glob.glob(os.path.join(out, "results", "group=*"))) == 2
+    assert len(glob.glob(os.path.join(out, "results", "group=*"))) == 3
     assert len(ck.committed_groups()) == 1
     ck.run(spark, docs)
     assert _read_back(spark, ck) == uninterrupted
@@ -259,43 +267,67 @@ def test_crash_after_compaction_data_before_manifest(
     assert _read_back(spark, ck) == uninterrupted
 
 
-def test_next_group_planned_while_group_writes(
+def test_next_group_writes_while_group_writes(
     spark, docs, uninterrupted, tmp_path_factory, monkeypatch
 ):
-    """Each group's write waits until the next group's plan is being
-    built, so the run only completes when planning overlaps writing;
-    the per-group wall_ms then still sums to at most run()'s wall."""
+    """Each group's write but the last waits until the next group's
+    write has begun, so the run only completes when two group writes
+    overlap.  Commits still come in group order (snapshot ids 1..n),
+    the per-group wall_ms still sums to at most run()'s wall, and the
+    read-back equals an uninterrupted run's."""
     ck = CheckpointedExtractor(str(tmp_path_factory.mktemp("ckahead")), n_groups=4)
-    planned = threading.Condition()
-    n_planned = n_written = 0
-    build, write = checkpoint.extract, CheckpointedExtractor._write_group
+    began = threading.Condition()
+    writing = set()
+    write = CheckpointedExtractor._write_group
 
-    def counting_extract(*args, **kwargs):
-        nonlocal n_planned
-        with planned:
-            n_planned += 1
-            planned.notify_all()
-        return build(*args, **kwargs)
-
-    def write_after_next_plan(self, g, results):
-        nonlocal n_written
-        n_written += 1
-        if n_written < 4:
-            with planned:
-                assert planned.wait_for(
-                    lambda: n_planned > n_written, timeout=30
-                ), f"group {g} wrote before the next group was planned"
+    def write_once_next_began(self, g, results):
+        with began:
+            writing.add(g)
+            began.notify_all()
+            if g < 3:
+                assert began.wait_for(lambda: g + 1 in writing, timeout=30), (
+                    f"group {g + 1}'s write did not begin while group {g} wrote"
+                )
         write(self, g, results)
 
     with monkeypatch.context() as m:
-        m.setattr(checkpoint, "extract", counting_extract)
-        m.setattr(CheckpointedExtractor, "_write_group", write_after_next_plan)
+        m.setattr(CheckpointedExtractor, "_write_group", write_once_next_began)
         t0 = time.monotonic()
         manifest = ck.run(spark, docs)
         wall_ms = (time.monotonic() - t0) * 1000
     assert sorted(manifest) == [0, 1, 2, 3]
+    assert all(lin["doc_count"] for lin in manifest.values())
+    assert [manifest[g]["snapshot_id"] for g in range(4)] == [1, 2, 3, 4]
     assert sum(lin["wall_ms"] for lin in manifest.values()) <= wall_ms
     assert _read_back(spark, ck) == uninterrupted
+
+
+def test_no_job_outlives_a_killed_run(spark, docs, tmp_path_factory):
+    """A run killed by ``fail_after`` waits for the group write still in
+    flight before it raises: no Spark job is active afterwards, the
+    in-flight group's results have landed without a manifest, and every
+    job of the run ran in the caller's job group (two per written group
+    plus the staging write)."""
+    ck = CheckpointedExtractor(str(tmp_path_factory.mktemp("ckkilled")), n_groups=4)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup())
+    tag = "ck-killed"
+    sc.setJobGroup(tag, tag)
+    try:
+        with pytest.raises(SimulatedFailure):
+            ck.run(spark, docs, fail_after=2)
+        # a job's end reaches the status store through the listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert tracker.getActiveJobsIds() == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sorted(ck.committed_groups()) == [0, 1]
+    assert os.path.isdir(ck._group_path(2))
+    assert not os.path.exists(ck._manifest_path(2))
+    assert not os.path.exists(ck._group_path(3))
+    assert set(tracker.getJobIdsForGroup()) <= ungrouped
+    assert len(tracker.getJobIdsForGroup(tag)) >= 2 * 3 + 1
 
 
 def test_planner_failure_raises_after_earlier_commits(
@@ -330,8 +362,7 @@ def test_planner_failure_raises_after_earlier_commits(
 
 def test_extract_build_runs_no_spark_job(spark, docs, tmp_path):
     """Building a group's extract plan is driver-only: it runs no Spark
-    job, so building it on the planner thread never runs work outside
-    the caller's job group."""
+    job, so a group's only jobs are those of its one write."""
     src = str(tmp_path / "staged")
     docs.withColumn("group_id", F.lit(0)).write.partitionBy("group_id").parquet(src)
     staged = spark.read.parquet(src)
