@@ -68,9 +68,8 @@ def main() -> int:
         "cell-exact (row count + schema + values) against its DuckDB oracle.",
         f"**{n_ok}/{n_ok + n_bad} green, {n_bad} mismatches or errors.**",
         f"Captured {ts} by",
-        "`python BENCH/sf01_verify.py` (round 5; includes the round-5",
-        "additions such as td_text_hash_classifier and the",
-        "device-micro-batched engine).",
+        "`python BENCH/sf01_verify.py` (includes the device-micro-batched",
+        "engine).",
         "",
         f"Wall seconds include BOTH engines (Spark local[{CPUS}] + DuckDB)",
         "and any first-use JIT; entries are listed in registry order.",

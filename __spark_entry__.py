@@ -74,45 +74,10 @@ _DRIVER_WINDOW = [
     # PAGE/txt fan-out and of the raw lines — re-record them
     "extract_serialize_txt", "extract_serialize_alto",
     "extract_serialize_page", "extract_conf_histogram",
-    # NEW in round 5: fastText-style hashed linear quality gate
-    # (unigram+bigram hashing trick, exact-integer weight sums, zero
-    # shuffles) — the CCNet/LLaMA corpus-filter shape
-    "td_text_hash_classifier",
-    # NEW in round 5: data-card mixture report — GROUPING SETS
-    # lang/source rollup (Expand below a partial agg, one Exchange of
-    # group cells only)
-    "td_corpus_report",
-    # NEW in round 5: token-budget corpus selection — histogram
-    # threshold (no global sort) vs the oracle's naive running-sum
-    # window: a cross-ALGORITHM oracle
-    "td_token_budget_select",
     # NEW in round 5: corpus snapshot diff (dataset-versioning report)
     "td_corpus_diff",
-    # NEW in round 5: inverted-index build (postings lists; the sparse
-    # counterpart of the ANN index-build plane)
-    "td_text_postings",
-    # NEW in round 5: add-1-smoothed bigram-LM cross-entropy (the
-    # KenLM perplexity gate's conditional-probability upgrade of
-    # td_text_unigram_ce; integer-grid exact summation)
-    "td_text_bigram_ce",
-    # NEW in round 5: sorted round-robin shard plan — per-shard totals
-    # from closed-form arithmetic over the token-count histogram (the
-    # corpus is never globally ranked; oracle runs the naive
-    # row_number deal — a cross-ALGORITHM gate like token_budget)
-    "td_shard_plan",
-    # NEW in round 5: winnowing fingerprints (Schleimer et al. 2003) —
-    # positional document sketches with the every-W-window selection
-    # guarantee; verified against a pure-Python third-engine oracle
-    # exactly (sketch_md5).  cp_sql_tpch_q20_excess_stock
-    # (r03+r04-green, untouched) is the evicted fill entry
-    "td_text_winnowing",
     # re-confirmation fill: r04-green entries, unchanged since
-    "td_text_bm25", "td_text_zipf",
-    # touched in round 5 (fuzz-gate find): ntile ordering now pins
-    # NULLS LAST on both engines — re-record it
-    "td_length_deciles",
     "cp_sql_tpch_q2_min_cost", "cp_sql_tpch_q9_profit",
-    "td_text_bpe_pairs",
 ]
 
 

@@ -1,11 +1,11 @@
 """The one shared definition of the md5 hex-byte bucket idiom.
 
-Deterministic hash-bucketing (corpus splits, sampling rates, pack
-groups) decodes two md5 hex nibbles into a uniform 0-255 byte with
-ascii arithmetic — portable across Spark and DuckDB (no conv(), no
-from_hex).  Its cross-engine equivalence is load-bearing for every
-oracle pair that uses it, so both dialects are generated HERE and
-nowhere else.
+Deterministic hash-bucketing (corpus splits, pack groups, the
+snapshot buckets of the corpus diff) decodes two md5 hex nibbles into
+a uniform 0-255 byte with ascii arithmetic — portable across Spark
+and DuckDB (no conv(), no from_hex).  Its cross-engine equivalence is
+load-bearing for every oracle pair that uses it, so both dialects are
+generated HERE and nowhere else.
 """
 
 from __future__ import annotations
@@ -38,15 +38,3 @@ def md5_byte_sql(expr: str, pos: int = 1) -> str:
 
     return f"({nibble(pos)} * 16 + {nibble(pos + 1)})"
 
-
-def md5_u16_col(expr: Column) -> Column:
-    """Spark Column: the first FOUR md5 hex nibbles of ``expr`` decoded
-    to a uniform 0-65535 integer (two md5_byte pairs) — the feature-
-    weight domain of the hashed linear classifier.  Kept here so the
-    Spark and DuckDB dialects decode identically."""
-    return (md5_byte_col(expr, 1) * 256 + md5_byte_col(expr, 3)).cast("long")
-
-
-def md5_u16_sql(expr: str) -> str:
-    """The DuckDB-SQL twin of md5_u16_col."""
-    return f"({md5_byte_sql(expr, 1)} * 256 + {md5_byte_sql(expr, 3)})"

@@ -262,21 +262,6 @@ def test_codec_seam_pluggable(monkeypatch):
         mm._decode(jpeg_payload, 4, 2)
 
 
-def test_bm25_plan_topk_and_broadcasts(spark, sf_smoke):
-    """BM25's physical plan must rank via TakeOrderedAndProject (top-k,
-    never a global Sort+Limit over the corpus) and bring df / corpus
-    stats in as broadcasts — the shapes that keep it one filtered
-    shuffle at 100 TB."""
-    from pero_ocr_api_spark.functions.text import q_bm25
-
-    plan = (
-        q_bm25(spark, sf_smoke)._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "TakeOrderedAndProject" in plan
-    assert "BroadcastExchange" in plan
-    assert "CartesianProduct" not in plan
-
-
 def test_merge_cdc_ops_semantics(spark):
     """Delete wins over update when its seq is higher; update wins when
     ITS seq is higher; inserts land; untouched targets survive; a
@@ -319,99 +304,6 @@ def test_media_refs_stage_is_wide(spark, sf_smoke):
     assert n == spark.sparkContext.defaultParallelism, n
 
 
-def test_hash_classifier_features_and_gate(spark):
-    """td_text_hash_classifier geometry + semantics on a pinned
-    fixture: n_feats = 2n-1 (unigrams + bigrams), single-token docs
-    have exactly one feature (no degenerate descending `sequence`),
-    the score is the exact integer-sum formula, and keep == prob>=.5."""
-    import math
-
-    from pero_ocr_api_spark.functions.hashing import md5_u16_col
-    from pero_ocr_api_spark.functions.text import q_hash_classifier
-    import pero_ocr_api_spark.functions.text as _t
-    from pyspark.sql import functions as F
-
-    docs = spark.createDataFrame(
-        [(1, "alpha beta gamma", "en", "s", 16),
-         (2, "solo", "en", "s", 4),
-         (3, "  ", "en", "s", 2)],
-        "doc_id long, text string, lang string, source string, n_chars long",
-    )
-    orig = _t.load_table
-    _t.load_table = lambda _s, _sf, _t2: docs
-    try:
-        out = {r["doc_id"]: r for r in q_hash_classifier(spark, "_").collect()}
-    finally:
-        _t.load_table = orig
-
-    assert set(out) == {1, 2}  # whitespace-only doc filtered
-    assert out[1]["n_feats"] == 5  # 3 unigrams + 2 bigrams
-    assert out[2]["n_feats"] == 1  # single token -> no bigrams
-
-    # recompute doc 1's score from the shared u16 hash primitive
-    feats = ["alpha", "beta", "gamma", "alpha beta", "beta gamma"]
-    raws = [
-        r["u"]
-        for r in spark.createDataFrame([(f,) for f in feats], "f string")
-        .select(md5_u16_col(F.col("f")).alias("u"))
-        .collect()
-    ]
-    assert all(0 <= u <= 65535 for u in raws)
-    expect = round(sum(raws) / (len(raws) * 65535.0) * 2.0 - 1.0, 6)
-    assert out[1]["cls_score"] == expect
-    prob = round(1.0 / (1.0 + math.exp(-4.0 * out[1]["cls_score"])), 6)
-    assert abs(out[1]["keep_prob"] - prob) < 1e-9
-    for r in out.values():
-        assert -1.0 <= r["cls_score"] <= 1.0
-        assert r["keep"] == (r["keep_prob"] >= 0.5)
-
-
-def test_corpus_report_rollup_consistency(spark, sf_smoke):
-    """td_corpus_report lattice invariants: per-lang subtotals sum the
-    (lang, source) cells, the corpus total sums the subtotals, and gid
-    encodes the grouping level (lang = MSB, matching DuckDB GROUPING)."""
-    from pero_ocr_api_spark.functions.text import q_corpus_report
-
-    rows = q_corpus_report(spark, sf_smoke).collect()
-    cells = [r for r in rows if r["gid"] == 0]
-    subs = {r["lang"]: r for r in rows if r["gid"] == 1}
-    total = [r for r in rows if r["gid"] == 3]
-    assert len(total) == 1 and not [r for r in rows if r["gid"] == 2]
-    assert all(r["source"] == "(all)" for r in subs.values())
-    for lang, sub in subs.items():
-        mine = [c for c in cells if c["lang"] == lang]
-        for m in ("n_docs", "total_tokens", "total_chars"):
-            assert sub[m] == sum(c[m] for c in mine), (lang, m)
-    for m in ("n_docs", "total_tokens", "total_chars"):
-        assert total[0][m] == sum(s[m] for s in subs.values())
-
-
-def test_token_budget_select_boundary_semantics(spark):
-    """td_token_budget_select on a pinned fixture: the kept set is the
-    exact (cls_score DESC, doc_id) prefix whose running token sum stays
-    within budget — including when the budget boundary falls INSIDE a
-    score cell (partial-cell spend) and between tied scores (doc_id
-    tiebreak)."""
-    import pero_ocr_api_spark.functions.text as _t
-    from pero_ocr_api_spark.functions.text import q_token_budget_select
-
-    # identical text -> identical cls_score; budget lands mid-tie-group
-    same = "alpha beta gamma delta " * 5  # 20 tokens per doc
-    docs = spark.createDataFrame(
-        [(i, same.strip(), "en", "s", len(same)) for i in range(10)],
-        "doc_id long, text string, lang string, source string, n_chars long",
-    )
-    orig_load, orig_budget = _t.load_table, _t._TOKEN_BUDGET
-    _t.load_table = lambda _s, _sf, _n: docs
-    _t._TOKEN_BUDGET = 70  # 3 docs of 20 fit; the 4th would make 80
-    try:
-        kept = sorted(r["doc_id"] for r in q_token_budget_select(spark, "_").collect())
-    finally:
-        _t.load_table, _t._TOKEN_BUDGET = orig_load, orig_budget
-    # all scores tie -> doc_id ascending is the total order
-    assert kept == [0, 1, 2]
-
-
 def test_corpus_diff_null_text_parity(spark, tmp_path):
     """td_corpus_diff presence semantics on NULL-text docs: md5(NULL)
     is NULL, so presence must come from dedicated flags, not
@@ -438,164 +330,3 @@ def test_corpus_diff_null_text_parity(spark, tmp_path):
     # sanity: the synthetic buckets produced a non-degenerate diff
     statuses = {r["status"] for r in out.collect()}
     assert "unchanged" in statuses and len(statuses) >= 3
-
-
-def test_bigram_ce_matches_closed_form(spark, tmp_path):
-    """td_text_bigram_ce equals the hand-computed add-1-smoothed
-    bigram cross-entropy (same 1e-6 grid snapping)."""
-    import math
-    from collections import Counter
-
-    from pero_ocr_api_spark.functions.text import REGISTRY as TXT
-
-    texts = {1: "a b a b", 2: "a b c", 3: "c"}
-    spark.createDataFrame(
-        [(i, t, "en", "s0", len(t)) for i, t in texts.items()],
-        "doc_id long, text string, lang string, source string, n_chars long",
-    ).coalesce(1).write.parquet(str(tmp_path / "documents.parquet"))
-
-    toks = {i: t.split() for i, t in texts.items()}
-    bigrams = {i: list(zip(tk, tk[1:])) for i, tk in toks.items()}
-    c12 = Counter(b for bs in bigrams.values() for b in bs)
-    c1 = Counter(b[0] for bs in bigrams.values() for b in bs)
-    v = len({w for tk in toks.values() for w in tk})
-
-    def ce(doc):
-        micro = sum(
-            round(-math.log((c12[b] + 1.0) / (c1[b[0]] + v)) * 1e6)
-            for b in bigrams[doc]
-        )
-        return round(micro / (1e6 * len(bigrams[doc])), 6)
-
-    out = {
-        r["doc_id"]: r
-        for r in TXT["td_text_bigram_ce"][0](spark, str(tmp_path)).collect()
-    }
-    assert set(out) == {1, 2}  # doc 3 has no bigrams
-    assert out[1]["n_bigrams"] == 3 and out[2]["n_bigrams"] == 2
-    assert out[1]["cross_entropy"] == ce(1)
-    assert out[2]["cross_entropy"] == ce(2)
-
-
-def test_shard_plan_matches_naive_lpt(spark, tmp_path):
-    """The histogram-arithmetic shard plan equals the naive global
-    row_number deal on two hand-checkable corpora: distinct token
-    counts (one doc per rank) and a single 10-doc tie cell (the
-    wrap-around case: shards 0-1 get 2 docs, shards 2-7 get 1)."""
-    from pero_ocr_api_spark.constants import N_SHARDS
-    from pero_ocr_api_spark.functions.text import REGISTRY as TXT
-
-    assert N_SHARDS == 8
-
-    def run(texts):
-        spark.createDataFrame(
-            [(i, t, "en", "s0", len(t)) for i, t in enumerate(texts)],
-            "doc_id long, text string, lang string, source string,"
-            " n_chars long",
-        ).coalesce(1).write.mode("overwrite").parquet(
-            str(tmp_path / "documents.parquet")
-        )
-        return {
-            r["shard_id"]: (r["n_docs"], r["n_tokens"])
-            for r in TXT["td_shard_plan"][0](spark, str(tmp_path)).collect()
-        }
-
-    # distinct counts 5,5,3,2,1 -> ranks 1..5 -> shards 0..4
-    out = run(["a b c d e", "f g h i j", "k l m", "n o", "p"])
-    assert out == {0: (1, 5), 1: (1, 5), 2: (1, 3), 3: (1, 2), 4: (1, 1)}
-
-    # one tie cell of 10 docs x 2 tokens: wrap-around within the cell
-    out = run(["w x"] * 10)
-    assert out == {
-        0: (2, 4), 1: (2, 4),
-        **{s: (1, 2) for s in range(2, 8)},
-    }
-
-
-def test_winnowing_matches_pure_python(spark, tmp_path):
-    """Third-engine oracle: an independent pure-Python winnowing
-    implementation (hashlib.md5, rightmost-min-per-window, distinct,
-    position-sorted digest) must reproduce sketch_md5 exactly; plus
-    the structural guarantee — two docs sharing a substring of length
-    >= K+W-1 share at least one fingerprint hash."""
-    import hashlib
-
-    from pero_ocr_api_spark.functions.text import (
-        REGISTRY as TXT, WINNOW_K, WINNOW_W,
-    )
-
-    def winnow(text):
-        k, w = WINNOW_K, WINNOW_W
-        n = len(text) - k + 1
-        if n < w:
-            return None
-        hs = [hashlib.md5(text[p:p + k].encode()).hexdigest()
-              for p in range(n)]
-        sels = set()
-        for start in range(n - w + 1):
-            # min hash, rightmost position on ties (min over (h, -p))
-            h, np = min((hs[start + j], -(start + j + 1))
-                        for j in range(w))
-            sels.add((h, -np))
-        sketch = ";".join(sorted(f"{h}@{p}" for h, p in sels))
-        return {
-            "n_kgrams": n,
-            "n_selected": len(sels),
-            "density": round(len(sels) / n, 6),
-            "sketch_md5": hashlib.md5(sketch.encode()).hexdigest(),
-            "hashes": {h for h, _ in sels},
-        }
-
-    shared = "the shared plagiarized passage here"   # len 35 >= K+W-1
-    texts = [
-        "alpha beta gamma delta epsilon zeta eta theta iota kappa",
-        "intro words then " + shared + " and an ending",
-        shared + " with a different continuation entirely",
-        "short",                                      # < K+W-1: absent
-        None,
-    ]
-    rows = [
-        (i, t, "en", "s0", 0 if t is None else len(t))
-        for i, t in enumerate(texts)
-    ]
-    spark.createDataFrame(
-        rows,
-        "doc_id long, text string, lang string, source string,"
-        " n_chars long",
-    ).coalesce(1).write.mode("overwrite").parquet(
-        str(tmp_path / "documents.parquet")
-    )
-    from pero_ocr_api_spark.compare import run_pair
-
-    fn, sql = TXT["td_text_winnowing"]
-    assert run_pair(spark, str(tmp_path), fn, sql) == []
-    out = {r["doc_id"]: r for r in fn(spark, str(tmp_path)).collect()}
-    exp = {i: winnow(t) for i, t in enumerate(texts) if t is not None}
-    for i, want in exp.items():
-        if want is None:
-            assert i not in out
-            continue
-        got = out[i]
-        for key in ("n_kgrams", "n_selected", "density", "sketch_md5"):
-            assert got[key] == want[key], (i, key, got[key], want[key])
-    # the localization guarantee: docs 1 and 2 share >= K+W-1 chars,
-    # so their sketches intersect on at least one k-gram hash
-    assert exp[1]["hashes"] & exp[2]["hashes"]
-
-
-def test_winnowing_plan_single_exchange(spark, sf_smoke):
-    """Pin the winnowing plan shape: exactly ONE shuffle (the doc_id
-    exchange feeding the rolling-min window; the collect_set aggregate
-    reuses its partitioning).  A reintroduced global distinct — a
-    measured 5.7x-at-4x-data regression — would add a second
-    hashpartitioning exchange and fail here."""
-    from pero_ocr_api_spark.functions.text import REGISTRY as TXT
-
-    plan = (
-        TXT["td_text_winnowing"][0](spark, sf_smoke)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert plan.count("Exchange hashpartitioning") == 1, plan
-    assert "BroadcastExchange" not in plan, plan

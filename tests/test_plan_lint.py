@@ -8,24 +8,12 @@ import pytest
 
 import __spark_entry__ as entry_mod
 
-# Queries that run eagerly at plan-build time (localCheckpoint); their
-# components are linted via their own tests instead.
-_EAGER = {
-    # localCheckpoint at plan-build (single materialized scoring scan)
-    "td_token_budget_select",
-}
-
 # BroadcastNestedLoopJoin is only acceptable when one side is a
 # provably tiny relation (a single-row aggregate or a fixed candidate
 # list crossed in deliberately).
 _BNLJ_OK = {
     "cp_admin_add_engine",   # 1-row max-id aggregates crossed into inserts
     "td_text_idf",           # 1-row corpus-size aggregate crossed in
-    "td_text_unigram_ce",    # 1-row corpus-size aggregate crossed in
-    "td_text_bigram_ce",     # 1-row vocab-size aggregate crossed into
-                             # the |vocab|-row history table (not the
-                             # per-bigram stream)
-    "td_text_bm25",          # 1-row corpus-stats aggregate crossed in
     # partsupp derivation: part × a fixed 4-row VALUES list (the
     # deterministic in-SQL stand-in for the absent partsupp table)
     "cp_sql_tpch_q2_min_cost", "cp_sql_tpch_q9_profit",
@@ -33,9 +21,7 @@ _BNLJ_OK = {
     "cp_sql_tpch_q20_excess_stock",
 }
 
-_QUERIES = [
-    (n, fn) for n, fn in entry_mod.queries().items() if n not in _EAGER
-]
+_QUERIES = list(entry_mod.queries().items())
 
 
 @pytest.mark.parametrize("name,fn", _QUERIES, ids=[q[0] for q in _QUERIES])
@@ -51,9 +37,8 @@ def test_plan_has_no_scale_antipatterns(spark, sf_smoke, name, fn):
 
 
 def test_whitelists_name_registered_queries():
-    """Every _EAGER / _BNLJ_OK entry must name a registered query: a
+    """Every _BNLJ_OK entry must name a registered query: a
     stale entry left behind by a deleted query would silently exempt
     whatever later reuses the name."""
     registered = set(entry_mod.queries())
-    assert _EAGER <= registered, sorted(_EAGER - registered)
     assert _BNLJ_OK <= registered, sorted(_BNLJ_OK - registered)
