@@ -20,7 +20,6 @@ from pero_ocr_api_spark.queries import extraction as _qx
 from pero_ocr_api_spark.queries import extraction_sql as _sx
 from pero_ocr_api_spark.functions.cdc import REGISTRY as _CDC
 from pero_ocr_api_spark.functions.maincontent import REGISTRY as _MC
-from pero_ocr_api_spark.functions.text import REGISTRY as _TEXT
 from pero_ocr_api_spark.plans.engine_config import REGISTRY as _CFG
 from pero_ocr_api_spark.plans.layout import REGISTRY as _LAYOUT
 from pero_ocr_api_spark.queries.controlplane import REGISTRY as _CP
@@ -74,8 +73,6 @@ _DRIVER_WINDOW = [
     # PAGE/txt fan-out and of the raw lines — re-record them
     "extract_serialize_txt", "extract_serialize_alto",
     "extract_serialize_page", "extract_conf_histogram",
-    # NEW in round 5: corpus snapshot diff (dataset-versioning report)
-    "td_corpus_diff",
     # re-confirmation fill: r04-green entries, unchanged since
     "cp_sql_tpch_q2_min_cost", "cp_sql_tpch_q9_profit",
 ]
@@ -87,7 +84,6 @@ def _registry() -> dict[str, tuple]:
     reg.update(_LAYOUT)
     reg.update(_CP)
     reg.update(_SM)
-    reg.update(_TEXT)
     reg.update(_MC)
     reg.update(_CDC)
     reg.update(_MM)

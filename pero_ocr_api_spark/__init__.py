@@ -10,8 +10,7 @@ Layout:
 - oracle.py      single-threaded pure-Python golden oracle
 - operators/     inference (mapInPandas), normalize, serialize
 - plans/         end-to-end pipeline, checkpoint/resume, lineage
-- functions/     text analysis, main-content extraction,
-                 CDC merge / SCD2
+- functions/     main-content extraction, CDC merge / SCD2
 - queries/       control-plane query library (SURVEY §2.2-§2.7)
 - streaming/     Structured Streaming (availableNow) variant
 """

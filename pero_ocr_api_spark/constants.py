@@ -63,5 +63,5 @@ DEFAULT_SCORE = 100.0   # median of no confidences -> 1.0 -> *100
 # ---- pinned NOW for deterministic time-window queries (FIXTURES.md §3) ----
 PINNED_NOW = "2024-01-30 00:00:00"  # inside the events ts range
 
-# ---- training-data ops ----
+# ---- main-content extraction (functions/maincontent.py) ----
 STOPWORDS = ["the", "a", "of", "and", "to", "in", "is", "it"]

@@ -238,91 +238,3 @@ def q_merge_cdc_delete(spark: SparkSession, sf: str) -> DataFrame:
     )
     changes = updates.unionByName(deletes).unionByName(inserts)
     return merge_cdc_ops(target, changes, "doc_id")
-
-
-# ---- corpus snapshot diff (dataset versioning report) ----
-def _diff_sql() -> str:
-    from .hashing import md5_byte_sql
-
-    new_b = md5_byte_sql("('prev:' || CAST(doc_id AS VARCHAR))")
-    del_b = md5_byte_sql("('del:' || CAST(doc_id AS VARCHAR))")
-    mut_b = md5_byte_sql("('mut:' || CAST(doc_id AS VARCHAR))")
-    return f"""
-WITH cur AS (
-  SELECT doc_id, source, md5(text) AS fp
-  FROM documents WHERE {del_b} >= 16),
-prev AS (
-  SELECT doc_id, source,
-         CASE WHEN {mut_b} < 24 THEN md5('OLD:' || text)
-              ELSE md5(text) END AS fp
-  FROM documents WHERE {new_b} >= 24),
-d AS (
-  SELECT coalesce(c.source, p.source) AS source,
-         CASE WHEN p.doc_id IS NULL THEN 'added'
-              WHEN c.doc_id IS NULL THEN 'removed'
-              WHEN c.fp <> p.fp THEN 'changed'
-              ELSE 'unchanged' END AS status
-  FROM cur c FULL OUTER JOIN prev p ON c.doc_id = p.doc_id)
-SELECT source, status, count(*) AS n
-FROM d GROUP BY source, status"""
-
-
-@_reg("td_corpus_diff", _diff_sql())
-def q_corpus_diff(spark: SparkSession, sf: str) -> DataFrame:
-    """Dataset-versioning report: diff the current corpus snapshot
-    against the previous one — added / removed / changed / unchanged
-    counts per source, the table a data-card release review reads.
-    The two snapshots derive deterministically from the documents
-    table via the repo's md5-bucket idiom: ~6% of docs are absent
-    from the current snapshot (removed), ~9% absent from the previous
-    (added), ~9% carry a mutated previous fingerprint (changed).
-
-    Scale shape: one full-outer equi-join on doc_id comparing md5
-    fingerprints (never text), then a combine-shuffled (source,
-    status) aggregate of |sources|x4 cells.  On the doc_id-bucketed
-    layout (plans/bucketing.py) the join is shuffle-free; fingerprints
-    at 100 TB come precomputed from the snapshot manifests (Iceberg
-    data-file stats), not recomputed — the join+agg here IS the whole
-    job.
-
-    Reference scope: the reference has no dataset-versioning plane;
-    SURVEY §2 extras (lakehouse mutation family, next to SCD2/MERGE)."""
-    from .hashing import md5_byte_col
-
-    def bucket(tag: str):
-        return md5_byte_col(
-            F.concat(F.lit(tag + ":"), F.col("doc_id").cast("string"))
-        )
-
-    docs = load_table(spark, sf, "documents")
-    # presence must come from dedicated flags, NOT fingerprint nullness:
-    # md5(NULL text) is NULL, so fp-IS-NULL would misread a NULL-text
-    # doc present on one side as absent (the oracle checks the side's
-    # doc_id) — a latent cross-engine divergence on NULL-text corpora
-    cur = docs.filter(bucket("del") >= 16).select(
-        "doc_id", "source", F.md5("text").alias("fp"),
-        F.lit(True).alias("in_cur"),
-    )
-    prev = docs.filter(bucket("prev") >= 24).select(
-        "doc_id",
-        F.col("source").alias("p_source"),
-        F.when(
-            bucket("mut") < 24, F.md5(F.concat(F.lit("OLD:"), F.col("text")))
-        ).otherwise(F.md5("text")).alias("p_fp"),
-        F.lit(True).alias("in_prev"),
-    )
-    j = cur.join(prev, "doc_id", "full_outer")
-    status = (
-        F.when(F.col("in_prev").isNull(), "added")
-        .when(F.col("in_cur").isNull(), "removed")
-        .when(F.col("fp") != F.col("p_fp"), "changed")
-        .otherwise("unchanged")
-    )
-    return (
-        j.select(
-            F.coalesce("source", "p_source").alias("source"),
-            status.alias("status"),
-        )
-        .groupBy("source", "status")
-        .agg(F.count("*").alias("n"))
-    )

@@ -339,18 +339,17 @@ def test_planner_failure_raises_after_earlier_commits(
     out = str(tmp_path_factory.mktemp("ckplanfail"))
     ck = CheckpointedExtractor(out, n_groups=4)
     boom = RuntimeError("plan of the third group failed")
-    calls = 0
-    build = checkpoint.extract
+    build = ck._plan_group
 
-    def fail_third(*args, **kwargs):
-        nonlocal calls
-        calls += 1
-        if calls == 3:
+    # keyed on the group, not on a call count: the two workers can
+    # build group 3's plan before group 2's
+    def fail_third(spark, grouped, g):
+        if g == 2:
             raise boom
-        return build(*args, **kwargs)
+        return build(spark, grouped, g)
 
     with monkeypatch.context() as m:
-        m.setattr(checkpoint, "extract", fail_third)
+        m.setattr(ck, "_plan_group", fail_third)
         with pytest.raises(RuntimeError) as err:
             ck.run(spark, docs)
     assert err.value is boom

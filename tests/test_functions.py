@@ -1,5 +1,6 @@
-"""Property checks for the training-data ops (oracle parity is covered
-in test_oracle_parity; these assert semantic invariants)."""
+"""Property checks for the functions/ ops, the multimodal operators and
+the admin helpers (oracle parity is covered in test_oracle_parity; these
+assert semantic invariants)."""
 
 from pyspark.sql import functions as F
 
@@ -76,21 +77,6 @@ def test_main_content_classifier_edges(spark):
     assert out["B"].content == "" and out["B"].n_good == 0
 
 
-def test_pack_groups_use_full_byte(spark, sf_smoke):
-    """ADVICE r2: pack_group must draw from the full PACK_GROUPS range
-    (two-nibble 0-255 decode), not the 16 values a single md5 hex char
-    yields — otherwise the packing window's parallelism caps at 16."""
-    from pero_ocr_api_spark.functions.text import PACK_GROUPS, q_pack_sequences
-
-    groups = {
-        r.pack_group
-        for r in q_pack_sequences(spark, sf_smoke).select("pack_group")
-        .distinct().collect()
-    }
-    assert len(groups) > 16
-    assert all(0 <= g < PACK_GROUPS for g in groups)
-
-
 def test_add_api_key_quote_safe(spark):
     """ADVICE r2: owner/permission are data, not SQL — a value with a
     single quote must not break the digest expression."""
@@ -107,49 +93,6 @@ def test_add_api_key_quote_safe(spark):
     new = rows["k2"]
     assert new.owner == "O'Brien; DROP TABLE--"
     assert new.api_string and "=" not in new.api_string
-
-
-def test_chunk_documents_geometry(spark):
-    """Edge geometry of fixed-window chunking: short doc (< overlap),
-    exact-multiple doc, and an off-grid doc — chunk count, starts,
-    overlap width, and full-coverage all pinned."""
-    from pero_ocr_api_spark.functions.text import (
-        CHUNK_OVERLAP, CHUNK_SIZE, CHUNK_STRIDE, chunk_documents,
-    )
-
-    def doc(i, n):
-        return (i, " ".join(f"t{j}" for j in range(1, n + 1)))
-
-    df = spark.createDataFrame(
-        # 5 tokens (< overlap), exactly one stride+chunk (2 chunks,
-        # second full), chunk_size exactly (1 chunk), chunk_size+1
-        # (2 chunks, second mostly overlap), empty doc (dropped)
-        [doc(1, 5), doc(2, CHUNK_STRIDE + CHUNK_SIZE), doc(3, CHUNK_SIZE),
-         doc(4, CHUNK_SIZE + 1), (5, "")],
-        "doc_id long, text string",
-    )
-    rows = {
-        (r.doc_id, r.chunk_id): r
-        for r in chunk_documents(df).collect()
-    }
-    by_doc = {}
-    for (d, k) in rows:
-        by_doc.setdefault(d, []).append(k)
-
-    assert sorted(by_doc) == [1, 2, 3, 4]          # empty doc dropped
-    assert by_doc[1] == [0] and rows[(1, 0)].n_tokens == 5
-    assert sorted(by_doc[2]) == [0, 1]
-    assert rows[(2, 1)].start_tok == CHUNK_STRIDE + 1
-    assert rows[(2, 1)].n_tokens == CHUNK_SIZE      # second chunk full
-    assert by_doc[3] == [0]                         # exact fit: 1 chunk
-    assert sorted(by_doc[4]) == [0, 1]
-    assert rows[(4, 1)].n_tokens == CHUNK_OVERLAP + 1
-
-    # coverage + overlap invariants on the off-grid doc
-    c0 = rows[(4, 0)].chunk_text.split(" ")
-    c1 = rows[(4, 1)].chunk_text.split(" ")
-    assert c0[-CHUNK_OVERLAP:] == c1[:CHUNK_OVERLAP]
-    assert set(c0) | set(c1) == {f"t{j}" for j in range(1, CHUNK_SIZE + 2)}
 
 
 def test_merge_upsert_semantics(spark):
@@ -302,31 +245,3 @@ def test_media_refs_stage_is_wide(spark, sf_smoke):
     refs = _media_refs(spark, sf_smoke)
     n = refs.rdd.getNumPartitions()
     assert n == spark.sparkContext.defaultParallelism, n
-
-
-def test_corpus_diff_null_text_parity(spark, tmp_path):
-    """td_corpus_diff presence semantics on NULL-text docs: md5(NULL)
-    is NULL, so presence must come from dedicated flags, not
-    fingerprint nullness — pinned by running BOTH engines over a
-    corpus where every snapshot-bucket combination carries a NULL-text
-    doc."""
-    from pero_ocr_api_spark.compare import run_pair
-    from pero_ocr_api_spark.functions.cdc import REGISTRY
-
-    rows = []
-    for i in range(200):
-        text = None if i % 3 == 0 else f"doc text {i}"
-        n = 0 if text is None else len(text)
-        rows.append((i, text, "en", f"s{i % 2}", n))
-    spark.createDataFrame(
-        rows,
-        "doc_id long, text string, lang string, source string, n_chars long",
-    ).write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
-
-    fn, sql = REGISTRY["td_corpus_diff"]
-    errs = run_pair(spark, str(tmp_path), fn, sql)
-    assert errs == [], errs
-    out = fn(spark, str(tmp_path))
-    # sanity: the synthetic buckets produced a non-degenerate diff
-    statuses = {r["status"] for r in out.collect()}
-    assert "unchanged" in statuses and len(statuses) >= 3

@@ -13,7 +13,6 @@ import __spark_entry__ as entry_mod
 # list crossed in deliberately).
 _BNLJ_OK = {
     "cp_admin_add_engine",   # 1-row max-id aggregates crossed into inserts
-    "td_text_idf",           # 1-row corpus-size aggregate crossed in
     # partsupp derivation: part × a fixed 4-row VALUES list (the
     # deterministic in-SQL stand-in for the absent partsupp table)
     "cp_sql_tpch_q2_min_cost", "cp_sql_tpch_q9_profit",

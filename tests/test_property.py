@@ -184,52 +184,6 @@ def test_main_content_matches_python_oracle(spark, docs):
         assert got[rid].n_blocks == expect["n_blocks"]
 
 
-@settings(
-    max_examples=int(os.environ.get("PROPERTY_MAX_EXAMPLES", "25")),
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-@given(
-    lengths=st.lists(st.integers(min_value=0, max_value=200), min_size=1,
-                     max_size=8),
-    chunk=st.integers(min_value=2, max_value=64),
-    overlap_frac=st.floats(min_value=0.0, max_value=0.9),
-)
-def test_chunking_coverage_property(spark, lengths, chunk, overlap_frac):
-    """For ANY doc lengths and chunk geometry: every token of every
-    non-empty doc appears in ≥1 chunk, chunk k starts at k*stride+1,
-    consecutive chunks share exactly `overlap` tokens (when the next
-    chunk is long enough), and no chunk is empty."""
-    from pero_ocr_api_spark.functions.text import chunk_documents
-
-    overlap = min(int(chunk * overlap_frac), chunk - 1)
-    stride = chunk - overlap
-    df = spark.createDataFrame(
-        [(i, " ".join(f"w{j}" for j in range(n))) for i, n in enumerate(lengths)],
-        "doc_id long, text string",
-    )
-    out = chunk_documents(df, chunk_size=chunk, overlap=overlap).collect()
-    by_doc: dict[int, dict[int, list[str]]] = {}
-    for r in out:
-        assert r.n_tokens > 0
-        assert r.start_tok == r.chunk_id * stride + 1
-        by_doc.setdefault(r.doc_id, {})[r.chunk_id] = r.chunk_text.split(" ")
-    for i, n in enumerate(lengths):
-        if n == 0:
-            assert i not in by_doc
-            continue
-        chunks = by_doc[i]
-        assert sorted(chunks) == list(range(len(chunks)))
-        covered = set()
-        for k in sorted(chunks):
-            toks = chunks[k]
-            assert len(toks) <= chunk
-            covered.update(toks)
-            if overlap and k + 1 in chunks and len(chunks[k + 1]) >= overlap:
-                assert toks[-overlap:] == chunks[k + 1][:overlap]
-        assert covered == {f"w{j}" for j in range(n)}, (n, chunk, overlap)
-
-
 # ---- cross-engine fuzz: random corpora through the REAL parity gate ----
 _doc_text = st.one_of(
     st.none(),
@@ -261,11 +215,10 @@ def test_fuzz_new_ops_cross_engine(spark, tmp_path_factory, texts, data):
     parquet dir and each op runs through the real run_pair gate."""
     from pero_ocr_api_spark.compare import run_pair
     from pero_ocr_api_spark.functions.cdc import REGISTRY as CDC
-    from pero_ocr_api_spark.functions.text import REGISTRY as TXT
 
     rows = []
     for i, t in enumerate(texts):
-        # bias toward duplicate content so the diff paths light up
+        # bias toward duplicate content (rows that differ only by key)
         if t is not None and data.draw(st.booleans(), label=f"dup{i}"):
             t = texts[0] if texts[0] is not None else t
         rows.append(
@@ -285,22 +238,7 @@ def test_fuzz_new_ops_cross_engine(spark, tmp_path_factory, texts, data):
 
     for name, reg in [
         # every op whose only input is the documents table goes through
-        # the same gate, so the whole text surface is fuzz-hardened.
-        # log()-based scores (idf) are last-ulp platform-dependent but
-        # deterministic per input; the fixed seed keeps any straddle
-        # reproducible, not flaky.
-        ("td_corpus_diff", CDC),
-        ("td_text_tokens", TXT),
-        ("td_text_quality", TXT),
-        ("td_text_langid", TXT),
-        ("td_text_fingerprint", TXT),
-        ("td_text_vocab", TXT),
-        ("td_corpus_filter", TXT),
-        ("td_corpus_split", TXT),
-        ("td_text_repetition", TXT),
-        ("td_chunk_documents", TXT),
-        ("td_pack_sequences", TXT),
-        ("td_text_idf", TXT),
+        # the same gate: the two CDC merges over it
         ("td_merge_upsert", CDC),
         ("td_merge_cdc_delete", CDC),
     ]:
