@@ -8,7 +8,7 @@ Layout:
 - session.py     tuned SparkSession builder
 - synth.py       deterministic interleaved-documents synthesis (+SQL twin)
 - oracle.py      single-threaded pure-Python golden oracle
-- operators/     inference (mapInPandas), normalize, serialize
+- operators/     inference (arrow_udf, mapInPandas), normalize, serialize
 - plans/         end-to-end pipeline, checkpoint/resume, lineage
 - functions/     main-content extraction, CDC merge / SCD2
 - queries/       control-plane query library (SURVEY §2.2-§2.7)

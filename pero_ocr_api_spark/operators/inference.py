@@ -7,10 +7,13 @@ The real pipeline is GPU model inference; this sandbox has no models,
 so the stage is a *deterministic pure function of media_ref* (md5-based,
 constants.py) — but the Spark plumbing is the real thing:
 
-- spans arrive as Arrow record batches through ``mapInPandas`` (one
-  Python crossing per batch, never per row), and the engine sees each
-  distinct ``media_ref`` of a batch once; its result is expanded back
-  to every span that names the page;
+- spans arrive as Arrow record batches (one Python crossing per
+  batch, never per row), and the engine sees each distinct
+  ``media_ref`` of a batch once (``_infer_distinct``); its result is
+  expanded back to every span that names the page.  Two wrappers feed
+  it: ``make_infer_fn`` (``mapInPandas`` over one row per media span,
+  the salted plan) and ``make_infer_lines_fn`` (a scalar ``arrow_udf``
+  over each document's list of media spans, the unsalted plan);
 - the "engine" is a module-level lazy singleton initialised from a
   broadcast config, exactly how real weights would be shipped
   (reference analog: per-worker engine zip cache, run_client.py:44-67);
@@ -27,7 +30,8 @@ constants.py) — but the Spark plumbing is the real thing:
 
 Output of one media span with L surviving lines is L rows
 (doc_id, offset, line_idx, text, conf, error=NULL); a failed span is
-one row with error set and text NULL.
+one row with error set and text NULL.  The per-document wrapper
+returns the same rows without doc_id, as each document's list.
 """
 
 from __future__ import annotations
@@ -37,9 +41,12 @@ import threading
 import time
 from collections.abc import Iterator
 from concurrent.futures import ThreadPoolExecutor
+from itertools import accumulate
 from typing import Optional
 
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from ..constants import (
     ARABIC_BASE_CP,
@@ -56,6 +63,17 @@ INFER_SCHEMA = (
     "doc_id string, offset int, media_ref string, line_idx int, "
     "text string, conf double, error string"
 )
+
+# the per-document wrapper's output: one list of line rows per document
+LINES_SCHEMA = (
+    "array<struct<offset:int, media_ref:string, line_idx:int, "
+    "text:string, conf:double, error:string>>"
+)
+_LINE_FIELDS = [
+    pa.field("offset", pa.int32()), pa.field("media_ref", pa.string()),
+    pa.field("line_idx", pa.int32()), pa.field("text", pa.string()),
+    pa.field("conf", pa.float64()), pa.field("error", pa.string()),
+]
 
 _ERROR_BY_CODE = {0: STATE_NOT_FOUND, 1: STATE_INVALID_FILE, 2: STATE_PROCESSING_FAILED}
 
@@ -240,6 +258,17 @@ def _get_engine(config: dict) -> _StubEngine:
     return _ENGINE
 
 
+def _infer_distinct(engine: _StubEngine, refs: pd.Series) -> list:
+    """The engine's (error, lines) for each ref of ``refs``, in order,
+    from one ``infer_batch`` call over the distinct refs: drop_duplicates
+    keeps each ref's first row in order of appearance, which is
+    factorize's code order, and a NULL ref as None (factorize's own
+    uniques would hold NaN)."""
+    codes, _ = pd.factorize(refs, use_na_sentinel=False)
+    distinct = engine.infer_batch(refs.drop_duplicates().reset_index(drop=True))
+    return [distinct[c] for c in codes]
+
+
 def make_infer_fn(broadcast_config):
     """Build the mapInPandas function.  ``broadcast_config`` is a
     ``Broadcast[dict]`` (engine id/version/thresholds)."""
@@ -249,14 +278,8 @@ def make_infer_fn(broadcast_config):
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            # one device call per distinct page: drop_duplicates keeps
-            # each ref's first row in order of appearance, which is
-            # factorize's code order, and a NULL ref as None (factorize's
-            # own uniques would hold NaN)
             refs = pdf["media_ref"]
-            codes, _ = pd.factorize(refs, use_na_sentinel=False)
-            distinct = engine.infer_batch(refs.drop_duplicates().reset_index(drop=True))
-            results = [distinct[c] for c in codes]
+            results = _infer_distinct(engine, refs)
             out_doc, out_off, out_ref, out_idx, out_text, out_conf, out_err = (
                 [], [], [], [], [], [], [])
             for (doc_id, offset, ref), (err, lines) in zip(
@@ -286,3 +309,42 @@ def make_infer_fn(broadcast_config):
             )
 
     return infer
+
+
+def make_infer_lines_fn(broadcast_config):
+    """Build the scalar ``arrow_udf`` function of the unsalted plan: one
+    ``list<struct<offset, media_ref>>`` of media spans per document in,
+    that document's ``LINES_SCHEMA`` rows out (a NULL or empty list
+    gives an empty one).  The spans of the whole Arrow batch go to
+    ``_infer_distinct`` together, so a page named by several documents
+    of a batch is inferred once."""
+
+    def infer_lines(media: pa.Array) -> pa.Array:
+        engine = _get_engine(broadcast_config.value)
+        spans = media.flatten()
+        refs = spans.field("media_ref").to_pandas()
+        results = _infer_distinct(engine, refs)
+        rows, per_span = [], []
+        for offset, ref, (err, lines) in zip(
+            spans.field("offset").to_pylist(), refs, results
+        ):
+            if err is not None:
+                rows.append((offset, ref, 0, None, None, err))
+                per_span.append(1)
+                continue
+            rows.extend((offset, ref, idx, text, conf, None)
+                        for idx, text, conf in lines)
+            per_span.append(len(lines))
+        cols = list(zip(*rows)) or [()] * len(_LINE_FIELDS)
+        spans_per_doc = pc.fill_null(pc.list_value_length(media), 0).to_pylist()
+        span_ends = list(accumulate(spans_per_doc, initial=0))
+        row_ends = list(accumulate(per_span, initial=0))
+        return pa.ListArray.from_arrays(
+            pa.array([row_ends[e] for e in span_ends], pa.int32()),
+            pa.StructArray.from_arrays(
+                [pa.array(c, f.type) for c, f in zip(cols, _LINE_FIELDS)],
+                fields=_LINE_FIELDS,
+            ),
+        )
+
+    return infer_lines

@@ -61,12 +61,13 @@ def serialize_alto(raw_spans: DataFrame) -> DataFrame:
 
     Input: raw_spans(doc_id, offset, line_idx, kind, text, media_ref,
     conf) from ExtractResult.raw_spans, an explode of the text lines
-    and the decoded media lines that ``extract``'s per-doc aggregate
-    collects.  Pure JVM string assembly: collect_list → array_sort on
-    (offset, line_idx) → transform → array_join; no UDF.  The explode
-    keeps the aggregate's doc_id partitioning, so this groupBy adds no
-    exchange: over a persisted extract it is one job that reads the
-    cache.
+    and the decoded media lines of ``extract``'s per-doc frame.  Pure
+    JVM string assembly: collect_list → array_sort on (offset,
+    line_idx) → transform → array_join; no UDF.  Over the grouped
+    (salted) plan the explode keeps the aggregate's doc_id
+    partitioning, so this groupBy adds no exchange: over a persisted
+    extract it is one job that reads the cache.  Over the row plan it
+    shuffles the lines on doc_id.
     """
     wc = sql_str(' WC="%.2f"')
     line = _concat(

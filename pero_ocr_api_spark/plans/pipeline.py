@@ -2,7 +2,27 @@
 reference's whole worker loop (claim → fetch → decode → PageParser →
 confidence filter → arabic fix → serialize → score;
 /root/reference/processing_client/run_client.py:112-244) as ONE lazy
-DataFrame program:
+DataFrame program, in one of two shapes chosen by ``salt_partitions``.
+
+The row plan (no salt: checkpoint groups, requests, stream
+micro-batches) builds each document's result in the row that holds it,
+with no exchange:
+
+    documents
+      → media = arrow_udf(filter(spans, media) → (offset, media_ref))  (X2-X5)
+                [each doc's inferred lines and error rows; only the
+                 media spans cross to Python, the text stays on the JVM]
+      → texts: whitespace-normalized text spans, empties dropped       (X10)
+        kept:  confident (N3), arabic-fixed (F10) decoded lines
+        confs: their conf values, sorted
+        ALTO lines: decoded lines, raw text + conf
+        first error by offset                                          (X9)
+      → lines: array_sort(concat(texts, kept)) on (offset, line_idx)   (W2)
+        score: median of confs, interpolated as Spark's percentile (A7/X8)
+
+The grouped plan (``salt_partitions`` set: the scanned archive) spreads
+a heavy document's pages over the lanes first, so it rebuilds each
+document in one shuffle:
 
     documents
       → explode(spans)
@@ -15,19 +35,22 @@ DataFrame program:
                          ALTO lines: decoded media lines, raw text + conf
                          score (A7/X8: median confident conf ×100, 2dp)
                          status (X9: first error by offset)
+
+Both give the same per-doc frame (lines, alto_lines, median_conf,
+first_error), and one projection of it is the result:
+
       → results(doc_id, score, status,
                 spans array<struct<order, kind, text, media_ref>>)
 
 ``spans`` (one row per output span) and ``docs`` (one row per doc) are
 an explode and a projection of ``results``; ``raw_spans``, the input
 of ``serialize_alto``, is an explode of the text lines of the spans
-(every text line is kept, so each travels the shuffle once) and the
-ALTO media lines.  A plan that reads only ``results`` (checkpoint,
-stream) has the ALTO lines pruned by Catalyst.
-``persist_inference=True`` persists the per-doc aggregate, so a caller
-that writes all four outputs runs inference and the doc_id shuffle
-once, and each later output is a projection of the cache with no
-exchange.
+and the ALTO media lines.  A plan that reads only ``results``
+(checkpoint, stream) has the ALTO lines pruned by Catalyst.
+``persist_inference=True`` persists the per-doc frame, so a caller
+that writes all four outputs runs inference (and the grouped plan's
+doc_id shuffle) once, and each later output is a projection of the
+cache with no exchange.
 
 Every expression is Spark SQL text built in Python from ``constants``
 (string literals quoted by ``normalize.sql_str``), one ``selectExpr``,
@@ -38,8 +61,13 @@ its 33-step ligature chain).  The plan is the one the ``Column`` form
 gives.
 
 Scale notes (100 TB):
-- the only Python crossing is the Arrow channel of mapInPandas on the
-  media branch; everything else is whole-stage codegen.
+- the only Python crossing is the Arrow channel of the inference node
+  (the row plan's arrow_udf, the grouped plan's mapInPandas);
+  everything else is whole-stage codegen or array functions.
+- the row plan assumes one input row per document (the
+  ``DOCUMENTS_SCHEMA`` contract): every span of a doc is in its row,
+  so no exchange is needed, and each distinct page of an Arrow batch
+  of documents is inferred once.
 - with ``salt_partitions`` set, the media branch is repartitioned on
   xxhash64(media_ref) into min(salt_partitions, defaultParallelism)
   partitions before inference: one Python task per lane (a Python task
@@ -50,8 +78,9 @@ Scale notes (100 TB):
   one partition, where inference runs once per distinct page of an
   Arrow batch. The per-doc aggregate then shuffles once on doc_id.
 - no driver-side collect anywhere; the inference counters are
-  ``DataFrame.observe`` metrics of the one inference node, so they are
-  exact for the first action that runs the plan, persisted or not.
+  ``DataFrame.observe`` metrics of the one inference node's output, so
+  they are exact for the first action that runs the plan, persisted
+  or not.
 """
 
 from __future__ import annotations
@@ -65,6 +94,7 @@ from typing import Optional
 from pyspark import Broadcast, SparkContext
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.functions import arrow_udf
 
 from ..constants import (
     DEFAULT_SCORE,
@@ -74,11 +104,17 @@ from ..constants import (
     SCORE_SCALE,
     STATE_PROCESSED,
 )
-from ..operators.inference import INFER_SCHEMA, make_infer_fn
+from ..operators.inference import (
+    INFER_SCHEMA,
+    LINES_SCHEMA,
+    make_infer_fn,
+    make_infer_lines_fn,
+)
 from ..operators.normalize import (
     confident,
     fix_arabic,
     normalize_text_spans,
+    normalized_text,
     sql_str,
 )
 
@@ -144,7 +180,7 @@ class ExtractResult:
     ``results`` (checkpoint, stream) never builds them."""
 
     results: DataFrame     # doc_id, score, status, spans[order, kind, text, media_ref]
-    per_doc: DataFrame     # the per-doc aggregate ``results`` projects
+    per_doc: DataFrame     # the per-doc frame ``results`` projects
     metrics: ExtractMetrics = field(default_factory=ExtractMetrics)
     persisted: bool = False   # per_doc is persisted (persist_inference)
 
@@ -205,15 +241,102 @@ def extract(
     with_metrics: bool = True,
     persist_inference: bool = False,
 ) -> ExtractResult:
-    """Build the extraction plan (lazy).  ``persist_inference`` keeps the
-    per-doc aggregate (spans, ALTO lines, score, status) for callers
-    that run several actions on the result: the first action runs
-    inference and the doc_id shuffle once, and ``spans``, ``docs``,
+    """Build the extraction plan (lazy): the grouped plan with
+    ``salt_partitions`` set, the row plan without it (module
+    docstring).  ``persist_inference`` keeps the per-doc frame (spans,
+    ALTO lines, score, status) for callers that run several actions on
+    the result: the first action runs inference (and the grouped
+    plan's doc_id shuffle) once, and ``spans``, ``docs``,
     ``raw_spans`` and the serializers over them read the cache.  A
     single action runs inference once without it."""
     bconf = _engine_broadcast(
         spark.sparkContext, engine_config or DEFAULT_ENGINE_CONFIG
     )
+    metrics = ExtractMetrics(Observation()) if with_metrics else ExtractMetrics()
+    if salt_partitions:
+        per_doc = _grouped_per_doc(
+            spark, documents, bconf, salt_partitions, metrics.observation)
+    else:
+        per_doc = _row_per_doc(documents, bconf, metrics.observation)
+    if persist_inference:
+        per_doc = per_doc.persist()
+    results = per_doc.selectExpr(
+        "doc_id",
+        f"coalesce(round(median_conf * {SCORE_SCALE}, {SCORE_DP}), "
+        f"{DEFAULT_SCORE}D) AS score",
+        f"coalesce(first_error, {sql_str(STATE_PROCESSED)}) AS status",
+        "transform(lines, (s, i) -> struct(i AS `order`, s.kind AS kind, "
+        "s.text AS text, s.media_ref AS media_ref)) AS spans",
+    )
+    return ExtractResult(results, per_doc, metrics, persist_inference)
+
+
+def _row_per_doc(
+    documents: DataFrame, bconf: Broadcast, observation: Optional[Observation]
+) -> DataFrame:
+    """The row plan: each document's per-doc frame built in its own
+    row, with no exchange.  One scalar Arrow UDF infers the media spans
+    (only they cross to Python), then array functions merge the
+    normalized text spans with the confident, Arabic-fixed lines."""
+    infer = arrow_udf(make_infer_lines_fn(bconf), LINES_SCHEMA)
+    rows = documents.select("doc_id", "spans", infer(F.expr(
+        f"transform(filter(spans, s -> s.kind = {_MEDIA}), "
+        "s -> struct(s.offset AS offset, s.media_ref AS media_ref))"
+    )).alias("media"))
+    if observation is not None:
+        rows = rows.observe(observation, *map(F.expr, (
+            "coalesce(sum(size(filter(media, l -> l.error IS NULL "
+            "AND l.line_idx = 1))), 0) AS pages_decoded",
+            "coalesce(sum(size(filter(media, l -> l.error IS NULL))), 0)"
+            " AS lines_emitted",
+            "coalesce(sum(size(filter(media, l -> l.error IS NOT NULL))), 0)"
+            " AS decode_failures",
+        )))
+    # each stage reads the arrays the one before it built, so the
+    # whitespace regexp runs once per text span and the Arabic fix once
+    # per confident line; ``alto_lines`` stays its own column, which a
+    # results-only plan prunes
+    decoded = "filter(media, l -> l.error IS NULL)"
+    kept = f"filter({decoded}, l -> {confident('l.conf')})"
+    return rows.selectExpr(
+        "doc_id",
+        # a NULL spans array is a document without spans, as in the
+        # grouped plan, whose carrier row gives it an empty result
+        f"filter(transform(filter(coalesce(spans, array()), "
+        f"s -> s.kind = {_TEXT}), "
+        f"s -> struct(s.offset AS offset, 0 AS line_idx, {_TEXT} AS kind, "
+        f"{normalized_text('s.text')} AS text, "
+        "CAST(NULL AS STRING) AS media_ref)), s -> s.text != '') AS texts",
+        f"transform({kept}, l -> struct(l.offset AS offset, "
+        f"l.line_idx AS line_idx, {_MEDIA} AS kind, "
+        f"{fix_arabic('l.text')} AS text, l.media_ref AS media_ref)) AS kept",
+        f"array_sort(transform({kept}, l -> l.conf)) AS confs",
+        f"transform({decoded}, l -> struct(l.offset AS offset, "
+        f"l.line_idx AS line_idx, {_MEDIA} AS kind, l.text AS text, "
+        "l.media_ref AS media_ref, l.conf AS conf)) AS alto_lines",
+        "array_min(transform(filter(media, l -> l.error IS NOT NULL), "
+        "l -> struct(l.offset AS offset, l.error AS error))).error AS first_error",
+    ).selectExpr(
+        "doc_id",
+        "array_sort(concat(texts, kept)) AS lines",
+        "alto_lines",
+        # Spark's percentile at 0.5: the middle value, or the two
+        # middle ones interpolated (a value equals 0.5 v + 0.5 v)
+        "0.5D * get(confs, (size(confs) - 1) div 2) "
+        "+ 0.5D * get(confs, size(confs) div 2) AS median_conf",
+        "first_error",
+    )
+
+
+def _grouped_per_doc(
+    spark: SparkSession,
+    documents: DataFrame,
+    bconf: Broadcast,
+    salt_partitions: int,
+    observation: Optional[Observation],
+) -> DataFrame:
+    """The grouped plan: explode, infer the media rows after the salt
+    exchange, and rebuild each document in one doc_id shuffle."""
     spans = explode_spans(documents)
 
     # ---- text branch: pure codegen ----
@@ -228,20 +351,16 @@ def extract(
     # ---- media branch: salted repartition → Arrow-batched inference ----
     media_in = spans.where(f"kind = {_MEDIA}").selectExpr(
         "doc_id", "offset", "media_ref"
+    ).repartition(
+        min(salt_partitions, spark.sparkContext.defaultParallelism),
+        F.expr("xxhash64(media_ref)"),
     )
-    if salt_partitions:
-        media_in = media_in.repartition(
-            min(salt_partitions, spark.sparkContext.defaultParallelism),
-            F.expr("xxhash64(media_ref)"),
-        )
     inferred = media_in.mapInPandas(make_infer_fn(bconf), schema=INFER_SCHEMA)
-    metrics = ExtractMetrics()
-    if with_metrics:
+    if observation is not None:
         # a decoded page emits lines 1..L (L >= 1), a failed page one
         # error row; observed on the single inference node every
         # consumer below shares
-        metrics = ExtractMetrics(Observation())
-        inferred = inferred.observe(metrics.observation, *map(F.expr, (
+        inferred = inferred.observe(observation, *map(F.expr, (
             "count_if(error IS NULL AND line_idx = 1) AS pages_decoded",
             "count_if(error IS NULL) AS lines_emitted",
             "count_if(error IS NOT NULL) AS decode_failures",
@@ -262,7 +381,7 @@ def extract(
     # gives every input doc a result row, with or without spans.  A
     # text row travels once, in ``lines`` (every text row is kept) ----
     keep = f"kind IS NOT NULL AND (kind = {_TEXT} OR {confident('conf')})"
-    per_doc = text_branch.unionByName(
+    return text_branch.unionByName(
         media_branch, allowMissingColumns=True
     ).unionByName(
         documents.selectExpr("doc_id"), allowMissingColumns=True
@@ -275,14 +394,3 @@ def extract(
         f"percentile(CASE WHEN {keep} THEN conf END, 0.5D, 1) AS median_conf",
         "min_by(error, CASE WHEN error IS NOT NULL THEN offset END) AS first_error",
     )))
-    if persist_inference:
-        per_doc = per_doc.persist()
-    results = per_doc.selectExpr(
-        "doc_id",
-        f"coalesce(round(median_conf * {SCORE_SCALE}, {SCORE_DP}), "
-        f"{DEFAULT_SCORE}D) AS score",
-        f"coalesce(first_error, {sql_str(STATE_PROCESSED)}) AS status",
-        "transform(lines, (s, i) -> struct(i AS `order`, s.kind AS kind, "
-        "s.text AS text, s.media_ref AS media_ref)) AS spans",
-    )
-    return ExtractResult(results, per_doc, metrics, persist_inference)

@@ -306,8 +306,8 @@ def test_no_job_outlives_a_killed_run(spark, docs, tmp_path_factory):
     """A run killed by ``fail_after`` waits for the group write still in
     flight before it raises: no Spark job is active afterwards, the
     in-flight group's results have landed without a manifest, and every
-    job of the run ran in the caller's job group (two per written group
-    plus the staging write)."""
+    job of the run ran in the caller's job group (one per written group
+    plus the two of the staging write)."""
     ck = CheckpointedExtractor(str(tmp_path_factory.mktemp("ckkilled")), n_groups=4)
     sc = spark.sparkContext
     tracker = sc.statusTracker()
@@ -327,7 +327,7 @@ def test_no_job_outlives_a_killed_run(spark, docs, tmp_path_factory):
     assert not os.path.exists(ck._manifest_path(2))
     assert not os.path.exists(ck._group_path(3))
     assert set(tracker.getJobIdsForGroup()) <= ungrouped
-    assert len(tracker.getJobIdsForGroup(tag)) >= 2 * 3 + 1
+    assert len(tracker.getJobIdsForGroup(tag)) >= 3 + 2
 
 
 def test_planner_failure_raises_after_earlier_commits(
@@ -380,7 +380,8 @@ def test_extract_build_runs_no_spark_job(spark, docs, tmp_path):
 def test_checkpoint_group_runs_at_most_four_jobs(spark, docs, tmp_path_factory):
     """Spark jobs per checkpoint group: the slope between uninterrupted
     runs with 2 and 6 groups over the same input, whose staging jobs
-    are common to both."""
+    are common to both.  A group's unsalted extract has no exchange, so
+    its one write is its one job."""
     base = tmp_path_factory.mktemp("ckjobs")
     src = str(base / "input.parquet")
     docs.write.parquet(src)
@@ -397,7 +398,7 @@ def test_checkpoint_group_runs_at_most_four_jobs(spark, docs, tmp_path_factory):
             sc.setLocalProperty("spark.jobGroup.id", None)
         return len(sc.statusTracker().getJobIdsForGroup(tag))
 
-    assert (jobs(6) - jobs(2)) / 4 <= 4
+    assert (jobs(6) - jobs(2)) / 4 <= 1
 
 
 def test_remaining_docs_left_anti(spark, docs, tmp_path_factory):

@@ -178,16 +178,20 @@ def test_serialize_alto_dual_semantics(result):
 def test_accumulator_metrics_exact(spark, sf_smoke):
     """A9 (north_star): the observed pages_decoded / lines_emitted /
     decode_failures must equal the oracle's ground truth exactly, also
-    when observed from below a persist shared by two actions."""
+    when observed from below a persist shared by two actions, on the
+    row plan (no salt) and on the grouped one."""
     from pero_ocr_api_spark.operators.inference import stub_infer_one
     from pero_ocr_api_spark.plans.pipeline import explode_spans
 
     docs = interleaved_documents(spark, sf_smoke)
-    res = extract(spark, docs, salt_partitions=16, persist_inference=True)
-    res.spans.count()
-    res.docs.count()
-    got = res.metrics.as_dict()
-    res.unpersist()
+    got = {}
+    for salt_partitions in (None, 16):
+        res = extract(spark, docs, salt_partitions=salt_partitions,
+                      persist_inference=True)
+        res.spans.count()
+        res.docs.count()
+        got[salt_partitions] = res.metrics.as_dict()
+        res.unpersist()
 
     media_refs = [
         r.media_ref
@@ -202,11 +206,12 @@ def test_accumulator_metrics_exact(spark, sf_smoke):
         else:
             exp_lines += len(lines)
     exp_pages = len(media_refs) - exp_failures   # decoded = attempted - failed
-    assert got == {
+    exp = {
         "pages_decoded": exp_pages,
         "lines_emitted": exp_lines,
         "decode_failures": exp_failures,
     }
+    assert got == {None: exp, 16: exp}
 
 
 def test_heavy_doc_salting_bounds_skew(spark):
@@ -539,17 +544,20 @@ def test_sql_str_round_trips_through_expr(spark):
 
 
 def test_infer_fn_infers_each_distinct_ref_once(monkeypatch):
-    """make_infer_fn hands each distinct media_ref of an Arrow batch to
-    the engine once (a NULL ref once, as None) and expands the results
-    to exactly the rows the per-row expansion gives, in input order."""
+    """Both inference wrappers hand each distinct media_ref of an Arrow
+    batch to the engine once (a NULL ref once, as None) and expand the
+    results to exactly the rows the per-row expansion gives, in input
+    order: make_infer_fn one row per line, make_infer_lines_fn one list
+    of lines per document, empty for a NULL or empty media list."""
     import types
 
     import pandas as pd
+    import pyarrow as pa
 
     from pero_ocr_api_spark.constants import STATE_NOT_FOUND
     from pero_ocr_api_spark.operators import inference
     from pero_ocr_api_spark.operators.inference import (
-        _StubEngine, make_infer_fn, stub_infer_one,
+        _StubEngine, make_infer_fn, make_infer_lines_fn, stub_infer_one,
     )
 
     def infer_one(ref):
@@ -596,6 +604,31 @@ def test_infer_fn_infers_each_distinct_ref_once(monkeypatch):
     assert [str(t) for t in got.dtypes] == [
         "object", "int32", "object", "int32", "object", "float64", "object"]
 
+    # the same spans as one media list per document, with a NULL and an
+    # empty list between them
+    doc_ids = ["d0", "d1", "d2"]
+    by_doc = [
+        [{"offset": o, "media_ref": r}
+         for d, o, r in zip(pdf["doc_id"], pdf["offset"], refs) if d == doc]
+        for doc in doc_ids
+    ]
+    span_type = pa.struct([("offset", pa.int32()), ("media_ref", pa.string())])
+    media = pa.array(by_doc[:2] + [None] + by_doc[2:] + [[]],
+                     pa.list_(span_type))
+    engine.seen = []
+    infer_lines = make_infer_lines_fn(types.SimpleNamespace(value={}))
+    lines = infer_lines(media).to_pylist()
+
+    assert engine.seen == list(dict.fromkeys(
+        s["media_ref"] for spans in by_doc for s in spans))
+    assert engine.seen.count(None) == 1
+    fields = ("offset", "media_ref", "line_idx", "text", "conf", "error")
+    exp_lines = [
+        [dict(zip(fields, row[1:])) for row in exp if row[0] == doc]
+        for doc in doc_ids
+    ]
+    assert lines == exp_lines[:2] + [[]] + exp_lines[2:] + [[]]
+
 
 def test_null_media_ref_is_not_found(spark):
     """A media span with a NULL media_ref names no page, so its fetch
@@ -629,6 +662,28 @@ def test_null_media_ref_is_not_found(spark):
             "lines_emitted": len(stub_infer_one(page)[1]),
             "decode_failures": 1,
         }
+
+
+def test_documents_without_spans(spark):
+    """A document whose spans are NULL or empty gets a result row with
+    no spans, the default score and PROCESSED, on both plans."""
+    from pero_ocr_api_spark.plans.pipeline import DOCUMENTS_SCHEMA
+
+    exp_spans, exp_score, exp_status = oracle.extract_spans([])
+    docs = spark.createDataFrame(
+        [("doc-null", None), ("doc-empty", [])], DOCUMENTS_SCHEMA)
+    for salt_partitions in (None, 4):
+        res = extract(spark, docs, salt_partitions=salt_partitions)
+        got = sorted(
+            (r.doc_id, [tuple(s) for s in r.spans], r.score, r.status)
+            for r in res.results.collect()
+        )
+        assert got == [
+            (d, exp_spans, exp_score, exp_status)
+            for d in ("doc-empty", "doc-null")
+        ], salt_partitions
+        assert res.metrics.as_dict() == dict.fromkeys(
+            ("pages_decoded", "lines_emitted", "decode_failures"), 0)
 
 
 def test_hot_ref_wall_time_bounded(spark):
@@ -694,19 +749,44 @@ def test_partitioning_independence(spark, sf_smoke):
     assert run(64) == base
 
 
-def test_docs_plan_prunes_window(spark, sf_smoke):
-    """The per-doc score action must not pay a reading-order window:
-    reading order, score and status come from one per-doc aggregate
-    with a map-side-combined percentile (PLANS.md §1)."""
-    from pero_ocr_api_spark.plans.pipeline import extract
-    from pero_ocr_api_spark.synth import interleaved_documents
+def test_docs_plan_prunes_window(spark, sf_smoke, tmp_path):
+    """The per-doc score action must not pay a reading-order window.
+    The row plan (no salt) builds each document in its own row, with
+    no exchange; the grouped plan gets reading order, score and status
+    from one per-doc aggregate with a map-side-combined percentile
+    (PLANS.md §1).  The input is read from parquet, so any exchange in
+    the plan is the extract's own."""
+    src = str(tmp_path / "docs")
+    interleaved_documents(spark, sf_smoke).write.parquet(src)
+    docs = spark.read.parquet(src)
 
-    res = extract(
-        spark, interleaved_documents(spark, sf_smoke), persist_inference=False
-    )
+    res = extract(spark, docs, persist_inference=False)
+    plan = res.docs._jdf.queryExecution().executedPlan().toString()
+    assert "Window" not in plan, plan
+    assert "Exchange" not in plan, plan
+
+    res = extract(spark, docs, persist_inference=False, salt_partitions=4)
     plan = res.docs._jdf.queryExecution().executedPlan().toString()
     assert "Window" not in plan, plan
     assert "partial_percentile" in plan, plan
+
+
+def test_row_plan_normalizes_each_span_once(spark, sf_smoke):
+    """The row plan evaluates the whitespace regexp once per text span
+    and the Arabic fix once per confident line, however many outputs
+    read them (the regexp and the fix's mark-reattach pattern each
+    appear once in the optimized plan), and a plan that reads only the
+    results prunes the ALTO lines."""
+    from pero_ocr_api_spark.constants import WS_CLASS
+    from pero_ocr_api_spark.operators.normalize import _BASE_CLASS
+
+    res = extract(spark, interleaved_documents(spark, sf_smoke))
+    results = res.results._jdf.queryExecution().optimizedPlan().toString()
+    for pattern in (WS_CLASS + "+", f"({_BASE_CLASS})"):
+        assert results.count(pattern) == 1, (pattern, results)
+    assert "alto_lines" not in results, results
+    per_doc = res.per_doc._jdf.queryExecution().optimizedPlan().toString()
+    assert "alto_lines" in per_doc, per_doc
 
 
 def test_region_segmentation_gap_and_kind_boundaries(spark):
@@ -821,19 +901,15 @@ def test_device_overlaps_host_work():
     s = pd.Series(refs)
     target_s = 0.3
 
-    def best_wall(engine):
-        best = float("inf")
-        for _ in range(3):
-            t0 = time.monotonic()
-            engine.infer_batch(s)
-            best = min(best, time.monotonic() - t0)
-        return best
+    def wall(engine):
+        t0 = time.monotonic()
+        engine.infer_batch(s)
+        return time.monotonic() - t0
 
     # size work_iters so the batch's host work takes ~target_s
     probe = _StubEngine({"work_iters": 20000})
-    per_iter_s = best_wall(probe) / (len(refs) * 20000)
+    per_iter_s = min(wall(probe) for _ in range(3)) / (len(refs) * 20000)
     work_iters = max(1, int(target_s / len(refs) / per_iter_s))
-    host_s = best_wall(_StubEngine({"work_iters": work_iters}))
 
     # size work_sleep_ms so the batch's device calls sum to ~target_s
     cfg = {"work_iters": work_iters, "batch_pages": 4}
@@ -844,20 +920,38 @@ def test_device_overlaps_host_work():
     engine = _StubEngine({**cfg, "work_sleep_ms": 1000.0 * target_s / unit_ms})
     device_s = sum(engine._device_call_ms(c) for c in plan) / 1000.0
 
-    intervals = []
-    device_call = engine._device_call
+    intervals, burns = [], []
+    device_call, burn = engine._device_call, engine._burn
 
     def recording(call):
         t0 = time.monotonic()
         device_call(call)
         intervals.append((t0, time.monotonic(), call))
 
-    engine._device_call = recording
+    def recording_burn(ref):
+        burns.append((time.monotonic(), ref))
+        burn(ref)
+
+    engine._device_call, engine._burn = recording, recording_burn
+    host_only = _StubEngine({"work_iters": work_iters})
     threads_before = threading.active_count()
-    best = best_wall(engine)
-    assert best < 0.8 * (host_s + device_s), (best, host_s, device_s)
+    # host-only and overlapped walls interleaved (ABAB), so drift between
+    # them hits both; the best pair is held to the bound
+    pairs = [(wall(host_only), wall(engine)) for _ in range(3)]
+    assert any(
+        both < 0.8 * (host + device_s) for host, both in pairs
+    ), (pairs, device_s)
     # serial, in plan order, and no device thread outlives its batch
     assert [c for _, _, c in intervals] == plan * 3
+    # the overlap itself: in every batch, the host work of call k+1
+    # starts before call k leaves the device
+    n = len(plan)
+    for run in range(3):
+        started = {ref: t for t, ref in burns[run * len(refs):(run + 1) * len(refs)]}
+        calls = intervals[run * n:(run + 1) * n]
+        assert all(
+            started[nxt[2][0]] < prev[1] for prev, nxt in zip(calls, calls[1:])
+        ), (run, calls, started)
     assert all(
         prev[1] <= nxt[0] for prev, nxt in zip(intervals, intervals[1:])
     )
